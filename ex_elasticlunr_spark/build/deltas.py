@@ -30,29 +30,33 @@ point model re-expressed over parquet:
   without touching a byte of payload.
 * ``bind_generations`` (called by ``InvertedIndex._rebind_from``)
   presents the union of generations as one index: postings/positions/
-  segments union with shifted ords, tombstoned docids anti-joined out
-  (gen K's tombstones kill docs of generations < K only, so an update =
+  segments union with shifted ords, tombstoned docs filtered out (gen
+  K's tombstones kill docs of generations < K only, so an update =
   tombstone + re-add in the same generation survives), term df partials
   summed (each live doc lives in exactly one generation), field stats
   from manifest integer arithmetic. Pushed term predicates prune each
   generation's scan exactly as on a single-generation index.
 * Stats under tombstones are EXACT, doc-level and term-level alike:
-  ``bind_generations`` subtracts each tombstoned doc's own postings
-  back out of the summed df partials (see the merged-statistics block
-  below, and the randomized maintenance referee that pins it). The
-  correction is lazy — a query's In(term) predicate pushes through the
-  join so its cost is bounded by the query terms' postings; only
-  full-vocabulary consumers (field_stats, compact) pay one
-  tombstone-semi-joined postings pass per bind. ``compact()`` = a full
+  each tombstoned doc's own postings are subtracted back out of the
+  summed df partials (pinned by the randomized maintenance referee). A
+  query pays this only for its own terms (``search/scorer.py
+  _vocab_lookup``: one pushed In(term) job per binding and term set);
+  only full-vocabulary consumers (field_stats, facets, compact) pay one
+  tombstone-filtered postings pass per bind. ``compact()`` = a full
   ``save`` back to the base, which folds tombstones away physically
   and re-clusters everything (its value is scan pruning and bounded
   generation count, not stats correctness).
 
 Scale shape: a delta save touches ONLY the new rows (the usual map-only
 ingest + one clustering shuffle over the batch) plus a tombstone-sized
-stats job; query-time overhead per extra generation is one more pruned
-parquet scan in the union + a broadcast anti-join when tombstones
-exist — which is why compact() exists for when generations accumulate.
+stats job. A bind resolves the tombstones once, on the driver (one
+pushed In(docid) collect over the ordinals), and holds them as literal
+predicates, so a query on a generational reader runs the same plan
+shape and Spark job count as on a single-generation reader; each extra
+generation adds one more pruned parquet scan to the per-table unions,
+which is why compact() exists for when generations accumulate. The
+driver-held tombstone set is bounded by TOMB_LOCAL_CAP: a save_delta
+that would cross it runs compact() instead of appending a generation.
 
 Concurrency model: SINGLE WRITER, many readers — the same contract as
 Lucene's write.lock. ``save_delta`` AND ``compact()``/``save()`` are
@@ -73,11 +77,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.literals import inline_rows
+from ..functions.literals import in_expr, inline_rows
 
 DELTAS_DIR = "deltas"
 
@@ -94,6 +99,9 @@ DELTAS_DIR = "deltas"
 # lifetimes. Replayed batches older than the cap are additionally
 # backstopped by add_documents' first-write-wins docid anti-join.
 MERGED_TAGS_KEEP = 256
+# bound on the tombstoned docids a generational reader holds on the
+# driver (bind_generations); save_delta compacts instead of crossing it
+TOMB_LOCAL_CAP = 1 << 20
 
 
 def cap_merged_tags(tags: list) -> list:
@@ -143,7 +151,8 @@ def save_delta(inv, tag: Optional[str] = None) -> str:
     generation. ``tag`` is recorded on each new manifest entry — sinks
     replaying a micro-batch use it to skip an already-committed batch
     (streaming/ingest.py stream_to_index). Returns the last generation
-    directory written."""
+    directory written ("" when the commit compacted instead: the
+    warehouse's tombstones would have crossed TOMB_LOCAL_CAP)."""
     path = inv._path
     if not path:
         raise ValueError(
@@ -159,7 +168,7 @@ def save_delta(inv, tag: Optional[str] = None) -> str:
         raise ValueError("delta saves need a version-5 base warehouse")
     # backfill the PREVIOUS commit's history twin before mutating the
     # manifest (heals a crash between its root replace and history copy)
-    from .indexer import _write_history
+    from .indexer import _write_history, read_table
 
     _write_history(path, manifest)
     block_size = int(manifest.get("block_size", 4096))
@@ -196,10 +205,17 @@ def save_delta(inv, tag: Optional[str] = None) -> str:
             tomb_df.write.mode("overwrite").parquet(
                 os.path.join(gen_dir, "tombstones"))
             entry["tombstones"] = True
+            if sum(len(_tomb_docids(path, g))
+                   for g in gens + [entry]) > TOMB_LOCAL_CAP:
+                # past the driver-held bound readers rely on: fold it
+                # all (pending ops included) into a new base instead
+                shutil.rmtree(gen_dir, ignore_errors=True)
+                inv.compact(_tag=tag)
+                return ""
             # per-field live-stats decrements vs the PRE-PENDING durable
             # state (tombstone-sized output; broadcast hash join)
-            committed = spark.read.parquet(
-                os.path.join(gen_dir, "tombstones"))
+            committed = read_table(
+                spark, os.path.join(gen_dir, "tombstones"))
             entry["tomb_field_stats"] = _tomb_field_stats(
                 inv._delta_base.doc_stats, committed)
         if sub is not None:
@@ -248,10 +264,10 @@ def _ord_high_water(spark, path: str, manifest: dict, gens: list) -> int:
         return int(gens[-1]["ord_base"]) + int(gens[-1]["max_ord"])
     prev_max = manifest.get("max_ord")
     if prev_max is None:  # legacy base manifest: one tiny agg
-        from .indexer import tables_dir
+        from .indexer import read_table, tables_dir
 
-        prev_max = (spark.read.parquet(
-            os.path.join(tables_dir(path, manifest), "ordinals"))
+        prev_max = (read_table(
+            spark, os.path.join(tables_dir(path, manifest), "ordinals"))
             .agg(F.max("ord").alias("m")).first()["m"]) or 0
     return int(prev_max)
 
@@ -323,7 +339,8 @@ def compact_tiered(inv, tail: Optional[int] = None,
     if len(gens) < 2:
         return ""  # nothing worth folding
 
-    from .indexer import InvertedIndex, _gc_stale_artifacts, _write_history
+    from .indexer import (
+        InvertedIndex, _gc_stale_artifacts, _write_history, read_table)
 
     # ---- pick the fold: a contiguous newest suffix --------------------
     if tail is not None:
@@ -390,8 +407,8 @@ def compact_tiered(inv, tail: Optional[int] = None,
     for e in suffix:
         if not e.get("tombstones"):
             continue
-        t = spark.read.parquet(
-            os.path.join(path, DELTAS_DIR, e["name"], "tombstones"))
+        t = read_table(
+            spark, os.path.join(path, DELTAS_DIR, e["name"], "tombstones"))
         carried = t if carried is None else carried.unionByName(t)
     if carried is not None:
         carried = carried.distinct()
@@ -420,7 +437,7 @@ def compact_tiered(inv, tail: Optional[int] = None,
         carried.write.mode("overwrite").parquet(
             os.path.join(gen_dir, "tombstones"))
         entry["tombstones"] = True
-        committed = spark.read.parquet(os.path.join(gen_dir, "tombstones"))
+        committed = read_table(spark, os.path.join(gen_dir, "tombstones"))
         # decrements vs the PRE-FOLD state (base + kept generations,
         # with THEIR tombstones applied): a doc a kept generation
         # already killed must not be decremented twice — bind the
@@ -459,12 +476,38 @@ def _union_all(dfs):
     return out
 
 
+def _tomb_docids(path: str, entry: dict) -> list:
+    """The docids generation ``entry`` tombstones, read on the driver
+    (pyarrow over the parquet files: no Spark job)."""
+    if not entry.get("tombstones"):
+        return []
+    import pyarrow.parquet as pq
+
+    col = pq.read_table(
+        os.path.join(path, DELTAS_DIR, entry["name"], "tombstones"),
+        columns=["docid"], use_threads=False).column(0)
+    return [d for d in col.to_pylist() if d is not None]
+
+
 def bind_generations(inv, spark, path: str, manifest: dict) -> None:
-    """Rebind ``inv`` (whose base tables are already bound) as the lazy
-    union of base + generations, with ordinal shifts, tombstone
-    filtering, and merged statistics. Metadata-only: no Spark job runs
-    here (field_stats' one vocabulary-count job is deferred to first
-    access via ``_fs_thunk``)."""
+    """Rebind ``inv`` (whose base tables are already bound) as the union
+    of base + generations, with ordinal shifts, tombstones and merged
+    statistics.
+
+    Cost model: the bind reads the tombstoned docids on the driver and
+    runs ONE Spark job (the tables' schemas come from their parquet
+    footers, ``indexer.read_table``): a pushed ``In(docid)`` collect
+    over the ordinals of the parts they can reach (none without
+    tombstones). Both sets stay on the driver for the life of the binding (at most
+    TOMB_LOCAL_CAP docids: ``save_delta`` compacts rather than commit
+    past it) and reach every plan as literal predicates. Nothing is
+    persisted. A query therefore has a single-generation reader's plan
+    shape and job count; each extra generation adds one pruned parquet
+    scan per union. Query-term df/idf is summed per binding by
+    ``search/scorer.py _vocab_lookup`` from the raw partials bound in
+    ``_stats_parts``; the lazy merged ``term_stats`` serves the
+    vocabulary-wide consumers, and field_stats' vocabulary count is
+    deferred to first access via ``_fs_thunk``."""
     entries = manifest["generations"]
     block_size = int(manifest.get("block_size", 4096))
 
@@ -485,8 +528,8 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
         segments=inv._segments[1] if inv._segments is not None else None,
         seg_lens=inv._seg_lens,
     )]
-    tomb_dfs: list = [None]
-    from .indexer import tables_dir
+    tombs: list = [[]]
+    from .indexer import read_table, tables_dir
 
     for e in entries:
         gd = os.path.join(path, DELTAS_DIR, e["name"])
@@ -498,25 +541,23 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
             gt = tables_dir(gd, _read_manifest(gd))
         except FileNotFoundError:
             gt = gd
-        tomb_dfs.append(
-            spark.read.parquet(os.path.join(gd, "tombstones"))
-            if e.get("tombstones") else None)
+        tombs.append(_tomb_docids(path, e))
         if not e.get("has_adds"):
             parts.append(None)
             continue
         base = int(e["ord_base"])
-        post = _tf(_shift(spark.read.parquet(os.path.join(gt, "postings")),
+        post = _tf(_shift(read_table(spark, os.path.join(gt, "postings")),
                           base))
         pos = post
         if os.path.exists(os.path.join(gt, "positions")):
             pos = _tf(_shift(
-                spark.read.parquet(os.path.join(gt, "positions")), base))
+                read_table(spark, os.path.join(gt, "positions")), base))
         seg = None
         if os.path.exists(os.path.join(gt, "segments")):
             # block-aligned ord_base: the payload decodes relative to
             # block_id * block_size, so shifting block_id re-bases the
             # whole block without touching the compressed bytes
-            seg = (spark.read.parquet(os.path.join(gt, "segments"))
+            seg = (read_table(spark, os.path.join(gt, "segments"))
                    .withColumn("block_id",
                                F.col("block_id") + F.lit(base // block_size))
                    .withColumn("min_ord", F.col("min_ord") + F.lit(base))
@@ -524,112 +565,82 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
         lens = None
         if os.path.exists(os.path.join(gt, "seg_lens")):
             # same block-aligned re-base as the posting segments
-            lens = (spark.read.parquet(os.path.join(gt, "seg_lens"))
+            lens = (read_table(spark, os.path.join(gt, "seg_lens"))
                     .withColumn("block_id",
                                 F.col("block_id") + F.lit(base // block_size)))
         parts.append(dict(
             postings=post, positions=pos,
             ordinals=_shift(
-                spark.read.parquet(os.path.join(gt, "ordinals")), base),
-            doc_stats=spark.read.parquet(os.path.join(gt, "doc_stats"))
+                read_table(spark, os.path.join(gt, "ordinals")), base),
+            doc_stats=read_table(spark, os.path.join(gt, "doc_stats"))
             .select("field", "docid", "doc_len"),
-            docs=spark.read.parquet(os.path.join(gt, "docs")),
-            term_stats=spark.read.parquet(os.path.join(gt, "term_stats"))
+            docs=read_table(spark, os.path.join(gt, "docs")),
+            term_stats=read_table(spark, os.path.join(gt, "term_stats"))
             .select("field", "term", "df"),
             segments=seg,
             seg_lens=lens,
         ))
 
-    # ---- tombstone application ----------------------------------------
+    # ---- tombstones, resolved once on the driver ----------------------
     # generation K's tombstones kill docs of parts < K only: a doc
     # tombstoned and re-added in the same generation (update) survives
-    # suffix unions built ONCE, shared across parts: a per-part
-    # union-of-later-tombstones would rebuild an O(G^2)-node bind plan
-    # (G parts x up-to-G-way unions); the shared right fold gives each
-    # part the same relation from G-1 total union nodes
-    later_suffix: list = [None] * len(parts)
-    _acc = None
+    later: list = []
+    acc: set = set()
     for k in range(len(parts) - 1, -1, -1):
-        later_suffix[k] = _acc
-        if tomb_dfs[k] is not None:
-            _acc = (tomb_dfs[k] if _acc is None
-                    else _acc.unionByName(tomb_dfs[k]))
+        later.append(sorted(acc))
+        acc.update(tombs[k])
+    later.reverse()
+    probes = [p["ordinals"].where(in_expr("docid", later[k])).select("ord")
+              for k, p in enumerate(parts) if p is not None and later[k]]
+    dead = sorted({r["ord"] for r in _union_all(probes).collect()}
+                  if probes else ())
 
     live = []
-    tomb_ord_parts = []
     for k, p in enumerate(parts):
         if p is None:
             continue
-        lt = later_suffix[k]
-        if lt is not None:
-            lt = lt.distinct()
-        if lt is not None:
-            p = dict(p)
-            tomb_ord_parts.append(
-                p["ordinals"].join(F.broadcast(lt), "docid").select("ord"))
-            for key in ("docs", "doc_stats", "ordinals"):
-                p[key] = p[key].join(F.broadcast(lt), "docid", "left_anti")
+        if later[k]:
+            gone = ~in_expr("docid", later[k])
+            p = {**p, "docs": p["docs"].where(gone),
+                 "doc_stats": p["doc_stats"].where(gone)}
         live.append(p)
-
-    tomb_ords = None
-    if tomb_ord_parts:
-        # persist, not localCheckpoint: checkpoint blocks are
-        # unrecoverable on executor loss (a decommissioned node would
-        # fail every later query on the bound index, where persist
-        # recomputes from lineage) and eager=True would run Spark jobs
-        # inside this metadata-only bind. The cache-block lifecycle is
-        # explicit instead: InvertedIndex.unpersist and _rebind_from
-        # unpersist the old tomb_ords, so long-lived sessions that
-        # rebind many tombstone-bearing warehouses don't accrete blocks
-        tomb_ords = _union_all(tomb_ord_parts).persist()
-
-    def _anti_ord(df):
-        if tomb_ords is None:
-            return df
-        return df.join(F.broadcast(tomb_ords), "ord", "left_anti")
 
     def _union(key):
         return _union_all([p[key] for p in live])
 
-    inv.postings = _anti_ord(_union("postings"))
-    inv.postings_full = _anti_ord(_union("positions"))
-    inv._ordinals = _union("ordinals")
+    def _alive(df):
+        return df.where(~in_expr("ord", dead)) if dead else df
+
+    raw_postings = _union("postings")
+    inv.postings = _alive(raw_postings)
+    inv.postings_full = _alive(_union("positions"))
+    inv._ordinals = _alive(_union("ordinals"))
     # the durable base-gen ordinals_extra no longer covers the merged
     # docs universe — recompute lazily on demand
     inv._ordinals_all = None
     inv.doc_stats = _union("doc_stats")
     inv.docs = _union("docs")
-    inv._tomb_ords = tomb_ords
+    inv._dead_ords = frozenset(dead)
+    inv._stats_parts = (_union("term_stats"), raw_postings)
 
-    # ---- merged statistics --------------------------------------------
-    # df partials are additive (each live doc lives in exactly one
-    # generation); under tombstones the partial sum over-counts, so the
-    # tombstoned docs' own postings are subtracted back out — EXACT df,
-    # matching the reference's full recalculate_idf after every remove
+    # ---- merged statistics (vocabulary-wide consumers) ----------------
+    # the sum _vocab_lookup takes for query terms, over the whole
+    # vocabulary: the df partials (each live doc lives in exactly one
+    # generation) less one per tombstoned posting — EXACT df, matching
+    # the reference's full recalculate_idf after every remove
     # (field.ex:321-349; pinned by the randomized maintenance referee,
     # tests/test_random_maintenance.py::test_random_maintenance_with_
-    # persistence). The correction is LAZY: a query's In(term) filter on
-    # term_stats pushes through the join into this postings scan, so the
-    # per-query cost is bounded by the query terms' postings; only
-    # full-vocabulary consumers (field_stats' n_unique_terms, compact)
-    # pay one tombstone-semi-joined postings pass per bind.
-    ts_sum = (_union("term_stats").groupBy("field", "term")
-              .agg(F.sum("df").alias("df")))
-    if tomb_ords is not None:
-        tomb_tdf = (_union("postings")
-                    .select("field", "term", "ord")
-                    .join(F.broadcast(tomb_ords), "ord", "left_semi")
-                    .groupBy("field", "term")
-                    .agg(F.count(F.lit(1)).alias("tdf")))
-        ts_sum = (
-            ts_sum.join(tomb_tdf, ["field", "term"], "left")
-            .withColumn(
-                "df", F.col("df") - F.coalesce(F.col("tdf"), F.lit(0)))
-            .drop("tdf")
-            # a term whose every posting is tombstoned leaves the
-            # vocabulary (df=0), exactly as a rebuild would drop it —
-            # this also keeps _fs_thunk's n_unique_terms/flnorm exact
-            .where(F.col("df") > 0))
+    # persistence). A term whose every posting is tombstoned leaves the
+    # vocabulary (df=0), as after a rebuild; that keeps _fs_thunk's
+    # n_unique_terms/flnorm exact. Query terms never read this plan;
+    # field_stats, facets, suggest and compaction do.
+    rows = inv._stats_parts[0]
+    if dead:
+        rows = rows.unionByName(
+            raw_postings.where(in_expr("ord", dead)).select(
+                "field", "term", F.lit(-1).cast("long").alias("df")))
+    ts_sum = (rows.groupBy("field", "term").agg(F.sum("df").alias("df"))
+              .where(F.col("df") > 0))
 
     counts = _merged_field_counts(manifest)
     if counts is not None:
@@ -687,7 +698,7 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
     else:
         # fall back to segments() — its streaming path still works: the
         # union preserves each generation's block-clustered partitions
-        # (broadcast anti-joins and the ord shift are map-side)
+        # (the literal tombstone filter and the ord shift are map-side)
         inv._segments = None
         inv._seg_lens = None
 

@@ -74,6 +74,43 @@ def tables_dir(path: str, manifest: dict) -> str:
     return os.path.join(path, snap) if snap else path
 
 
+# parquet footer key under which Spark's writer stores the Spark schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job.
+
+    Spark infers a parquet table's schema from one data file's footer,
+    in a Spark job, and takes the Spark schema its own writer stored
+    there when present. This reads that same footer entry on the driver
+    (pyarrow) and hands it over as the read schema, so binding a table
+    runs no job. Tables without the entry (other writers), non-local
+    paths and ``spark.sql.parquet.mergeSchema=true`` keep inference."""
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    if (not os.path.isdir(path) or spark.conf.get(
+            "spark.sql.parquet.mergeSchema", "false").lower() == "true"):
+        return None
+    files = sorted(n for n in os.listdir(path)
+                   if n.endswith(".parquet") and not n.startswith(("_", ".")))
+    if not files:
+        return None
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    try:
+        meta = pq.read_schema(os.path.join(path, files[0])).metadata or {}
+    except (OSError, ValueError):  # unreadable footer: let Spark report it
+        return None
+    raw = meta.get(_SPARK_SCHEMA_KEY)
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
 def table_path(path: str, name: str) -> str:
     """Resolve table ``name`` under warehouse ``path`` through the
     committed manifest (tests/tools convenience — library code resolves
@@ -299,8 +336,11 @@ class InvertedIndex:
         self._delta_base = None  # the loaded InvertedIndex under pending ops
         self._delta_adds: list = []  # pending fresh sub-indexes (in order)
         self._delta_tombs = None  # pending removal docids (DataFrame)
-        self._tomb_ords = None  # live tombstoned ords on a multi-gen load
-        self._tomb_local_cache = None  # wand's collected-set memo
+        # multi-gen load (build/deltas.py bind_generations): the
+        # driver-held tombstoned ords, and the raw per-generation
+        # (term_stats, postings) unions the query-term df lookup sums
+        self._dead_ords: frozenset = frozenset()
+        self._stats_parts = None
         # persisted internals this index's retained lazy plans depend on
         # (assign_doc_ordinals' range-partitioned docs) — released in
         # unpersist()/_rebind_from, NOT earlier: a dependent plan that
@@ -507,8 +547,7 @@ class InvertedIndex:
         # _field_stats directly: unpersisting must not trigger the lazy
         # multi-generation field-stats job just to unpersist its result
         for df in (self.postings, self.doc_stats, self._field_stats,
-                   self.term_stats, self.docs, self._seg_lens,
-                   self._tomb_ords):
+                   self.term_stats, self.docs, self._seg_lens):
             if df is not None:
                 df.unpersist()
         if self._segments is not None:
@@ -707,7 +746,7 @@ class InvertedIndex:
         )
         t1 = _time.perf_counter()
         _cpu1 = _busy_jiffies()
-        raw = spark.read.parquet(_sp("flat"))
+        raw = read_table(spark, _sp("flat"))
 
         # ---- phase 2 (overlapped): doc_stats (sentinel filter of flat)
         # ∥ the docid->ordinal table — both docid-sized. With ingest
@@ -737,7 +776,7 @@ class InvertedIndex:
                      .groupBy("docid").agg(F.first("ord").alias("ord"))
                      .persist())
             else:
-                docs = spark.read.parquet(_sp("docs"))
+                docs = read_table(spark, _sp("docs"))
                 o = assign_doc_ordinals(docs).persist()
             # three independent consumers of the persisted ``o`` — the
             # range-clustered write, the zero-content-extras chain, and
@@ -763,7 +802,7 @@ class InvertedIndex:
                 # union instead of re-running this anti-join +
                 # range-partitioned assignment inside every universe
                 # query plan
-                extras = spark.read.parquet(_sp("docs")) \
+                extras = read_table(spark, _sp("docs")) \
                     .join(o, "docid", "left_anti")
                 ex_raw = assign_doc_ordinals(extras)
                 ex_raw.select(
@@ -879,7 +918,7 @@ class InvertedIndex:
         t2 = _time.perf_counter()
         _cpu2 = _busy_jiffies()
         ordinals = ordinals_box[0]
-        doc_stats = spark.read.parquet(_sp("doc_stats"))
+        doc_stats = read_table(spark, _sp("doc_stats"))
         narrow_cols = ["field", "term", "ord", "tf_raw", "doc_len"]
         if self.store_positions:
             # stats + segments read the positions parquet's NARROW
@@ -891,7 +930,7 @@ class InvertedIndex:
             # WITHIN-PARTITION re-sort (local, no shuffle) restores
             # tight per-row-group term ranges for the pushed In(term)
             # pruning the query path relies on.
-            postings = spark.read.parquet(_sp("positions")) \
+            postings = read_table(spark, _sp("positions")) \
                 .select(*narrow_cols)
 
             def _w_postings_proj():
@@ -902,7 +941,7 @@ class InvertedIndex:
 
             proj_thunks = [_w_postings_proj]
         else:
-            postings = spark.read.parquet(_sp("postings"))
+            postings = read_table(spark, _sp("postings"))
             proj_thunks = []
 
         # ---- phase 4 (overlapped): stats ∥ segments — both read the
@@ -985,12 +1024,12 @@ class InvertedIndex:
                 .write.mode("overwrite").parquet(_sp("segments"))
             from .segments import build_len_blocks
 
-            ds = spark.read.parquet(_sp("doc_stats"))
+            ds = read_table(spark, _sp("doc_stats"))
             # builds without ingest ordinals (e.g. checkpoint-resumed
             # flats) write doc_stats without an ord column — translate
             # through the just-written durable ordinal table instead
             lens_ords = (None if "ord" in ds.columns
-                         else spark.read.parquet(_sp("ordinals")))
+                         else read_table(spark, _sp("ordinals")))
             build_len_blocks(ds, lens_ords, block_size) \
                 .write.mode("overwrite").parquet(_sp("seg_lens"))
             stage_secs["segments_write_sec"] = _time.perf_counter() - s0
@@ -1118,18 +1157,8 @@ class InvertedIndex:
         self._delta_adds = []
         self._delta_tombs = None
         self._fs_thunk = None
-        if self._tomb_ords is not None:
-            # the previous binding's persisted tombstone ords — drop the
-            # cache blocks before rebinding replaces the reference
-            self._tomb_ords.unpersist()
-        self._tomb_ords = None
-        self._tomb_local_cache = None
-        # phrase serving caches (search/scorer.py): term-df and field
-        # n_docs currencies must follow the binding — today every
-        # content-changing op returns a NEW object, but a rebind is the
-        # one in-place transition, so clear them here for robustness
-        self.__dict__.pop("_phrase_df_cache", None)
-        self.__dict__.pop("_phrase_fs_cache", None)
+        self._dead_ords = frozenset()
+        self._stats_parts = None
         # the previous binding's persisted ordinal-assignment internals:
         # every lazy plan that depended on them is discarded right here,
         # so the cache blocks can go too (the contract at __init__)
@@ -1145,17 +1174,17 @@ class InvertedIndex:
             # ord, tf_raw, doc_len — no docid: result rows translate via
             # the ordinals table) + the term-clustered positional table
             # (same keys/sort, carrying positions+ords) as postings_full
-            self.postings = spark.read.parquet(
-                os.path.join(tp, "postings")
+            self.postings = read_table(
+                spark, os.path.join(tp, "postings")
             ).withColumn("tf", F.sqrt(F.col("tf_raw")))
             if manifest.get("clustered_positions") and os.path.exists(
                     os.path.join(tp, "positions")):
-                self.postings_full = spark.read.parquet(
-                    os.path.join(tp, "positions")
+                self.postings_full = read_table(
+                    spark, os.path.join(tp, "positions")
                 ).withColumn("tf", F.sqrt(F.col("tf_raw")))
             else:
                 self.postings_full = self.postings
-            self._ordinals = spark.read.parquet(os.path.join(tp, "ordinals"))
+            self._ordinals = read_table(spark, os.path.join(tp, "ordinals"))
             extra_p = os.path.join(tp, "ordinals_extra")
             if (manifest.get("ordinals_extra")
                     and not manifest.get("generations")
@@ -1165,21 +1194,21 @@ class InvertedIndex:
                 # bind_generations resets this)
                 self._ordinals_all = self._ordinals.select(
                     "docid", F.col("ord").cast("long").alias("ord")
-                ).unionByName(spark.read.parquet(extra_p))
+                ).unionByName(read_table(spark, extra_p))
         elif version == 4:
             # v4 split layout: narrow clustered postings (hot path),
             # positions in the doc-ordered flat ingest table (cold path)
-            self.postings = spark.read.parquet(
-                os.path.join(tp, "postings")
+            self.postings = read_table(
+                spark, os.path.join(tp, "postings")
             ).withColumn("tf", F.sqrt(F.col("tf_raw")))
             self.postings_full = (
-                spark.read.parquet(os.path.join(tp, "flat"))
+                read_table(spark, os.path.join(tp, "flat"))
                 .where(F.col("term").isNotNull())
                 .withColumn("tf", F.sqrt(F.col("tf_raw")))
             )
-            self._ordinals = spark.read.parquet(os.path.join(tp, "ordinals"))
+            self._ordinals = read_table(spark, os.path.join(tp, "ordinals"))
         else:
-            raw = spark.read.parquet(os.path.join(tp, "postings"))
+            raw = read_table(spark, os.path.join(tp, "postings"))
             if manifest.get("doc_rows_in_postings"):
                 raw = raw.where(F.col("term").isNotNull())
             if "tf" not in raw.columns:
@@ -1187,10 +1216,10 @@ class InvertedIndex:
             self.postings = raw
             self.postings_full = raw
             self._ordinals = None
-        self.doc_stats = spark.read.parquet(os.path.join(tp, "doc_stats"))
-        self.field_stats = spark.read.parquet(os.path.join(tp, "field_stats"))
-        self.term_stats = spark.read.parquet(os.path.join(tp, "term_stats"))
-        self.docs = spark.read.parquet(os.path.join(tp, "docs"))
+        self.doc_stats = read_table(spark, os.path.join(tp, "doc_stats"))
+        self.field_stats = read_table(spark, os.path.join(tp, "field_stats"))
+        self.term_stats = read_table(spark, os.path.join(tp, "term_stats"))
+        self.docs = read_table(spark, os.path.join(tp, "docs"))
         if self._segments is not None:
             self._segments[1].unpersist()
             self._segments[2].unpersist()
@@ -1205,18 +1234,18 @@ class InvertedIndex:
                 and os.path.exists(os.path.join(tp, "segments"))):
             self._segments = (
                 manifest.get("block_size", 4096),
-                spark.read.parquet(os.path.join(tp, "segments")),
+                read_table(spark, os.path.join(tp, "segments")),
                 # reuse the SAME DataFrame object bound above:
                 # seg_len_blocks' trust_inline fast path checks
                 # `seg_ords is self._ordinals` — a second read of the
                 # identical parquet would defeat it and pay a redundant
                 # docid->ord join on every lens rebuild
                 self._ordinals if self._ordinals is not None
-                else spark.read.parquet(os.path.join(tp, "ordinals")),
+                else read_table(spark, os.path.join(tp, "ordinals")),
             )
             if os.path.exists(os.path.join(tp, "seg_lens")):
-                self._seg_lens = spark.read.parquet(
-                    os.path.join(tp, "seg_lens"))
+                self._seg_lens = read_table(
+                    spark, os.path.join(tp, "seg_lens"))
         if manifest.get("generations"):
             from .deltas import bind_generations
 
@@ -1385,7 +1414,8 @@ class InvertedIndex:
         return _compact_tiered(self, tail=tail, tier_ratio=tier_ratio)
 
     def compact(self, with_segments: Optional[bool] = None,
-                block_size: Optional[int] = None) -> None:
+                block_size: Optional[int] = None,
+                _tag: Optional[str] = None) -> None:
         """Fold every generation (and its tombstones) back into a
         single-generation base — a full save() to the warehouse path:
         the top-tier merge (``compact_tiered`` handles the cheap
@@ -1421,6 +1451,9 @@ class InvertedIndex:
             merged = list(cur.get("merged_tags", []))
             merged += [e["tag"] for e in cur.get("generations", [])
                        if e.get("tag")]
+            # a save_delta that compacts instead (build/deltas.py) hands
+            # over its own batch tag
+            merged += [_tag] if _tag is not None else []
             if merged:
                 extra["merged_tags"] = cap_merged_tags(merged)
         except FileNotFoundError:

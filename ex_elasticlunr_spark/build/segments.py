@@ -165,8 +165,8 @@ def decode_segments_with_lens(blocks: DataFrame,
     some generation predates seg_lens — indexer.seg_len_blocks builds
     from the tombstone-filtered doc_stats) only covers LIVE docs while
     posting payloads keep tombstoned ords until compact(). Those rows
-    must decode without crashing; consumers anti-join the tombstone
-    set before scoring (search/wand.py exact_scores), so a placeholder
+    must decode without crashing; consumers filter the tombstoned
+    ords out before scoring (search/wand.py exact_scores), so a placeholder
     never reaches a score."""
     import numpy as np
 

@@ -51,6 +51,17 @@ def empty_df(spark: SparkSession, schema_ddl: str) -> DataFrame:
     return df
 
 
+def _str_literal(s: str) -> str:
+    """A string literal that parses to ``s`` under either setting of
+    ``spark.sql.parser.escapedStringLiterals``: plain quotes when ``s``
+    holds no quote or backslash (the only characters the two settings
+    read differently), else the UTF-8 bytes as a hex literal cast back
+    to a string — constant-folded, so ``In()`` pushdown is unchanged."""
+    if "'" in s or "\\" in s:
+        return "CAST(X'" + s.encode("utf-8").hex() + "' AS STRING)"
+    return "'" + s + "'"
+
+
 def _sql_literal(v) -> str:
     """One value -> a Spark SQL string literal (scalars are rendered as
     quoted strings and CAST to the column type by the caller —
@@ -81,7 +92,7 @@ def _sql_literal(v) -> str:
             s = repr(v)
     else:
         s = str(v)
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return _str_literal(s)
 
 
 def _in_literal(v) -> str:
@@ -95,7 +106,7 @@ def _in_literal(v) -> str:
         raise TypeError("float IN-lists are ambiguous (decimal literal "
                         "typing); filter floats with explicit casts")
     if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return _str_literal(v)
     try:
         # any integral type, incl. numpy scalars (a quoted int would
         # coerce the column to string and break pushdown)

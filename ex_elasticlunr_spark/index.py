@@ -645,30 +645,29 @@ class Index:
         # where block-max pruning cannot skip). On idf-SKEWED corpora
         # selective single-term top-k is exactly where WAND wins, so
         # gate the fallthrough on a ZERO-JOB selectivity signal: when
-        # every query term's df is already driver-cached (WAND and
-        # phrase lookups share _phrase_df_cache, _clause_stats caches
-        # field_stats) and the densest term is provably selective,
-        # route through the same wand_topk the pinned search_wand
-        # identity suites cover. Cold caches or dense terms keep the
-        # measured exhaustive default, and the gate itself never runs
-        # a job.
+        # every query term's df is already in the per-binding term
+        # statistics memo (search/scorer.py _vocab_lookup, filled by
+        # every WAND, phrase and exhaustive lookup) and the densest term
+        # is provably selective, route through the same wand_topk the
+        # pinned search_wand identity suites cover. Cold caches or dense
+        # terms keep the measured exhaustive default, and the gate
+        # itself never runs a job.
         leaf = _leaf(node)
         if (leaf is None or leaf.expand or leaf.fuzziness or leaf.regex
                 or leaf.boost != 1.0):
             return None
         inv = self.inverted
         fcache = getattr(inv, "_fstats_local_cache", None)
-        n_docs = None
-        if fcache is not None and fcache[0] is inv.field_stats:
-            fr = fcache[1].get(leaf.field)
-            n_docs = int(fr["n_docs"]) if fr else None
-        if not n_docs:
-            n_docs = (inv.__dict__.get("_phrase_fs_cache") or {}) \
-                .get(leaf.field)
-        pcache = inv.__dict__.get("_phrase_df_cache") or {}
-        dfs = [pcache.get((leaf.field, t)) for t in set(leaf.terms)]
-        if (not n_docs or not dfs or any(d is None for d in dfs)
-                or max(dfs) > WAND_SINGLE_CLAUSE_MAX_DF_FRAC * n_docs):
+        vcache = getattr(inv, "_vocab_local_cache", None)
+        if (fcache is None or fcache[0] is not inv.field_stats
+                or vcache is None or vcache[0] is not inv.term_stats):
+            return None
+        fr = fcache[1].get(leaf.field)
+        n_docs = int(fr["n_docs"]) if fr else None
+        hits = [vcache[1].get((leaf.field, t)) for t in set(leaf.terms)]
+        if (not n_docs or not hits or any(h is None for h in hits)
+                or max(h[0] for h in hits)
+                > WAND_SINGLE_CLAUSE_MAX_DF_FRAC * n_docs):
             return None
         from .search.wand import wand_topk
 

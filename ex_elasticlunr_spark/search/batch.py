@@ -231,11 +231,11 @@ def search_many(
         # terms cost no vocabulary job at all
         from .scorer import _vocab_lookup
 
-        looked = _vocab_lookup(index, field, literal_terms)
+        looked = _vocab_lookup(index, [(field, t) for t in literal_terms])
         matched = inline_rows(
             spark,
-            [(t, looked[t][0], looked[t][1], qid, qw)
-             for qid, t, qw in rows if looked[t] is not None],
+            [(t, *looked[(field, t)], qid, qw)
+             for qid, t, qw in rows if looked[(field, t)] is not None],
             "term string, term_df long, term_idf double, "
             "query_id string, qw long")
     else:

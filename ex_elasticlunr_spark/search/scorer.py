@@ -36,12 +36,14 @@ clustering shuffle, and per-doc aggregation keys are fixed-width ints.
 
 from __future__ import annotations
 
+import math
 from functools import reduce
 from typing import List, Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.literals import empty_df, in_expr, inline_rows
+from ..functions.literals import (
+    array_lit, empty_df, in_expr, inline_rows, sql_eq, sql_in)
 
 
 CHECKPOINT_PHRASE_HITS = True  # see phrase_scores
@@ -63,31 +65,6 @@ CHECKPOINT_PHRASE_HITS = True  # see phrase_scores
 # it replaces, per the WAND hot-term fix).
 PHRASE_DRIVER_MAX_ROWS = 1 << 15
 PHRASE_DRIVER_MAX_DOCS = 4096
-
-# per-index (field, term) -> df memo for the driver-path gate: hot
-# phrases repeat in a serving workload, and a PRESENT term's df only
-# ever affects the cost decision (the post-collect row-count guard owns
-# semantics), so present entries are safe to reuse across maintenance.
-# ABSENT terms are never cached — absence is semantics-bearing (it
-# short-circuits to an empty result) and a later add_documents could
-# introduce the term. Evicted OLDEST-FIRST past this many entries
-# (insertion-ordered dict) — a hot workload cycling slightly over the
-# cap keeps its recent entries instead of re-looking-up everything
-# after a wholesale clear.
-_PHRASE_DF_CACHE_MAX = 1 << 16
-
-
-def _evict_df_cache(cache: dict) -> None:
-    """Drop oldest entries until the cache is back under the cap.
-    Concurrency: same contract as the old wholesale clear — a reader
-    that loses an entry mid-lookup just re-looks-up (the cache never
-    stores None, so .get miss handling covers the race)."""
-    while len(cache) > _PHRASE_DF_CACHE_MAX:
-        try:
-            cache.pop(next(iter(cache)), None)
-        except (StopIteration, RuntimeError):
-            return  # concurrent mutation: the other writer will evict
-
 
 def entry_score_expr(mode: str, k1: float = 1.2, b: float = 0.75,
                      qw: str | None = None):
@@ -147,68 +124,96 @@ def _fstats_local(index) -> dict:
     return cache[1]
 
 
-# cap for the per-binding (field, term) -> (df, idf) vocabulary memo
-# below; oldest-first eviction like the phrase df cache
+# cap for the per-binding (field, term) -> (df, idf) memo below;
+# oldest-first eviction
 _VOCAB_CACHE_MAX = 1 << 16
 
 
-def _vocab_lookup(index, field: str, terms) -> dict:
-    """(field, term) -> (df, idf) for the given terms, via the
-    per-binding driver memo; terms ABSENT from the vocabulary map to
-    ``None``. One capped In(term) collect fills the misses.
+def _pairs_cond(pairs) -> Column:
+    """``(field = f AND term IN (...)) OR ...`` over (field, term)
+    pairs, parsed once (pushes into the term-clustered scans)."""
+    by: dict = {}
+    for f, t in pairs:
+        by.setdefault(f, set()).add(t)
+    return F.expr(" OR ".join(
+        "(" + sql_eq("field", f) + " AND " + sql_in("term", sorted(ts))
+        + ")" for f, ts in sorted(by.items())))
 
-    The memo is keyed by the ``term_stats`` DataFrame's object identity
-    (same contract as ``_fstats_local``): content-changing ops return
-    new objects and ``_rebind_from`` reassigns the attribute, so both
-    PRESENT entries and ABSENT markers are safe within a binding."""
+
+def _vocab_lookup(index, pairs, partials: Optional[dict] = None) -> dict:
+    """(field, term) -> (df, idf) for ``pairs``; ``None`` marks a term
+    absent from the live vocabulary. Every query-path read of term
+    statistics goes through here (exact terms, expansions, the phrase
+    gate, WAND clauses, ``search_many``), memoized per binding.
+
+    The misses cost ONE Spark job that collects, for those terms only,
+    each generation's df partial and the tombstoned postings (pushed
+    In(term) scans over ``index._stats_parts``, the dead ords as a
+    literal); the sum is taken here, idf = 1 + log10(N / (df + 1)) with
+    N from field_stats. A single-generation index is the one-part case:
+    its ``term_stats`` and no tombstones. ``partials`` ({pair: summed
+    df partial}, from an expansion's vocabulary collect) saves the
+    partial scan for those pairs.
+
+    The memo is keyed by the ``term_stats`` object's identity (every
+    content change assigns a new one). This call's results are kept in
+    a local dict, never re-read from the shared memo, so a concurrent
+    eviction cannot lose one."""
     src = index.term_stats
     cache = getattr(index, "_vocab_local_cache", None)
     if cache is None or cache[0] is not src:
         cache = (src, {})
         index._vocab_local_cache = cache
     vc = cache[1]
-    missing = sorted({t for t in terms if (field, t) not in vc})
-    if missing:
-        for r in (src.where(F.col("field") == field)
-                  .where(in_expr("term", missing))
-                  .select("term", "df", "idf").collect()):
-            vc[(field, r["term"])] = (int(r["df"]), float(r["idf"]))
-        for t in missing:
-            vc.setdefault((field, t), None)  # absent from the vocabulary
-    # snapshot THIS call's results BEFORE evicting: oldest-first
-    # eviction may pop a warm entry this very call needs (a query mixing
-    # one old term with enough new ones to cross the cap), and reading
-    # vc after eviction would KeyError
-    out = {t: vc[(field, t)] for t in terms}
-    if missing:
-        while len(vc) > _VOCAB_CACHE_MAX:
-            try:
-                vc.pop(next(iter(vc)), None)
-            except (StopIteration, RuntimeError):
-                break
-        # share the df currency with the phrase driver-serve gate
-        # (present terms only — the phrase cache's semantics rule)
-        pcache = index.__dict__.setdefault("_phrase_df_cache", {})
-        _evict_df_cache(pcache)
-        for t in missing:
-            hit = out.get(t)
-            if hit is not None:
-                pcache[(field, t)] = hit[0]
+    out, missing = {}, []
+    for p in set(pairs):
+        v = vc.get(p, vc)  # vc itself: the miss sentinel (None = absent)
+        if v is vc:
+            missing.append(p)
+        else:
+            out[p] = v
+    if not missing:
+        return out
+    ts, raw = index._stats_parts or (src, None)
+    known = partials or {}
+    scans = []
+    need = [p for p in missing if p not in known]
+    if need:
+        scans.append(ts.where(_pairs_cond(need)).select("field", "term", "df"))
+    if index._dead_ords:
+        scans.append(raw.where(_pairs_cond(missing))
+                     .where(in_expr("ord", sorted(index._dead_ords)))
+                     .select("field", "term",
+                             F.lit(-1).cast("long").alias("df")))
+    sums = {p: known.get(p, 0) for p in missing}
+    if scans:
+        for r in reduce(DataFrame.unionByName, scans).collect():
+            sums[(r["field"], r["term"])] += r["df"]
+    fstats = _fstats_local(index)
+    for p, df in sums.items():
+        fr = fstats.get(p[0])
+        # a term whose every posting is tombstoned is absent, as after
+        # a rebuild
+        out[p] = vc[p] = ((df, 1.0 + math.log10(fr["n_docs"] / (df + 1.0)))
+                          if df > 0 and fr is not None else None)
+    while len(vc) > _VOCAB_CACHE_MAX:
+        try:
+            vc.pop(next(iter(vc)), None)
+        except (StopIteration, RuntimeError):
+            break  # concurrent mutation: the other writer evicts
     return out
 
 
 def _vocab_resolve_inline(index, field: str, terms: List[str]) -> DataFrame:
     """EXACT-terms vocabulary resolve as a driver-held lookup + inline
     literal relation — the zero-shuffle twin of :func:`_query_terms_df`
-    for the no-expansion path. Returns the identical (qt_idx, qt, term,
-    df, idf) rows the vocab equi-join produces (df/idf round-trip
-    bit-exact through the VALUES literal), so scores are unchanged; the
-    broadcast build over the vocabulary scan becomes a zero-task local
-    relation, and a warm term costs no Spark job at all."""
-    looked = _vocab_lookup(index, field, terms)
+    for the no-expansion path: the same (qt_idx, qt, term, df, idf)
+    rows as a zero-task local relation, and a warm term costs no Spark
+    job at all."""
+    looked = _vocab_lookup(index, [(field, t) for t in terms])
     rows = [
-        (i, t, t, looked[t][0], looked[t][1])
-        for i, t in enumerate(terms) if looked[t] is not None
+        (i, t, t) + looked[(field, t)]
+        for i, t in enumerate(terms) if looked[(field, t)] is not None
     ]
     return inline_rows(
         index.postings.sparkSession, rows,
@@ -217,7 +222,8 @@ def _vocab_resolve_inline(index, field: str, terms: List[str]) -> DataFrame:
 
 def _query_terms_df(index, field: str, terms: List[str],
                     expand: bool, fuzziness: int,
-                    regex: bool = False) -> DataFrame:
+                    regex: bool = False,
+                    vocab: Optional[DataFrame] = None) -> DataFrame:
     """Resolve query terms against the vocabulary -> (qt, term, df, idf).
 
     One output row per (query term, matched vocab term): the unit the
@@ -226,31 +232,63 @@ def _query_terms_df(index, field: str, terms: List[str],
     the reference's per-doc entry list is built by iterating query terms
     in order and the vocabulary in ETS ordered_set (term-sorted) order,
     and the details path's argmax tie-break depends on it.
-    """
-    spark = index.postings.sparkSession
-    # inline literal relation: no Python-RDD scan in the query path
-    qterms = inline_rows(spark, [(i, t) for i, t in enumerate(terms)],
-                         "qt_idx int, qt string")
-    vocab = index.term_stats.where(F.col("field") == field)
 
+    Plan shape: one vocabulary scan under literal match predicates (a
+    prefix range, an edit-distance ball, an unanchored regex, or
+    equality), one flag per query term exploded to ``qt_idx`` — no join,
+    so no broadcast build. ``vocab`` (default: the merged
+    ``term_stats``) may be the per-generation partials, (field, term,
+    df) rows without idf.
+    """
+    vocab = index.term_stats if vocab is None else vocab
+    term = F.col("term")
     if regex:
-        # unanchored regex search over the VOCABULARY (term_stats — one
-        # row per distinct term, never the postings): same shape as
-        # fuzzy's edit-distance ball
-        matched = vocab.join(F.broadcast(qterms),
-                             F.rlike(vocab.term, qterms.qt))
+        conds = [term.rlike(t) for t in terms]
     elif expand:
-        cond = vocab.term.startswith(qterms.qt) | (vocab.term == qterms.qt)
-        # ^term.* regex == startswith; exact term trivially included
-        matched = vocab.join(F.broadcast(qterms), cond)
+        conds = [term.startswith(t) for t in terms]
     elif fuzziness > 0:
-        cond = (
-            F.abs(F.length(vocab.term) - F.length(qterms.qt)) <= fuzziness
-        ) & (F.levenshtein(vocab.term, qterms.qt) <= fuzziness)
-        matched = vocab.join(F.broadcast(qterms), cond)
+        conds = [(F.abs(F.length(term) - F.length(F.lit(t))) <= fuzziness)
+                 & (F.levenshtein(term, F.lit(t)) <= fuzziness)
+                 for t in terms]
     else:
-        matched = vocab.join(F.broadcast(qterms), vocab.term == qterms.qt)
-    return matched.select("qt_idx", "qt", "term", "df", "idf")
+        conds = [term == F.lit(t) for t in terms]
+    hits = F.array_compact(F.array(
+        *[F.when(c, F.lit(i)) for i, c in enumerate(conds)]))
+    cols = [c for c in ("term", "df", "idf") if c in vocab.columns]
+    return (vocab.where(F.col("field") == field)
+            .where(reduce(lambda x, y: x | y, conds))
+            .select(F.explode(hits).alias("qt_idx"), *cols)
+            .select("qt_idx", F.element_at(array_lit(terms, "string"),
+                                           F.col("qt_idx") + 1).alias("qt"),
+                    *cols))
+
+
+def _expansion_rows(index, field: str, terms: List[str], expand: bool,
+                    fuzziness: int, regex: bool) -> Optional[list]:
+    """(qt_idx, qt, term, df, idf) rows of a prefix/fuzzy/regex
+    expansion: ONE capped collect of :func:`_query_terms_df` over every
+    generation's vocabulary partials, whose df partials feed
+    :func:`_vocab_lookup` (no further job unless tombstones exist).
+    ``None`` past RESOLVE_INLINE_CAP rows: callers keep the distributed
+    plan."""
+    from .wand import RESOLVE_INLINE_CAP, _collect_limit_one_job
+
+    vocab = (index._stats_parts[0] if index._stats_parts
+             else index.term_stats.select("field", "term", "df"))
+    got = _collect_limit_one_job(
+        _query_terms_df(index, field, terms, expand, fuzziness,
+                        regex=regex, vocab=vocab), RESOLVE_INLINE_CAP + 1)
+    if len(got) > RESOLVE_INLINE_CAP:
+        return None
+    partial: dict = {}  # (qt_idx, term) -> df summed over generations
+    for r in got:
+        k = (r["qt_idx"], r["term"])
+        partial[k] = partial.get(k, 0) + r["df"]
+    looked = _vocab_lookup(
+        index, [(field, t) for _, t in partial],
+        partials={(field, t): d for (_, t), d in partial.items()})
+    return [(qi, terms[qi], t) + looked[(field, t)]
+            for qi, t in sorted(partial) if looked[(field, t)] is not None]
 
 
 def terms_scores(
@@ -286,15 +324,6 @@ def terms_scores(
         spark = index.postings.sparkSession
         return empty_df(spark, empty_schema)
 
-    if not expand and fuzziness <= 0 and not regex:
-        # exact terms: driver-held vocabulary resolve -> inline literal
-        # relation (identical rows, zero-task broadcast; warm terms cost
-        # no Spark job) — the expansion paths keep the vocab pattern join
-        matched_terms = _vocab_resolve_inline(index, field, terms)
-    else:
-        matched_terms = _query_terms_df(index, field, terms, expand,
-                                        fuzziness, regex=regex)
-
     # hot path scans the narrow clustered postings; the details path
     # needs the positions column, which lives in the flat ingest table
     # on a loaded index (postings_full)
@@ -304,45 +333,41 @@ def terms_scores(
     # resolved vocab can't reach the parquet reader; this can — shows up
     # as PushedFilters: In(term, ...) / StringStartsWith, pruning row
     # groups before any join)
-    if fuzziness <= 0 and not regex:
-        if expand:
-            cond = None
-            for t in terms:
-                c = F.col("term").startswith(t)
-                cond = c if cond is None else (cond | c)
-            post = post.where(cond)
-        else:
-            post = post.where(in_expr("term", terms))
+    if not expand and fuzziness <= 0 and not regex:
+        # exact terms: driver-held vocabulary resolve -> inline literal
+        # relation (identical rows, zero-task broadcast; warm terms cost
+        # no Spark job)
+        matched_terms = _vocab_resolve_inline(index, field, terms)
+        post = post.where(in_expr("term", terms))
     else:
-        # fuzzy/regex: the matched vocab set is tiny (edit-distance ball
-        # / regex hits) — resolve it against term_stats (vocabulary-
-        # sized, cheap) and push the literal In(term, ...) into the
-        # postings scan; without it the fuzzy path is a full postings
-        # scan that anti-scales with data size. Collect the FULL matched
-        # rows once (the vocab pattern join used to run twice: once for
-        # this pushdown collect, once as the broadcast build below) and
-        # inline them as the matched relation — one vocab job instead of
-        # two; a pathological expansion beyond the cap falls back to the
-        # old two-pass plan unchanged.
-        from .wand import RESOLVE_INLINE_CAP, _collect_limit_one_job
-
+        # prefix/fuzzy/regex: the matched vocab set is small (prefix
+        # range / edit-distance ball / regex hits) — collect it once with
+        # its df partials and inline it as the matched relation; the
+        # postings scan gets the prefix ranges or the resolved literal
+        # In(term, ...) (without a pushed predicate it anti-scales with
+        # data size). A pathological expansion beyond the cap keeps the
+        # two-pass plan over term_stats.
         spark = index.postings.sparkSession
-        mrows = _collect_limit_one_job(matched_terms, RESOLVE_INLINE_CAP + 1)
-        if not mrows:
-            return empty_df(spark, empty_schema)
-        if len(mrows) <= RESOLVE_INLINE_CAP:
-            fuzzy_terms = sorted({r["term"] for r in mrows})
+        mrows = _expansion_rows(index, field, terms, expand, fuzziness,
+                                regex)
+        if mrows is not None:
+            if not mrows:
+                return empty_df(spark, empty_schema)
             matched_terms = inline_rows(
-                spark,
-                [(r["qt_idx"], r["qt"], r["term"], r["df"], r["idf"])
-                 for r in mrows],
+                spark, mrows,
                 "qt_idx int, qt string, term string, df long, idf double")
         else:
-            fuzzy_terms = [
-                r["term"]
-                for r in matched_terms.select("term").distinct().collect()
-            ]
-        post = post.where(in_expr("term", fuzzy_terms))
+            matched_terms = _query_terms_df(index, field, terms, expand,
+                                            fuzziness, regex=regex)
+        if expand:
+            post = post.where(reduce(
+                lambda x, y: x | y, [F.col("term").startswith(t)
+                                     for t in terms]))
+        else:
+            post = post.where(in_expr("term", sorted(
+                {r[2] for r in mrows} if mrows is not None
+                else {r["term"] for r in
+                      matched_terms.select("term").distinct().collect()})))
     if restrict is not None:
         # no broadcast hint: the restriction can be nearly all docs
         # (e.g. a not-filter base) — AQE picks broadcast when it IS small
@@ -406,16 +431,10 @@ def terms_scores(
 
 
 def _phrase_field_n(index, field: str) -> int:
-    """Cached per-field document count (field_stats currency) — the N
-    of the conjunction-size estimate. One 1-row metadata job per field
-    per index lifetime."""
-    cache = index.__dict__.setdefault("_phrase_fs_cache", {})
-    n = cache.get(field)
-    if n is None:
-        row = _fstats_local(index).get(field)
-        n = int(row["n_docs"]) if row else 0
-        cache[field] = n
-    return n
+    """Per-field document count (field_stats currency, memoized per
+    binding) — the N of the conjunction-size estimate."""
+    row = _fstats_local(index).get(field)
+    return int(row["n_docs"]) if row else 0
 
 
 def _phrase_conjunctive_cands(index, field: str, key: str,
@@ -527,8 +546,8 @@ def _phrase_per_doc_driver(index, field: str, post, key: str,
           prune, never a semantics change.
 
     Cost is GATED before anything heavy moves: the query terms'
-    document frequencies (one term-count-sized term_stats lookup, the
-    same vocabulary currency fuzzy/expand resolve against) bound the
+    document frequencies (``_vocab_lookup``, the per-binding memo every
+    other scorer resolves through) bound the
     positions-row count exactly, so nothing bulk ever moves
     speculatively (measured: the ungated version spent ~8s
     row-pickling 130k position rows only to fall back). A term with no
@@ -552,30 +571,10 @@ def _phrase_per_doc_driver(index, field: str, post, key: str,
     from .wand import _arrow_limit_one_job
 
     uniq_terms = sorted(set(terms))
-    cache = index.__dict__.setdefault("_phrase_df_cache", {})
-    # .get, not check-then-read: a concurrent serving thread's wholesale
-    # clear() between the two would KeyError; a racily-missed entry just
-    # re-looks-up (cache never stores None — df is a positive count)
-    dfs = {}
-    for t in uniq_terms:
-        v = cache.get((field, t))
-        if v is not None:
-            dfs[t] = v
-    missing = [t for t in uniq_terms if t not in dfs]
-    if missing:
-        looked = {
-            r["term"]: r["df"]
-            for r in index.term_stats
-            .where(F.col("field") == field)
-            .where(in_expr("term", missing))
-            .select("term", "df").collect()
-        }
-        _evict_df_cache(cache)
-        for t, d in looked.items():  # present terms only (see cache note)
-            cache[(field, t)] = d
-        dfs.update(looked)
-    if any(t not in dfs for t in uniq_terms):
+    looked = _vocab_lookup(index, [(field, t) for t in uniq_terms])
+    if any(v is None for v in looked.values()):
         return ("served", [], 0)  # vocabulary-absent term: no match
+    dfs = {t: looked[(field, t)][0] for t in uniq_terms}
     scan = post.select(key, "term", "ords", "doc_len")
     cand_df = None
     if rows_cap is None:

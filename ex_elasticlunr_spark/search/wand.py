@@ -143,8 +143,6 @@ LEN_BLOCK_EST_BYTES = 16 << 10
 # above this many boundary ordinals the docid resolve would push a
 # silly In() list — fall back to the distributed tail
 RESOLVE_INLINE_CAP = 4096
-# tombstone sets larger than this are not collected to the driver
-TOMB_LOCAL_CAP = 1 << 20
 
 _META_SCHEMA = (
     "cid int, field string, term string, w double, mult long, "
@@ -196,25 +194,22 @@ def resolve_clause(index, field: str, terms: Sequence[str],
     term matched by multiple query terms contributes once per match,
     so it carries that multiplicity."""
     if expand or fuzziness > 0 or regex:
-        from .scorer import _query_terms_df
+        from .scorer import _expansion_rows, _query_terms_df
 
-        # RAW terms, duplicates included: _query_terms_df emits one row
-        # per (query term, vocab term) match, so a duplicated query
-        # term contributes twice to mult — exactly like the exhaustive
-        # scorer's join (deduping here broke rank identity for
-        # duplicate-term expansion queries: halved bm25 weights, msm
-        # counts short by the duplicate count)
-        m = _query_terms_df(index, field, list(terms),
-                            expand, fuzziness, regex=regex)
-        mult = {
-            r["term"]: r["n"]
-            for r in m.groupBy("term").agg(
-                F.count(F.lit(1)).alias("n")).collect()
-        }
-    else:
-        mult = {}
-        for t in terms:
-            mult[t] = mult.get(t, 0) + 1
+        # RAW terms, duplicates included: one row per (query term, vocab
+        # term) match, so a duplicated query term contributes twice to
+        # mult — exactly like the exhaustive scorer's join (deduping
+        # here broke rank identity for duplicate-term expansion queries:
+        # halved bm25 weights, msm counts short by the duplicate count)
+        rows = _expansion_rows(index, field, list(terms), expand,
+                               fuzziness, regex)
+        terms = ([r[2] for r in rows] if rows is not None else [
+            r["term"] for r in _query_terms_df(
+                index, field, list(terms), expand, fuzziness,
+                regex=regex).select("term").collect()])
+    mult: Dict[str, int] = {}
+    for t in terms:
+        mult[t] = mult.get(t, 0) + 1
     return WandClause(field=field, terms=mult, boost=float(boost),
                       msm=max(int(msm), 1), required=required,
                       negative=negative)
@@ -274,23 +269,6 @@ def _limit_one_job(df: DataFrame, n: int, run):
                 spark.conf.set(key, old)
 
 
-def _tomb_ords_local(index) -> Optional[set]:
-    """The tombstoned-ordinal set, collected once per binding (memoized
-    by the _tomb_ords DataFrame's identity — bind_generations assigns a
-    fresh one on every rebind). None = too large to drive from."""
-    t = getattr(index, "_tomb_ords", None)
-    if t is None:
-        return set()
-    cache = getattr(index, "_tomb_local_cache", None)
-    if cache is not None and cache[0] is t:
-        return cache[1]
-    rows = _collect_limit_one_job(t.select("ord"), TOMB_LOCAL_CAP + 1)
-    out = (None if len(rows) > TOMB_LOCAL_CAP
-           else {r["ord"] for r in rows})
-    index._tomb_local_cache = (t, out)
-    return out
-
-
 def _clause_stats(index, clauses: List[WandClause], mode: str) -> list:
     """One vocabulary lookup for every (clause, term): rows of
     (cid, field, term, w, mult, boost, cmsm, avgdl). |rows| = Σ|terms|
@@ -298,34 +276,13 @@ def _clause_stats(index, clauses: List[WandClause], mode: str) -> list:
     pairs = [(c.field, t) for c in clauses for t in c.terms]
     if not pairs:
         return []
-    fields = sorted({c.field for c in clauses})
     # field_stats rows are per-index constants (#fields rows), collected
-    # once per binding — shared identity-keyed memo with the exhaustive
-    # scorer (scorer._fstats_local)
-    from .scorer import _fstats_local
+    # once per binding; df/idf through the per-binding term-statistics
+    # lookup shared with the exhaustive scorer
+    from .scorer import _fstats_local, _vocab_lookup
 
     frows = _fstats_local(index)
-    # one F.expr parse instead of per-element isin py4j chatter (the
-    # parsed In/And/Or tree is identical — literals.py module docstring)
-    cond = F.expr(" OR ".join(
-        "(" + sql_eq("field", f) + " AND " + sql_in("term", sorted(
-            {t for c in clauses if c.field == f for t in c.terms})) + ")"
-        for f in fields))
-    trows = {
-        (r["field"], r["term"]): r
-        for r in index.term_stats.where(cond)
-        .select("field", "term", "df", "idf").collect()
-    }
-    # share the (field, term) -> df rows with the phrase driver-serve
-    # gate (scorer._phrase_per_doc_driver): same term_stats currency,
-    # present terms only (the cache's semantics rule) — a phrase over
-    # terms a WAND query already resolved skips its gate lookup job
-    from .scorer import _evict_df_cache
-
-    pcache = index.__dict__.setdefault("_phrase_df_cache", {})
-    _evict_df_cache(pcache)
-    for (f, t), r in trows.items():
-        pcache[(f, t)] = r["df"]
+    trows = _vocab_lookup(index, pairs)
     out = []
     for cid, c in enumerate(clauses):
         fr = frows.get(c.field)
@@ -335,13 +292,14 @@ def _clause_stats(index, clauses: List[WandClause], mode: str) -> list:
             tr = trows.get((c.field, t))
             if tr is None:
                 continue
+            df, idf = tr
             if mode == "elasticlunr":
-                w = tr["idf"] ** 2 * fr["flnorm"]
+                w = idf ** 2 * fr["flnorm"]
             else:
                 # sum mode: a term matched by n query terms contributes
                 # n identical entries to the exhaustive sum
                 w = n * math.log(
-                    1.0 + (fr["n_docs"] - tr["df"] + 0.5) / (tr["df"] + 0.5))
+                    1.0 + (fr["n_docs"] - df + 0.5) / (df + 0.5))
             out.append((cid, c.field, t, float(w), int(n), c.boost,
                         c.msm, float(fr["avg_doc_len"] or 0.0),
                         int(getattr(c, "required", False)),
@@ -381,7 +339,7 @@ def _serve_from_driver(index, segments, stats, by_cid, good, meta_rows,
     distributed mapInPandas runs (build/codec.py decode_block), the
     same clause algebra, then one ordinal->docid lookup for the top-k
     boundary. Returns None when the query does not qualify (payload
-    too large, tombstone set too large, boundary tie set too large) —
+    too large, boundary tie set too large) —
     the caller falls through to the distributed plan, so this is only
     ever a latency fast path, never a semantics change. Identity with
     the distributed plan is pinned by tests/test_segments_wand.py.
@@ -397,9 +355,7 @@ def _serve_from_driver(index, segments, stats, by_cid, good, meta_rows,
 
     if k <= 0 or not DRIVER_SERVE_BYTES:
         return None
-    tomb = _tomb_ords_local(index)
-    if tomb is None:
-        return None
+    tomb = index._dead_ords
 
     spark = segments.sparkSession
     # fetch set: the per-clause cross product (terms x good block_ids)
@@ -617,25 +573,26 @@ def wand_topk_multi(
     # run the two concurrently from a worker thread (the serving floor
     # is sequential driver round trips, guide §2.6 overlap): two
     # planning+collect rounds become one round of wall time.
-    terms_by_field: Dict[str, set] = {}
-    for c in clauses:
-        terms_by_field.setdefault(c.field, set()).update(c.terms)
-    if not terms_by_field:
+    pairs = [(c.field, t) for c in clauses for t in c.terms]
+    if not pairs:
         # no clauses (or none with terms): F.expr("") would raise a
         # ParseException; the pre-overlap code returned empty here via
         # the empty _clause_stats guard
         return empty
-    cond = F.expr(" OR ".join(
-        "(" + sql_eq("field", f)
-        + " AND " + sql_in("term", sorted(terms_by_field[f])) + ")"
-        for f in sorted(terms_by_field)))
+    from .scorer import _pairs_cond
+
+    cond = _pairs_cond(pairs)
     phys_df = segments.where(cond).select(
         "field", "term", "block_id", "max_tf_raw", "n_docs", "block_bytes")
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     with ThreadPoolExecutor(1) as _pool:
-        phys_fut = _pool.submit(
-            _collect_limit_one_job, phys_df, METADATA_CAP + 1)
+        # the worker inherits this thread's local properties (job group
+        # included), so its job is counted with the query's
+        phys_fut = _pool.submit(inheritable_thread_target(spark)(
+            _collect_limit_one_job), phys_df, METADATA_CAP + 1)
         stats = _clause_stats(index, clauses, mode)
     if not stats:
         return empty
@@ -787,7 +744,7 @@ def wand_topk_multi(
                     pot_b.orderBy(F.desc("p")).limit(SEED_BLOCK_IDS).collect()]
 
     # ---- shared decode + exact aggregation ----------------------------
-    tomb_ords = getattr(index, "_tomb_ords", None)
+    dead = sorted(index._dead_ords)
     cids = sorted(by_cid)
     cinfo = {row[0]: (row[5], row[6]) for row in stats}  # cid: boost, cmsm
     # same-field clauses can reference the same vocabulary term; cand
@@ -845,8 +802,8 @@ def wand_topk_multi(
         # docs inside segment payloads until compact(); filter them in
         # BOTH phases — an unfiltered seed could set the threshold from
         # a removed doc's score and wrongly prune live blocks
-        if tomb_ords is not None:
-            decoded = decoded.join(F.broadcast(tomb_ords), "ord", "left_anti")
+        if dead:
+            decoded = decoded.where(~in_expr("ord", dead))
         decoded = decoded.join(_meta(), ["field", "term"])
         # ONE groupBy(ord) — the per-clause raw scores and matched-entry
         # counts are conditional aggregates (clause list is query-sized),

@@ -231,20 +231,6 @@ def test_random_phrases_hot_term_paths(rand_idx):
     assert outcomes["served"] > 0 and outcomes["distributed"] > 0
 
 
-def test_phrase_df_cache_evicts_oldest_not_wholesale(monkeypatch):
-    """VERDICT r5 ask #4: a workload cycling slightly over the cache
-    cap must retain the cap MOST-RECENT entries (ordered eviction), not
-    re-look-up everything after a wholesale clear."""
-    from ex_elasticlunr_spark.search import scorer
-
-    monkeypatch.setattr(scorer, "_PHRASE_DF_CACHE_MAX", 4)
-    cache = {("text", f"t{i}"): i + 1 for i in range(5)}  # cap + 1
-    scorer._evict_df_cache(cache)
-    assert len(cache) == 4
-    assert ("text", "t0") not in cache  # oldest evicted first
-    assert all(("text", f"t{i}") in cache for i in (1, 2, 3, 4))
-
-
 def test_driver_max_rows_option_no_global_write(loaded):
     """VERDICT r5 ask #2: the serve cap rides the query options; the
     squeezed cap forces the non-driver route without mutating

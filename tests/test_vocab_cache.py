@@ -73,19 +73,23 @@ def test_identity_rebind_resets_cache(idx):
 
 def test_eviction_cannot_starve_current_call(idx, monkeypatch):
     # a query mixing an OLD warm entry with enough new terms to cross
-    # the cap must still return every term (snapshot before eviction)
+    # the cap must still return every term (results kept locally), and
+    # eviction drops the OLDEST entries, not the whole memo
     import ex_elasticlunr_spark.search.scorer as sc
 
     idx.__dict__.pop("_vocab_local_cache", None)
     monkeypatch.setattr(sc, "_VOCAB_CACHE_MAX", 3)
     from ex_elasticlunr_spark.search.scorer import _vocab_lookup
 
-    _vocab_lookup(idx, "text", ["alpha"])  # oldest entry
-    got = _vocab_lookup(
-        idx, "text", ["alpha", "beta", "gamma", "delta", "nope"])
-    assert got["alpha"][0] == 3 and got["delta"][0] == 1
-    assert got["nope"] is None
-    assert len(idx._vocab_local_cache[1]) <= 3  # cap enforced
+    _vocab_lookup(idx, [("text", "alpha")])  # oldest entry
+    got = _vocab_lookup(idx, [("text", t) for t in
+                              ["alpha", "beta", "gamma", "delta", "nope"]])
+    assert got[("text", "alpha")][0] == 3
+    assert got[("text", "delta")][0] == 1
+    assert got[("text", "nope")] is None
+    vc = idx._vocab_local_cache[1]
+    assert len(vc) == 3  # cap enforced, the newest entries kept
+    assert ("text", "alpha") not in vc  # oldest evicted first
     idx.__dict__.pop("_vocab_local_cache", None)
 
 

@@ -286,8 +286,8 @@ def test_single_clause_routes_on_cached_selectivity(spark, tmp_path,
     # cold caches: stays exhaustive (no df evidence, no job spent)
     cold = _rows(loaded.search(q, top_k=10))
     assert not calls
-    # warm the df cache through the explicit WAND path (its
-    # _clause_stats lookup shares _phrase_df_cache)
+    # warm the df memo through the explicit WAND path (its
+    # _clause_stats lookup fills the per-binding term statistics memo)
     loaded.search_wand("zzzrare", "text", top_k=10).collect()
     calls.clear()
     routed = _rows(loaded.search(q, top_k=10))
