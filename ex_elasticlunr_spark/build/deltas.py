@@ -40,9 +40,9 @@ point model re-expressed over parquet:
   each tombstoned doc's own postings are subtracted back out of the
   summed df partials (pinned by the randomized maintenance referee). A
   query pays this only for its own terms (``search/scorer.py
-  _vocab_lookup``: one pushed In(term) job per binding and term set);
-  only full-vocabulary consumers (field_stats, facets, compact) pay one
-  tombstone-filtered postings pass per bind. ``compact()`` = a full
+  _vocab_lookup``: a pyarrow read of the generations' files, no Spark
+  job); only full-vocabulary consumers (field_stats, facets, compact)
+  pay one tombstone-filtered postings pass per bind. ``compact()`` = a full
   ``save`` back to the base, which folds tombstones away physically
   and re-clusters everything (its value is scan pruning and bounded
   generation count, not stats correctness).
@@ -53,8 +53,9 @@ stats job. A bind resolves the tombstones once, on the driver (one
 pushed In(docid) collect over the ordinals), and holds them as literal
 predicates, so a query on a generational reader runs the same plan
 shape and Spark job count as on a single-generation reader; each extra
-generation adds one more pruned parquet scan to the per-table unions,
-which is why compact() exists for when generations accumulate. The
+generation adds one more pruned parquet scan to the per-table unions
+(and one more part to the driver's file reads, build/files.py), which
+is why compact() exists for when generations accumulate. The
 driver-held tombstone set is bounded by TOMB_LOCAL_CAP: a save_delta
 that would cross it runs compact() instead of appending a generation.
 
@@ -498,16 +499,20 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
     runs ONE Spark job (the tables' schemas come from their parquet
     footers, ``indexer.read_table``): a pushed ``In(docid)`` collect
     over the ordinals of the parts they can reach (none without
-    tombstones). Both sets stay on the driver for the life of the binding (at most
-    TOMB_LOCAL_CAP docids: ``save_delta`` compacts rather than commit
-    past it) and reach every plan as literal predicates. Nothing is
-    persisted. A query therefore has a single-generation reader's plan
-    shape and job count; each extra generation adds one pruned parquet
-    scan per union. Query-term df/idf is summed per binding by
-    ``search/scorer.py _vocab_lookup`` from the raw partials bound in
-    ``_stats_parts``; the lazy merged ``term_stats`` serves the
-    vocabulary-wide consumers, and field_stats' vocabulary count is
-    deferred to first access via ``_fs_thunk``."""
+    tombstones). Both sets stay on the driver for the life of the
+    binding (at most TOMB_LOCAL_CAP docids: ``save_delta`` compacts
+    rather than commit past it) and reach every Spark plan as literal
+    predicates. Nothing is persisted. The bind also lists each part's
+    files per table (``build/files.py``: the base's, then each adds
+    generation's with its ordinal base), which is all the driver's
+    serving reads need: query-term df/idf (``search/scorer.py
+    _vocab_lookup``, summed from the generations' partials less the
+    query terms' tombstoned postings), WAND's block reads and the
+    phrase position rows read those files with pyarrow and run no
+    Spark job. The lazy merged ``term_stats`` serves the
+    vocabulary-wide consumers, and field_stats' vocabulary count (the
+    binding's one-time Spark cost on the query path) is deferred to
+    first access via ``_fs_thunk``."""
     entries = manifest["generations"]
     block_size = int(manifest.get("block_size", 4096))
 
@@ -529,7 +534,15 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
         seg_lens=inv._seg_lens,
     )]
     tombs: list = [[]]
+    from .files import bind, list_part
     from .indexer import read_table, tables_dir
+
+    # the files behind each table, part by part (build/files.py): the
+    # base's as bound by _rebind_from, then each adds generation's; a
+    # table some part lacks stays a Spark read (so does field_stats,
+    # assembled below rather than read)
+    files = {name: list(b[1]) for name, b in inv._files.items()
+             if name != "field_stats"}
 
     for e in entries:
         gd = os.path.join(path, DELTAS_DIR, e["name"])
@@ -546,6 +559,12 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
             parts.append(None)
             continue
         base = int(e["ord_base"])
+        for name in list(files):
+            d = os.path.join(gt, name)
+            if os.path.exists(d):
+                files[name].append(list_part(d, base, block_size))
+            else:
+                del files[name]
         post = _tf(_shift(read_table(spark, os.path.join(gt, "postings")),
                           base))
         pos = post
@@ -621,7 +640,7 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
     inv.doc_stats = _union("doc_stats")
     inv.docs = _union("docs")
     inv._dead_ords = frozenset(dead)
-    inv._stats_parts = (_union("term_stats"), raw_postings)
+    inv._df_partials = _union("term_stats")
 
     # ---- merged statistics (vocabulary-wide consumers) ----------------
     # the sum _vocab_lookup takes for query terms, over the whole
@@ -634,7 +653,7 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
     # vocabulary (df=0), as after a rebuild; that keeps _fs_thunk's
     # n_unique_terms/flnorm exact. Query terms never read this plan;
     # field_stats, facets, suggest and compaction do.
-    rows = inv._stats_parts[0]
+    rows = inv._df_partials
     if dead:
         rows = rows.unionByName(
             raw_postings.where(in_expr("ord", dead)).select(
@@ -701,6 +720,7 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
         # (the literal tombstone filter and the ord shift are map-side)
         inv._segments = None
         inv._seg_lens = None
+    bind(inv, files)
 
 
 def _merged_field_counts(manifest: dict) -> Optional[dict]:

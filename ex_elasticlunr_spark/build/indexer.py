@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.literals import inline_rows
 from ..functions.udfs import AnalyzerConfig, analyze_postings
+from .files import TABLES, bind, list_part, parquet_files
 
 
 
@@ -96,15 +97,14 @@ def _footer_schema(spark: SparkSession, path: str):
     if (not os.path.isdir(path) or spark.conf.get(
             "spark.sql.parquet.mergeSchema", "false").lower() == "true"):
         return None
-    files = sorted(n for n in os.listdir(path)
-                   if n.endswith(".parquet") and not n.startswith(("_", ".")))
+    files = parquet_files(path)
     if not files:
         return None
     import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
     try:
-        meta = pq.read_schema(os.path.join(path, files[0])).metadata or {}
+        meta = pq.read_schema(files[0]).metadata or {}
     except (OSError, ValueError):  # unreadable footer: let Spark report it
         return None
     raw = meta.get(_SPARK_SCHEMA_KEY)
@@ -336,11 +336,13 @@ class InvertedIndex:
         self._delta_base = None  # the loaded InvertedIndex under pending ops
         self._delta_adds: list = []  # pending fresh sub-indexes (in order)
         self._delta_tombs = None  # pending removal docids (DataFrame)
-        # multi-gen load (build/deltas.py bind_generations): the
-        # driver-held tombstoned ords, and the raw per-generation
-        # (term_stats, postings) unions the query-term df lookup sums
+        # the files behind each bound table (build/files.py: table ->
+        # (bound DataFrame, parts)), and on a multi-gen load
+        # (build/deltas.py bind_generations) the driver-held tombstoned
+        # ords and the union of the generations' df partials
+        self._files: dict = {}
         self._dead_ords: frozenset = frozenset()
-        self._stats_parts = None
+        self._df_partials = None
         # persisted internals this index's retained lazy plans depend on
         # (assign_doc_ordinals' range-partitioned docs) — released in
         # unpersist()/_rebind_from, NOT earlier: a dependent plan that
@@ -1157,8 +1159,9 @@ class InvertedIndex:
         self._delta_adds = []
         self._delta_tombs = None
         self._fs_thunk = None
+        self._files = {}
         self._dead_ords = frozenset()
-        self._stats_parts = None
+        self._df_partials = None
         # the previous binding's persisted ordinal-assignment internals:
         # every lazy plan that depended on them is discarded right here,
         # so the cache blocks can go too (the contract at __init__)
@@ -1246,6 +1249,12 @@ class InvertedIndex:
             if os.path.exists(os.path.join(tp, "seg_lens")):
                 self._seg_lens = read_table(
                     spark, os.path.join(tp, "seg_lens"))
+        if version >= 5:
+            # the files behind the bound tables, for the driver's reads
+            # (build/files.py scan)
+            bind(self, {name: [list_part(os.path.join(tp, name))]
+                        for name in TABLES
+                        if os.path.isdir(os.path.join(tp, name))})
         if manifest.get("generations"):
             from .deltas import bind_generations
 

@@ -32,8 +32,8 @@ from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-# per-session cache of empty local relations: createDataFrame([], ddl)
-# costs ~70ms of py4j/schema parsing per call, and the serving paths
+# per-session cache of empty local relations: building one costs
+# py4j/schema parsing per call, and the serving paths
 # construct their empty-result guard on EVERY query (usually unused).
 # DataFrames are immutable, so one per (session, schema) is safe; weak
 # keys let a replaced session's entries be collected.
@@ -41,14 +41,41 @@ _EMPTY_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def empty_df(spark: SparkSession, schema_ddl: str) -> DataFrame:
-    """A cached empty DataFrame with the given DDL schema (a zero-row
-    JVM local relation — no Python worker, no Spark job to collect)."""
+    """A cached empty DataFrame with the given DDL schema: a
+    never-true filter over one literal row, which the optimizer folds
+    into an empty local relation — no Python worker, no Spark job to
+    collect (``createDataFrame([], ...)`` builds an RDD whose collect
+    runs a job)."""
     per = _EMPTY_CACHE.setdefault(spark, {})
     df = per.get(schema_ddl)
     if df is None:
-        df = spark.createDataFrame([], schema_ddl)
+        cols = ",".join(f"CAST(NULL AS {t}) AS {n}"
+                        for n, t in _ddl_fields(schema_ddl))
+        df = spark.sql(f"SELECT {cols} WHERE false")
         per[schema_ddl] = df
     return df
+
+
+def _ddl_fields(schema_ddl: str) -> list:
+    """``"name type, name type, ..."`` -> [(name, type)], split on
+    top-level commas only: array<...> / struct<...> element types carry
+    commas inside their angle brackets."""
+    fields = []
+    depth = 0
+    cur = ""
+    for ch in schema_ddl:
+        if ch == "," and depth == 0:
+            fields.append(cur.strip())
+            cur = ""
+            continue
+        if ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            depth -= 1
+        cur += ch
+    if cur.strip():
+        fields.append(cur.strip())
+    return [tuple(f.split(None, 1)) for f in fields]
 
 
 def _str_literal(s: str) -> str:
@@ -159,32 +186,13 @@ def inline_rows(spark: SparkSession, rows: Iterable[Sequence],
     """Literal rows -> DataFrame with the given DDL schema
     (``"name type, name type, ..."``), as a JVM-side literal relation
     via ONE ``spark.sql`` VALUES statement — no Python worker anywhere,
-    broadcastable, and zero-task to collect. Falls back to an empty
-    createDataFrame for zero rows (no Python worker for an empty local
-    relation either).
+    broadcastable, and zero-task to collect. Zero rows give
+    :func:`empty_df`.
     """
     rows = list(rows)
     if not rows:
         return empty_df(spark, schema_ddl)
-    # split on top-level commas only: array<...> / struct<...> element
-    # types carry commas inside their angle brackets
-    fields = []
-    depth = 0
-    cur = ""
-    for ch in schema_ddl:
-        if ch == "," and depth == 0:
-            fields.append(cur.strip())
-            cur = ""
-            continue
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        cur += ch
-    if cur.strip():
-        fields.append(cur.strip())
-    names = [f.split(None, 1)[0] for f in fields]
-    types = [f.split(None, 1)[1] for f in fields]
+    names, types = zip(*_ddl_fields(schema_ddl))
     values = ",".join(
         "(" + ",".join(_sql_literal(v) for v in row) + ")"
         for row in rows)

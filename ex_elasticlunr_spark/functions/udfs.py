@@ -95,15 +95,7 @@ class AnalyzerConfig:
         do_trim = "trim" in self.stages
         do_stop = "stop" in self.stages
         do_stem = "stem" in self.stages
-        stem_cache: dict = {}
-
-        def stem1(t: str) -> str:
-            s = stem_cache.get(t)
-            if s is None:
-                s = porter2.stem(t)
-                stem_cache[t] = s
-            return s
-
+        stem1 = _stem
         extra = self.extra
         sep = self.separator
         ascii_mode = not self.unicode
@@ -158,10 +150,27 @@ POSTINGS_SCHEMA_NOPOS = (
 
 ORD_STRIDE = 1 << 33  # ingest-ordinal space per input partition
 
-# worker-lifetime stem cache (term -> stem): vocabulary-sized, shared
-# across tasks by reused Python workers because this module is shipped
-# to executors by import, not pickled by value (guide §4.5)
+# worker-lifetime stem cache (term -> stem), shared across tasks by
+# reused Python workers because this module is shipped to executors by
+# import, not pickled by value (guide §4.5). Bounded: past
+# _STEM_CACHE_MAX entries the oldest goes first, so a worker's memory
+# does not grow with the vocabulary.
 _STEM_CACHE: dict = {}
+_STEM_CACHE_MAX = 1 << 16
+
+
+def _stem(term: str) -> str:
+    """porter2 stem of ``term`` through the worker's bounded cache."""
+    s = _STEM_CACHE.get(term)
+    if s is None:
+        s = porter2.stem(term)
+        while len(_STEM_CACHE) >= _STEM_CACHE_MAX:
+            try:
+                _STEM_CACHE.pop(next(iter(_STEM_CACHE)), None)
+            except (StopIteration, RuntimeError):
+                break  # emptied or resized by another thread
+        _STEM_CACHE[term] = s
+    return s
 
 
 def analyze_postings(stacked, configs: dict, positions: bool = True,
@@ -207,7 +216,6 @@ def analyze_postings(stacked, configs: dict, positions: bool = True,
 
     def run(batches):
         from ..analysis.stop_words import STOP_WORDS
-        from ..analysis import porter2
         from ..analysis.tokenizer import tokenize, tokenize_raw
         from ..analysis.trimmer import trim_str
         from ..analysis.token import Token
@@ -217,14 +225,7 @@ def analyze_postings(stacked, configs: dict, positions: bool = True,
         # (spark.python.worker.reuse, the default) keeps the stemmed
         # vocabulary across tasks instead of re-stemming it per task
         # (guide §4.5)
-        stem_cache = _STEM_CACHE
-
-        def stem1(t):
-            s = stem_cache.get(t)
-            if s is None:
-                s = porter2.stem(t)
-                stem_cache[t] = s
-            return s
+        stem1 = _stem
 
         if with_ord:
             from pyspark import TaskContext

@@ -26,18 +26,6 @@ from .build.indexer import InvertedIndex, build_index
 from .dsl.executor import QueryExecutor
 from .functions.udfs import AnalyzerConfig
 
-# Selectivity gate for routing SINGLE-clause terms/match queries to the
-# block-max WAND path (see Index._route_wand): route only when every
-# query term's cached document frequency is below this fraction of the
-# field's doc count. The round-5 interleaved A/B measured the
-# exhaustive plan 1.2-1.7x faster at df/N ~ 0.4-0.8 (nothing for
-# block-max to skip); selective terms are where WAND's pruning pays.
-# 5% is conservative — well inside the routed-wins regime — and the
-# gate consults only driver-cached stats (zero jobs), so cold queries
-# keep the measured exhaustive default.
-WAND_SINGLE_CLAUSE_MAX_DF_FRAC = 0.05
-
-
 class Index:
     def __init__(self, name: str = "index", ref: str = "id",
                  store_positions: bool = True,
@@ -501,12 +489,13 @@ class Index:
 
     def _route_wand(self, query, top_k, options, mode: str,
                     include_details: bool, kw: dict):
-        """Opportunistic block-max WAND routing for ``search()``: a
-        finite top-k MULTI-CLAUSE query — the string-search sugar
-        (every field in one segments pass) or a bool of two or more
-        terms/match leaves — on an index whose segments are ALREADY
-        bound (a loaded v5 warehouse, or after any explicit
-        search_wand call) serves through the fast path —
+        """Block-max WAND routing for ``search()``: a finite top-k
+        terms/match query — a single terms/match leaf (exact terms,
+        ``operator: and``/msm, prefix, fuzzy or regex expansion), the
+        string-search sugar (every field in one segments pass), or a
+        bool of terms/match leaves — on an index whose segments are
+        ALREADY bound (a loaded v5 warehouse, or after any explicit
+        search_wand call) serves through ``search/wand.py`` —
         rank-identical by the tests/test_segments_wand.py identity
         suites, and pinned routed==unrouted by
         tests/test_wand_routing.py. Returns None (caller falls through
@@ -515,19 +504,12 @@ class Index:
         its own (a one-off query on a fresh in-memory index must not
         pay the encode).
 
-        SINGLE-clause queries deliberately stay on the exhaustive
-        plan: an interleaved routed-vs-exhaustive A/B at bench scale
-        (BENCH/r05_wand_modes.json, quiet window, both scoring modes)
-        measured the one-scan one-aggregation exhaustive plan 1.2-1.7x
-        faster — this corpus's query terms sit in 40-80% of documents,
-        so block-max pruning cannot skip anything and WAND pays its
-        metadata/bound overhead for nothing; cold first-query cost is
-        parity. WAND earns its keep exactly where it replaces
-        multi-clause plan composition (bool shapes measured 1.1-1.9x
-        faster routed; the multi-field sugar at parity with one
-        segments pass instead of per-field scans). Explicit
-        search_wand/search_wand_text remain for callers whose corpora
-        have the idf skew block pruning feeds on."""
+        Every eligible leaf takes this one route, whatever its terms'
+        density or the state of the caches: on a bound warehouse the
+        driver-served plan reads its rows from the snapshot's files
+        (build/files.py) and runs no Spark job, which no exhaustive
+        plan can match. ``DRIVER_SERVE_BYTES`` (search/wand.py) still
+        sends oversize candidate sets to the distributed WAND plan."""
         import os as _os
 
         if (include_details or not isinstance(top_k, int) or top_k <= 0
@@ -546,8 +528,8 @@ class Index:
             served = [f for f in self.analyzers
                       if boosts is None or boosts.get(f, 0) > 0]
             if len(served) < 2:
-                # one served field degenerates to a single clause —
-                # exhaustive plan (docstring)
+                # one served field: the executor's single-field plan
+                # (the sugar's per-field analysis and boosts)
                 return None
             return self.search_wand_text(query, top_k=top_k,
                                          field_boosts=boosts, mode=mode,
@@ -576,15 +558,6 @@ class Index:
                 # boost <= 0 zeroes clause scores and the executor's
                 # score>0 filter then decides membership — keep that
                 # edge on the exhaustive path
-                return None
-            if n.expand:
-                # prefix expansion resolves to MANY vocabulary terms:
-                # the WAND candidate set is then wide and individually
-                # rare, diluting block pruning, while the exhaustive
-                # plan is one pushed-StartsWith scan + one aggregation
-                # — measured 2-4x faster at bench scale (fuzzy/regex
-                # stay routed: their edit-ball/match sets are small).
-                # search_wand(expand=True) remains for explicit use.
                 return None
             return n
 
@@ -620,8 +593,7 @@ class Index:
                     return None
                 leaves.append((s, "optional"))
             if len(leaves) < 2:
-                # a single-leaf bool degenerates to a single-clause
-                # query — exhaustive wins there (docstring)
+                # a one-leaf bool keeps the executor's bool algebra
                 return None
             from .search.wand import resolve_clause, wand_topk_multi
 
@@ -638,41 +610,15 @@ class Index:
                                    mode=mode, msm=node.effective_msm(),
                                    **kw)
 
-        # single-clause terms/match: exhaustive plan BY DEFAULT (the
-        # interleaved A/B measured it 1.2-1.7x faster than routed in
-        # both modes at bench scale — but that measurement is
-        # corpus-dependent: its query terms sat in 40-80% of documents,
-        # where block-max pruning cannot skip). On idf-SKEWED corpora
-        # selective single-term top-k is exactly where WAND wins, so
-        # gate the fallthrough on a ZERO-JOB selectivity signal: when
-        # every query term's df is already in the per-binding term
-        # statistics memo (search/scorer.py _vocab_lookup, filled by
-        # every WAND, phrase and exhaustive lookup) and the densest term
-        # is provably selective, route through the same wand_topk the
-        # pinned search_wand identity suites cover. Cold caches or dense
-        # terms keep the measured exhaustive default, and the gate
-        # itself never runs a job.
         leaf = _leaf(node)
-        if (leaf is None or leaf.expand or leaf.fuzziness or leaf.regex
-                or leaf.boost != 1.0):
-            return None
-        inv = self.inverted
-        fcache = getattr(inv, "_fstats_local_cache", None)
-        vcache = getattr(inv, "_vocab_local_cache", None)
-        if (fcache is None or fcache[0] is not inv.field_stats
-                or vcache is None or vcache[0] is not inv.term_stats):
-            return None
-        fr = fcache[1].get(leaf.field)
-        n_docs = int(fr["n_docs"]) if fr else None
-        hits = [vcache[1].get((leaf.field, t)) for t in set(leaf.terms)]
-        if (not n_docs or not hits or any(h is None for h in hits)
-                or max(h[0] for h in hits)
-                > WAND_SINGLE_CLAUSE_MAX_DF_FRAC * n_docs):
+        if leaf is None:
             return None
         from .search.wand import wand_topk
 
-        return wand_topk(inv, leaf.field, list(leaf.terms), k=top_k,
-                         mode=mode,
+        return wand_topk(self.inverted, leaf.field, list(leaf.terms),
+                         k=top_k, mode=mode, boost=leaf.boost,
+                         expand=leaf.expand, fuzziness=leaf.fuzziness,
+                         regex=leaf.regex,
                          msm=max(leaf.minimum_should_match, 1), **kw)
 
     def facet(self, query, field: str, top_n: int = 10,

@@ -35,7 +35,7 @@ from typing import Dict, Optional, Union
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.literals import in_expr, inline_rows
+from ..functions.literals import empty_df, in_expr, inline_rows
 
 
 def related_documents(
@@ -257,12 +257,15 @@ def search_many(
     from .scorer import _fstats_local
 
     fr0 = _fstats_local(index).get(field)
-    fstats = F.broadcast(inline_rows(
-        index.postings.sparkSession,
-        [(field, fr0["flnorm"], fr0["n_docs"], fr0["avg_doc_len"])]
-        if fr0 is not None else [],
-        "field string, flnorm double, n_docs long, avg_doc_len double"))
-    entries = entries.join(fstats, "field")
+    if fr0 is None:
+        return empty_df(
+            spark, "query_id string, docid string, score double, rank long")
+    # the field's statistics ride as literal columns: a broadcast of
+    # even a one-row relation costs a Spark job to build
+    entries = entries.select(
+        "*", F.lit(fr0["flnorm"]).cast("double").alias("flnorm"),
+        F.lit(fr0["n_docs"]).cast("long").alias("n_docs"),
+        F.lit(fr0["avg_doc_len"]).cast("double").alias("avg_doc_len"))
 
     # shared formula source (search/scorer.py): bm25 sums qw-weighted
     # entries, elasticlunr takes the max (qw ignored by contract)

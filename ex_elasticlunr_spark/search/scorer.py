@@ -42,8 +42,8 @@ from typing import List, Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.literals import (
-    array_lit, empty_df, in_expr, inline_rows, sql_eq, sql_in)
+from ..build.files import prefix_range, scan, to_sql
+from ..functions.literals import array_lit, empty_df, in_expr, inline_rows
 
 
 CHECKPOINT_PHRASE_HITS = True  # see phrase_scores
@@ -106,20 +106,18 @@ def _empty_schema(key: str, with_details: bool) -> str:
 
 
 def _fstats_local(index) -> dict:
-    """field -> field_stats Row, collected ONCE per binding (memoized by
-    the field_stats DataFrame's object identity — every maintenance op
-    returns a new object and ``_rebind_from`` reassigns the attribute,
-    so a stale cache cannot survive a mutation). Shared by the WAND
-    clause resolver and the exhaustive scorer's inline fstats relation:
-    one Spark job per binding instead of one broadcast-build per query."""
+    """field -> field_stats row (a dict), read ONCE per binding
+    (memoized by the field_stats DataFrame's object identity — every
+    maintenance op returns a new object and ``_rebind_from`` reassigns
+    the attribute, so a stale cache cannot survive a mutation). Shared
+    by the WAND clause resolver and the exhaustive scorer's inline
+    fstats relation."""
     src = index.field_stats
     cache = getattr(index, "_fstats_local_cache", None)
     if cache is None or cache[0] is not src:
-        cache = (src, {
-            r["field"]: r
-            for r in src.select("field", "flnorm", "n_docs",
-                                "avg_doc_len").collect()
-        })
+        rows = scan(index, "field_stats",
+                    ["field", "flnorm", "n_docs", "avg_doc_len"])
+        cache = (src, {r["field"]: r for r in rows.to_pylist()})
         index._fstats_local_cache = cache
     return cache[1]
 
@@ -129,15 +127,20 @@ def _fstats_local(index) -> dict:
 _VOCAB_CACHE_MAX = 1 << 16
 
 
-def _pairs_cond(pairs) -> Column:
+def _pairs_dnf(pairs) -> list:
     """``(field = f AND term IN (...)) OR ...`` over (field, term)
-    pairs, parsed once (pushes into the term-clustered scans)."""
+    pairs, as a build/files.py predicate (term-clustered tables prune
+    to the query's row groups)."""
     by: dict = {}
     for f, t in pairs:
         by.setdefault(f, set()).add(t)
-    return F.expr(" OR ".join(
-        "(" + sql_eq("field", f) + " AND " + sql_in("term", sorted(ts))
-        + ")" for f, ts in sorted(by.items())))
+    return [(("field", "==", f), ("term", "in", sorted(ts)))
+            for f, ts in sorted(by.items())]
+
+
+def _pairs_cond(pairs) -> Column:
+    """:func:`_pairs_dnf` as one parsed Spark Column."""
+    return F.expr(to_sql(_pairs_dnf(pairs)))
 
 
 def _vocab_lookup(index, pairs, partials: Optional[dict] = None) -> dict:
@@ -146,14 +149,16 @@ def _vocab_lookup(index, pairs, partials: Optional[dict] = None) -> dict:
     statistics goes through here (exact terms, expansions, the phrase
     gate, WAND clauses, ``search_many``), memoized per binding.
 
-    The misses cost ONE Spark job that collects, for those terms only,
-    each generation's df partial and the tombstoned postings (pushed
-    In(term) scans over ``index._stats_parts``, the dead ords as a
-    literal); the sum is taken here, idf = 1 + log10(N / (df + 1)) with
-    N from field_stats. A single-generation index is the one-part case:
-    its ``term_stats`` and no tombstones. ``partials`` ({pair: summed
-    df partial}, from an expansion's vocabulary collect) saves the
-    partial scan for those pairs.
+    The misses read, for those terms only, each generation's df
+    partial and the tombstoned postings (``build/files.py scan`` of
+    ``term_stats`` and of the raw ``postings`` under the dead ords);
+    the sum is taken here, idf = 1 + log10(N / (df + 1)) with N from
+    field_stats. On a bound warehouse that is a pyarrow read of the
+    snapshot's files and no Spark job; on an unsaved index one job per
+    table read. A single-generation index is the one-part case with no
+    tombstones. ``partials`` ({pair: summed df partial}, from an
+    expansion's vocabulary read) saves the partial read for those
+    pairs.
 
     The memo is keyed by the ``term_stats`` object's identity (every
     content change assigns a new one). This call's results are kept in
@@ -174,21 +179,21 @@ def _vocab_lookup(index, pairs, partials: Optional[dict] = None) -> dict:
             out[p] = v
     if not missing:
         return out
-    ts, raw = index._stats_parts or (src, None)
     known = partials or {}
-    scans = []
+    sums = {p: known.get(p, 0) for p in missing}
     need = [p for p in missing if p not in known]
     if need:
-        scans.append(ts.where(_pairs_cond(need)).select("field", "term", "df"))
+        t = scan(index, "term_stats", ["field", "term", "df"],
+                 _pairs_dnf(need))
+        for f, term, df in zip(*(t.column(i).to_pylist() for i in range(3))):
+            sums[(f, term)] += df
     if index._dead_ords:
-        scans.append(raw.where(_pairs_cond(missing))
-                     .where(in_expr("ord", sorted(index._dead_ords)))
-                     .select("field", "term",
-                             F.lit(-1).cast("long").alias("df")))
-    sums = {p: known.get(p, 0) for p in missing}
-    if scans:
-        for r in reduce(DataFrame.unionByName, scans).collect():
-            sums[(r["field"], r["term"])] += r["df"]
+        dead = ("ord", "in", index._dead_ords)
+        t = scan(index, "postings", ["field", "term"],
+                 [conj + (dead,) for conj in _pairs_dnf(missing)],
+                 live=False)
+        for f, term in zip(t.column(0).to_pylist(), t.column(1).to_pylist()):
+            sums[(f, term)] -= 1
     fstats = _fstats_local(index)
     for p, df in sums.items():
         fr = fstats.get(p[0])
@@ -266,29 +271,45 @@ def _query_terms_df(index, field: str, terms: List[str],
 def _expansion_rows(index, field: str, terms: List[str], expand: bool,
                     fuzziness: int, regex: bool) -> Optional[list]:
     """(qt_idx, qt, term, df, idf) rows of a prefix/fuzzy/regex
-    expansion: ONE capped collect of :func:`_query_terms_df` over every
-    generation's vocabulary partials, whose df partials feed
-    :func:`_vocab_lookup` (no further job unless tombstones exist).
-    ``None`` past RESOLVE_INLINE_CAP rows: callers keep the distributed
-    plan."""
+    expansion: ONE capped read of the vocabulary for the matching
+    terms, whose df/idf then come from :func:`_vocab_lookup`. A prefix
+    reads ``term_stats`` through ``build/files.py scan`` as
+    ``t <= term < succ(t)`` ranges (row groups prune; no Spark job on
+    a bound warehouse), and its df partials save the lookup's own
+    read. Fuzzy and regex matches need the JVM's levenshtein/regex and
+    collect :func:`_query_terms_df` over every generation's vocabulary
+    partials in one job. ``None`` past RESOLVE_INLINE_CAP rows: callers
+    keep the distributed plan."""
     from .wand import RESOLVE_INLINE_CAP, _collect_limit_one_job
 
-    vocab = (index._stats_parts[0] if index._stats_parts
-             else index.term_stats.select("field", "term", "df"))
-    got = _collect_limit_one_job(
-        _query_terms_df(index, field, terms, expand, fuzziness,
-                        regex=regex, vocab=vocab), RESOLVE_INLINE_CAP + 1)
-    if len(got) > RESOLVE_INLINE_CAP:
+    cap = RESOLVE_INLINE_CAP + 1
+    partial: Optional[dict] = None
+    if expand and not regex:
+        t = scan(index, "term_stats", ["term", "df"],
+                 [(("field", "==", field),) + prefix_range(q)
+                  for q in sorted(set(terms))], limit=cap)
+        n = t.num_rows
+        partial = {}  # (field, term) -> df summed over generations
+        for term, df in zip(t.column(0).to_pylist(),
+                            t.column(1).to_pylist()):
+            partial[(field, term)] = partial.get((field, term), 0) + df
+        got = {(qi, term) for _, term in partial
+               for qi, q in enumerate(terms) if term.startswith(q)}
+    else:
+        vocab = (index._df_partials if index._df_partials is not None
+                 else index.term_stats)
+        rows = _collect_limit_one_job(
+            _query_terms_df(index, field, terms, expand, fuzziness,
+                            regex=regex, vocab=vocab)
+            .select("qt_idx", "term"), cap)
+        n = len(rows)
+        got = {(r[0], r[1]) for r in rows}
+    if n >= cap:
         return None
-    partial: dict = {}  # (qt_idx, term) -> df summed over generations
-    for r in got:
-        k = (r["qt_idx"], r["term"])
-        partial[k] = partial.get(k, 0) + r["df"]
-    looked = _vocab_lookup(
-        index, [(field, t) for _, t in partial],
-        partials={(field, t): d for (_, t), d in partial.items()})
+    looked = _vocab_lookup(index, [(field, t) for _, t in got],
+                           partials=partial)
     return [(qi, terms[qi], t) + looked[(field, t)]
-            for qi, t in sorted(partial) if looked[(field, t)] is not None]
+            for qi, t in sorted(got) if looked[(field, t)] is not None]
 
 
 def terms_scores(
@@ -527,13 +548,14 @@ def _phrase_adjacency_serve(tbl, terms: List[str], k: int):
     return per_doc, int(uc.size)
 
 
-def _phrase_per_doc_driver(index, field: str, post, key: str,
+def _phrase_per_doc_driver(index, field: str, key: str,
                            terms: List[str], k: int,
                            rows_cap: Optional[int] = None):
     """Driver-serve fast path for phrase hit detection: ONE row-capped
-    Arrow collect of the query terms' position rows, then the same
-    adjacency algebra as the distributed plan (see
-    ``_phrase_adjacency_serve``). Returns a tagged outcome:
+    read of the query terms' position rows (``build/files.py scan`` of
+    ``positions``: pyarrow over the bound files, ``Scanner.head`` as
+    the cap), then the same adjacency algebra as the distributed plan
+    (see ``_phrase_adjacency_serve``). Returns a tagged outcome:
 
       ("served", per_doc_rows, pdf) — integer (key, pf, doc_len) hit
           statistics the caller feeds into the SAME Spark scoring
@@ -549,33 +571,27 @@ def _phrase_per_doc_driver(index, field: str, post, key: str,
     document frequencies (``_vocab_lookup``, the per-binding memo every
     other scorer resolves through) bound the
     positions-row count exactly, so nothing bulk ever moves
-    speculatively (measured: the ungated version spent ~8s
-    row-pickling 130k position rows only to fall back). A term with no
-    stats row cannot match anywhere — that is an immediate empty
-    result, saving the scan entirely.
+    speculatively. A term with no stats row cannot match anywhere —
+    that is an immediate empty result, saving the scan entirely.
 
-    HOT-TERM phrases (df sum over the driver cap — the q8 "hot phrase"
-    battery shape) get a second chance instead of going straight to
-    the distributed plan: the conjunctive candidate set bounds the
-    position rows that actually matter, so the Arrow collect is
-    re-gated on the CONJUNCTION (one row-capped job whose shuffle is
-    the narrow-postings candidate aggregation). Only when even the
-    conjunction is over-cap does the distributed plan run — and then
-    it inherits the candidate relation as a semi-join prune, so its
-    explode is conjunction-bounded too.
-
-    Serving latency is job-count-bound (see wand.py's driver-serve
-    rationale): this replaces the eager hit-set checkpoint job + the
-    pdf aggregation job + the per-doc aggregation's shuffle with one
-    Arrow transfer over the term-clustered positions scan."""
-    from .wand import _arrow_limit_one_job
+    HOT-TERM phrases (df sum over the driver cap) get a second chance
+    instead of going straight to the distributed plan: the conjunctive
+    candidate set bounds the position rows that actually matter, so
+    the candidate keys are collected (one row-capped job whose shuffle
+    is the narrow-postings candidate aggregation) and the position read
+    is restricted to them. Only when even the conjunction is over-cap
+    does the distributed plan run — and then it inherits the candidate
+    relation as a semi-join prune, so its explode is
+    conjunction-bounded too."""
+    from .wand import _collect_limit_one_job
 
     uniq_terms = sorted(set(terms))
     looked = _vocab_lookup(index, [(field, t) for t in uniq_terms])
     if any(v is None for v in looked.values()):
         return ("served", [], 0)  # vocabulary-absent term: no match
     dfs = {t: looked[(field, t)][0] for t in uniq_terms}
-    scan = post.select(key, "term", "ords", "doc_len")
+    conj = (("field", "==", field), ("term", "in", uniq_terms),
+            ("ords", "notnull", None))
     cand_df = None
     if rows_cap is None:
         rows_cap = PHRASE_DRIVER_MAX_ROWS
@@ -588,7 +604,7 @@ def _phrase_per_doc_driver(index, field: str, post, key: str,
         # estimate N * prod(df_i/N) tracks dense synthetic/text corpora
         # well and costs no job (text co-occurrence is positively
         # correlated, so it under-estimates: the 2x margin below plus
-        # the row-capped probe collect keep a wrong guess cheap).
+        # the row-capped candidate collect keep a wrong guess cheap).
         # Dense conjunctions (est ~ sum of dfs — e.g. two terms each in
         # 75% of docs) skip the prune entirely: measured at 100k turns,
         # an unselective intersection shuffle only ADDS latency.
@@ -607,14 +623,17 @@ def _phrase_per_doc_driver(index, field: str, post, key: str,
                     index, field, key, uniq_terms))
             return ("distributed", None)
         cand_df = _phrase_conjunctive_cands(index, field, key, uniq_terms)
-        # exactly one positions row per (term, candidate doc), so the
-        # collect below is conjunction-bounded; over-cap conjunctions
-        # hand the candidate relation to the distributed plan instead
-        scan = scan.join(cand_df, key, "left_semi")
-    tbl = _arrow_limit_one_job(scan, rows_cap + 1)
+        # exactly one positions row per (term, candidate doc): more
+        # candidates than the row cap cannot fit
+        cands = _collect_limit_one_job(cand_df, rows_cap + 1)
+        if len(cands) > rows_cap:
+            return ("distributed", cand_df)
+        conj += ((key, "in", [r[0] for r in cands]),)
+    tbl = scan(index, "positions", [key, "term", "ords", "doc_len"],
+               [conj], limit=rows_cap + 1)
     # num_rows <= cap proves the limit truncated nothing (belt over the
     # stats gate: serving a TRUNCATED scan would change semantics)
-    if tbl is None or tbl.num_rows > rows_cap:
+    if tbl.num_rows > rows_cap:
         return ("distributed", cand_df)
     if tbl.num_rows == 0:
         return ("served", [], 0)
@@ -689,7 +708,7 @@ def phrase_scores(
         # CHECKPOINT_PHRASE_HITS=False doubles as the "keep the full
         # distributed lineage inspectable" switch (plan-shape tests) —
         # the driver path, like the checkpoint, would hide the scan
-        res = _phrase_per_doc_driver(index, field, post, key, terms, k,
+        res = _phrase_per_doc_driver(index, field, key, terms, k,
                                       rows_cap=rows_cap)
         outcome = res[0]
         if outcome == "distributed":

@@ -77,11 +77,14 @@ by int64 ordinals.
 
 Serving latency: when the coverage-pruned candidate payload fits the
 DRIVER_SERVE_BYTES cap, the query is served FROM THE DRIVER
-(_serve_from_driver): one pushed-filter collect of the candidate
-blocks, the same pure-Python codec decode, vectorized clause algebra,
-one ordinal->docid boundary lookup — 4 Spark jobs per warm query
-instead of ~14 (the Lucene/ES search-head shape: the INDEX is
-distributed; the scorer of a selective query need not be). Oversize
+(_serve_from_driver): a read of the candidate blocks, the same
+pure-Python codec decode, vectorized clause algebra, one
+ordinal->docid boundary lookup (the Lucene/ES search-head shape: the
+INDEX is distributed; the scorer of a selective query need not be).
+Its block metadata, payloads, len blocks and docids come through
+``build/files.py scan``: on a bound warehouse pyarrow reads them from
+the snapshot's files, so a driver-served query runs NO Spark job (a
+fuzzy or regex clause pays one, for its vocabulary match). Oversize
 candidate sets fall through to the distributed plan above;
 tests/test_segments_wand.py TestDriverServe pins identity between the
 two.
@@ -90,12 +93,12 @@ two.
 from __future__ import annotations
 
 import math
-import threading
 from dataclasses import dataclass
 from typing import Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..build.files import limit_one_job, scan
 from ..build.segments import (
     DEFAULT_BLOCK_SIZE,
     decode_segments,
@@ -123,18 +126,16 @@ EPS = 1e-9
 # not a guess: big indexes take the pruned path, small ones one pass.
 SINGLE_PHASE_ENTRIES = 1 << 18
 # driver-serve cap: when the coverage-pruned candidate payload is this
-# small, the whole query is served FROM THE DRIVER — one collect of the
-# candidate blocks (pushed-filter scan), pure-Python decode (the same
-# codec as the distributed mapInPandas), clause algebra in-process, and
-# one ordinal->docid lookup for the top boundary. That is the Lucene/ES
-# search-head shape: the index is distributed, the scorer for a
-# selective query is not. 4 Spark jobs per warm query instead of ~14 —
-# serving latency is job-count-bound. 64 MiB ~= 29M posting entries
-# (codec v2 ~2.2 B/entry): a ~1s collect + vectorized numpy pass,
-# measured ~2x faster than the distributed plan even for
-# every-term-hot queries at 1M turns (~14 MB); queries over the cap
-# take the distributed plan below. Set to 0 to force the distributed
-# plan (tests pin identity between both).
+# small, the whole query is served FROM THE DRIVER — one read of the
+# candidate blocks (pyarrow over a bound warehouse's files: no Spark
+# job), pure-Python decode (the same codec as the distributed
+# mapInPandas), clause algebra in-process, and one ordinal->docid
+# lookup for the top boundary. That is the Lucene/ES search-head
+# shape: the index is distributed, the scorer for a selective query is
+# not. 64 MiB ~= 29M posting entries (codec v2 ~2.2 B/entry): a read +
+# vectorized numpy pass; queries over the cap take the distributed plan
+# below. Set to 0 to force the distributed plan (tests pin identity
+# between both).
 DRIVER_SERVE_BYTES = 64 << 20
 # estimated bytes per candidate len block (codec v2 side table) counted
 # against DRIVER_SERVE_BYTES in bm25 mode; measured ~8 KB/block at 2M
@@ -149,11 +150,6 @@ _META_SCHEMA = (
     "boost double, cmsm long, avgdl double, req int, neg int"
 )
 _PRUNE_SCHEMA = "cid int, term string, pbound double"
-
-# serializes the session-conf set/collect/restore in
-# _collect_limit_one_job (the conf is session-global)
-_LIMIT_CONF_LOCK = threading.Lock()
-
 
 @dataclass
 class WandClause:
@@ -216,57 +212,9 @@ def resolve_clause(index, field: str, terms: Sequence[str],
 
 
 def _collect_limit_one_job(df: DataFrame, n: int) -> list:
-    """``df.limit(n).collect()`` in ONE Spark job. CollectLimit's
-    incremental execution (scan 1 partition, then 4, 20, ... —
-    spark.sql.limit.scaleUpFactor) is right for exploratory limits over
-    huge inputs but wrong for a serving-path metadata collect over a
-    pushed-filter scan: it turns one cheap job into five. The initial
-    partition count is a runtime SQL conf — raise it for just this
-    collect so the first round covers every partition.
-
-    The set/collect/restore triple runs under a module lock: the conf
-    is session-global, and two serving threads interleaving it could
-    leak the raised value into the session (thread B reads A's 1<<20
-    as its restore target) or run their own collect with the default.
-    These are short metadata collects, so serializing them costs far
-    less than the 5-job incremental limit the helper exists to avoid."""
-    return _limit_one_job(df, n, lambda d: d.collect())
-
-
-def _arrow_limit_one_job(df: DataFrame, n: int):
-    """``df.limit(n).toArrow()`` in ONE Spark job (same incremental-limit
-    rationale as _collect_limit_one_job). Arrow transfer matters when the
-    rows carry ARRAY columns: py4j row pickling measured ~8s for 130k
-    position rows where toArrow moves the same batch in ~0.7s. Returns
-    ``None`` when this Spark build has no DataFrame.toArrow (callers
-    fall back to their distributed plan)."""
-    if not hasattr(df, "toArrow"):
-        return None
-    try:
-        return _limit_one_job(df, n, lambda d: d.toArrow())
-    except ImportError:
-        # toArrow exists but pyarrow is not installed (an optional
-        # extra on plain pip installs) — PySpark raises its
-        # PySparkImportError subclass of ImportError at call time
-        return None
-
-
-def _limit_one_job(df: DataFrame, n: int, run):
-    spark = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    with _LIMIT_CONF_LOCK:
-        try:
-            old = spark.conf.get(key, None)
-        except Exception:  # conf not present on this Spark build
-            return run(df.limit(n))
-        try:
-            spark.conf.set(key, str(1 << 20))
-            return run(df.limit(n))
-        finally:
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
+    """``df.limit(n).collect()`` in ONE Spark job (build/files.py
+    ``limit_one_job``)."""
+    return limit_one_job(df, n, lambda d: d.collect())
 
 
 def _clause_stats(index, clauses: List[WandClause], mode: str) -> list:
@@ -330,24 +278,26 @@ def _restrict_triples(cand: DataFrame, triples) -> DataFrame:
     return cand.where(cond)
 
 
-def _serve_from_driver(index, segments, stats, by_cid, good, meta_rows,
+def _serve_from_driver(index, stats, by_cid, good, meta_rows,
                        k: int, mode: str, k1: float, b: float, msm: int,
                        block_size: int):
-    """Serve a single-phase query entirely from the driver: one
-    pushed-filter collect of the candidate block payloads (+ their len
-    blocks in bm25 mode), the SAME pure-Python codec decode the
-    distributed mapInPandas runs (build/codec.py decode_block), the
-    same clause algebra, then one ordinal->docid lookup for the top-k
-    boundary. Returns None when the query does not qualify (payload
-    too large, boundary tie set too large) —
-    the caller falls through to the distributed plan, so this is only
-    ever a latency fast path, never a semantics change. Identity with
-    the distributed plan is pinned by tests/test_segments_wand.py.
+    """Serve a single-phase query entirely from the driver: one read of
+    the candidate block payloads (+ their len blocks in bm25 mode), the
+    SAME pure-Python codec decode the distributed mapInPandas runs
+    (build/codec.py decode_block), the same clause algebra, then one
+    ordinal->docid lookup for the top-k boundary. Every read goes
+    through ``build/files.py scan``: on a bound warehouse pyarrow over
+    the snapshot's files, so the query runs no Spark job. Returns None
+    when the query does not qualify (payload too large, boundary tie
+    set too large) — the caller falls through to the distributed plan,
+    so this is only ever a latency fast path, never a semantics change.
+    Identity with the distributed plan is pinned by
+    tests/test_segments_wand.py.
 
     Scale shape: the byte cap (DRIVER_SERVE_BYTES) bounds what a query
     may pull to the driver — selective queries over a 100 TB index
-    stay under it because the pushed In(term)/block filters already cut
-    the scan to the query's candidate blocks; broad queries fall back
+    stay under it because the pushed term/block predicates already cut
+    the read to the query's candidate blocks; broad queries fall back
     to the distributed plan the cap exists for."""
     import numpy as np
 
@@ -357,10 +307,10 @@ def _serve_from_driver(index, segments, stats, by_cid, good, meta_rows,
         return None
     tomb = index._dead_ords
 
-    spark = segments.sparkSession
+    spark = index.postings.sparkSession
     # fetch set: the per-clause cross product (terms x good block_ids)
     # actually present in the candidate metadata — pushed as per-clause
-    # In(term) AND In(block_id) filters. It can exceed the good TRIPLES
+    # term AND block_id predicates. It can exceed the good TRIPLES
     # (a term may sit at a block only other terms made good); decoding
     # the extras is correct by construction: the clause msm algebra
     # filters docs exactly, the coverage prune is only a work-saver.
@@ -380,23 +330,23 @@ def _serve_from_driver(index, segments, stats, by_cid, good, meta_rows,
     if fetch_bytes > DRIVER_SERVE_BYTES:
         return None
 
-    cond = F.expr(" OR ".join(
-        "(" + sql_eq("field", by_cid[cid]["field"])
-        + " AND " + sql_in("term", by_cid[cid]["terms"])
-        + " AND " + sql_in("block_id", sorted(bids)) + ")"
-        for cid, bids in gbids.items()))
-    fetch = segments.where(cond).select(
-        "field", "term", "block_id", "payload")
+    seg = scan(index, "segments", ["field", "term", "block_id", "payload"],
+               [(("field", "==", by_cid[cid]["field"]),
+                 ("term", "in", by_cid[cid]["terms"]),
+                 ("block_id", "in", sorted(bids)))
+                for cid, bids in gbids.items()])
+    posts = zip(*(seg.column(c).to_pylist()
+                  for c in ("field", "term", "block_id", "payload")))
+    lens_map: Dict[Tuple[str, int], Tuple] = {}
     if mode != "elasticlunr":
-        lcond = F.expr(" OR ".join(
-            "(" + sql_eq("field", f) + " AND " + sql_in("block_id", sorted(
-                {p[1] for p in fetch_pairs if p[0] == f})) + ")"
-            for f in sorted({p[0] for p in fetch_pairs})))
-        fetch = fetch.unionByName(
-            index.seg_len_blocks(block_size).where(lcond).select(
-                "field", F.lit(None).cast("string").alias("term"),
-                "block_id", "payload"))
-    rows = fetch.collect()  # ONE job
+        lt = scan(index, "seg_lens", ["field", "block_id", "payload"],
+                  [(("field", "==", f), ("block_id", "in", sorted(
+                      {p[1] for p in fetch_pairs if p[0] == f})))
+                   for f in sorted({p[0] for p in fetch_pairs})])
+        for f, bid, pl in zip(*(lt.column(i).to_pylist()
+                                for i in range(3))):
+            lo, lv = decode_block_arrays(pl, bid * block_size)
+            lens_map[(f, bid)] = (lo, lv.astype(np.float64))
 
     # (field, term) -> every clause referencing it (same-field clauses
     # each take their own contribution from one decoded block)
@@ -409,27 +359,16 @@ def _serve_from_driver(index, segments, stats, by_cid, good, meta_rows,
     req_cids = {r[0] for r in stats if r[8]} - neg_cids
     tomb_arr = (np.fromiter(sorted(tomb), dtype=np.int64)
                 if tomb else None)
-    lens_map: Dict[Tuple[str, int], Tuple] = {}
-    posts = []
-    for r in rows:
-        if r["term"] is None:
-            lo, lv = decode_block_arrays(bytes(r["payload"]),
-                                         int(r["block_id"]) * block_size)
-            lens_map[(r["field"], r["block_id"])] = (
-                lo, lv.astype(np.float64))
-        else:
-            posts.append(r)
 
     # per-clause vectorized aggregation (the groupBy(ord) of the
     # distributed exact_scores, via numpy grouping — no per-entry
     # Python loop anywhere)
     parts: Dict[int, list] = {cid: [] for cid in cids}
-    for r in posts:
-        key = (r["field"], r["term"])
+    for field, term, bid, payload in posts:
+        key = (field, term)
         if key not in tmap:  # candidate block of a term no clause kept
             continue
-        oa, tf = decode_block_arrays(bytes(r["payload"]),
-                                     int(r["block_id"]) * block_size)
+        oa, tf = decode_block_arrays(payload, bid * block_size)
         if not oa.size:
             continue
         tfa = tf.astype(np.float64)
@@ -443,7 +382,7 @@ def _serve_from_driver(index, segments, stats, by_cid, good, meta_rows,
             if mode == "elasticlunr":
                 sc = np.sqrt(tfa) * w
             else:
-                lc = lens_map.get((r["field"], r["block_id"]))
+                lc = lens_map.get((field, bid))
                 if lc is None:  # no len block (shouldn't happen; be safe)
                     return None
                 lo, lv = lc
@@ -514,12 +453,9 @@ def _serve_from_driver(index, segments, stats, by_cid, good, meta_rows,
     bound_ords = [oo for oo, s in result.items() if s >= kth]
     if len(bound_ords) > RESOLVE_INLINE_CAP:
         return None
-    _, ordinals = index.segments(block_size)
-    omap = {
-        r["ord"]: r["docid"]
-        for r in ordinals.where(
-            in_expr("ord", bound_ords)).collect()  # ONE job
-    }
+    ot = scan(index, "ordinals", ["ord", "docid"],
+              [(("ord", "in", bound_ords),)])
+    omap = dict(zip(ot.column(0).to_pylist(), ot.column(1).to_pylist()))
     top = sorted(((omap[oo], result[oo]) for oo in bound_ords),
                  key=lambda p: (-p[1], p[0]))[:k]
     # inline literal relation: collecting the result costs ZERO tasks
@@ -566,34 +502,16 @@ def wand_topk_multi(
     # with (segments() may reuse an earlier build)
     block_size = index._segments[0]
 
-    # ---- candidate block metadata (one pushed scan, deduped terms) ----
-    # the scan condition needs only the RESOLVED clause terms (absent
-    # vocabulary terms match no segment rows), so the capped metadata
-    # collect is INDEPENDENT of the _clause_stats vocabulary lookup —
-    # run the two concurrently from a worker thread (the serving floor
-    # is sequential driver round trips, guide §2.6 overlap): two
-    # planning+collect rounds become one round of wall time.
+    # ---- candidate block metadata (one pushed read, deduped terms) -----
+    # the read needs only the RESOLVED clause terms (absent vocabulary
+    # terms match no segment rows)
     pairs = [(c.field, t) for c in clauses for t in c.terms]
     if not pairs:
-        # no clauses (or none with terms): F.expr("") would raise a
-        # ParseException; the pre-overlap code returned empty here via
-        # the empty _clause_stats guard
+        # no clauses (or none with terms): nothing to read or score
         return empty
-    from .scorer import _pairs_cond
+    from .scorer import _pairs_cond, _pairs_dnf
 
-    cond = _pairs_cond(pairs)
-    phys_df = segments.where(cond).select(
-        "field", "term", "block_id", "max_tf_raw", "n_docs", "block_bytes")
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(1) as _pool:
-        # the worker inherits this thread's local properties (job group
-        # included), so its job is counted with the query's
-        phys_fut = _pool.submit(inheritable_thread_target(spark)(
-            _collect_limit_one_job), phys_df, METADATA_CAP + 1)
-        stats = _clause_stats(index, clauses, mode)
+    stats = _clause_stats(index, clauses, mode)
     if not stats:
         return empty
     # a required clause none of whose terms exist in the vocabulary can
@@ -601,6 +519,9 @@ def wand_topk_multi(
     # qualification algebra (no stats rows -> no cid anywhere)
     if req_cids - {row[0] for row in stats}:
         return empty
+    phys = scan(index, "segments",
+                ["field", "term", "block_id", "max_tf_raw", "n_docs",
+                 "block_bytes"], _pairs_dnf(pairs), limit=METADATA_CAP + 1)
     # lazy: the meta broadcast relation and the distributed candidate
     # plan are only needed on the DISTRIBUTED paths — the driver-serve
     # fast path (the common warm-query case) never builds them
@@ -618,7 +539,8 @@ def wand_topk_multi(
             # ONE scan, each (field, term, block) row exactly once; the
             # meta join assigns cids (one output row per clause
             # referencing the term)
-            c = segments.where(cond).join(_meta(), ["field", "term"])
+            c = segments.where(_pairs_cond(pairs)).join(
+                _meta(), ["field", "term"])
             if mode == "elasticlunr":
                 ub = (F.sqrt(F.col("max_tf_raw"))
                       * F.col("w") * F.col("boost"))
@@ -635,19 +557,16 @@ def wand_topk_multi(
         by_cid[row[0]]["terms"].append(row[2])
 
     # ---- driver-side block bookkeeping ---------------------------------
-    # ONE capped metadata collect per query — the RAW (field, term,
-    # block) rows of the candidate scan (pushed In(term) filters; no
-    # meta join: the per-clause fan-out and the ub upper bounds are
-    # computed here in Python from `stats`, bit-identically — same IEEE
-    # doubles, same operation order as the JVM expressions in _cand()).
-    # The rows feed the coverage prune, the seed choice, AND the phase-2
+    # ONE capped metadata read per query — the RAW (field, term, block)
+    # rows of the candidate blocks (pushed term predicates; no meta
+    # join: the per-clause fan-out and the ub upper bounds are computed
+    # here in Python from `stats`, bit-identically — same IEEE doubles,
+    # same operation order as the JVM expressions in _cand()). The rows
+    # feed the coverage prune, the seed choice, AND the phase-2
     # block-max pruning entirely driver-side (each would otherwise be
-    # its own Spark job; at serving latency the job count is the
-    # overhead that matters). Beyond the cap every prune decision moves
-    # back into distributed jobs — never wrong, just more jobs. This
-    # collect was launched above, overlapped with the _clause_stats
-    # vocabulary lookup.
-    phys_rows = phys_fut.result()
+    # its own Spark job). Beyond the cap every prune decision moves back
+    # into distributed jobs — never wrong, just more jobs.
+    phys_rows = phys.to_pylist()
     stats_by_ft: Dict[Tuple[str, str], list] = {}
     for row in stats:
         stats_by_ft.setdefault((row[1], row[2]), []).append(row)
@@ -729,9 +648,9 @@ def wand_topk_multi(
         # byte-capped driver serving (see _serve_from_driver): decodes
         # the SAME fetch set exactly, so it needs neither the θ seed
         # nor the block-max prune — correct in both phase regimes
-        served = _serve_from_driver(index, segments, stats, by_cid,
-                                    good, meta_rows, k, mode, k1, b,
-                                    msm, block_size)
+        served = _serve_from_driver(index, stats, by_cid, good,
+                                    meta_rows, k, mode, k1, b, msm,
+                                    block_size)
         if served is not None:
             return served
         cand = _restrict_triples(_cand(), good_triples)

@@ -253,13 +253,11 @@ def test_map_sugar_routes_and_matches(saved, mode, monkeypatch):
     assert got == want and got
 
 
-def test_single_clause_routes_on_cached_selectivity(spark, tmp_path,
-                                                    monkeypatch):
-    """ADVICE r5: the single-clause exhaustive default is
-    corpus-dependent — on an idf-skewed corpus a SELECTIVE single-term
-    query routes through wand_topk once the term's df is driver-cached
-    (zero-job gate), and the routed result equals the exhaustive plan.
-    Dense terms and cold caches keep the exhaustive default."""
+def test_single_clause_routes_cold_or_warm(spark, tmp_path, monkeypatch):
+    """Every single-clause terms/match leaf on a segments-bound index
+    routes through wand_topk, whether its caches are cold or warm and
+    its term dense or selective; the routed result equals the
+    exhaustive plan's."""
     rows = [(f"d{i}",
              ("zzzrare needle " if i in (3, 7) else "")
              + f"common filler words doc {i}")
@@ -269,7 +267,6 @@ def test_single_clause_routes_on_cached_selectivity(spark, tmp_path,
     idx.add_documents(src, docid_col="docid")
     path = str(tmp_path / "wh")
     idx.inverted.save(path, block_size=64)
-    loaded = Index.load(spark, path)
 
     from ex_elasticlunr_spark.search import wand as wand_mod
 
@@ -282,24 +279,18 @@ def test_single_clause_routes_on_cached_selectivity(spark, tmp_path,
 
     monkeypatch.setattr(wand_mod, "wand_topk", spy)
 
-    q = {"query": {"terms": {"text": "zzzrare"}}}
-    # cold caches: stays exhaustive (no df evidence, no job spent)
-    cold = _rows(loaded.search(q, top_k=10))
-    assert not calls
-    # warm the df memo through the explicit WAND path (its
-    # _clause_stats lookup fills the per-binding term statistics memo)
-    loaded.search_wand("zzzrare", "text", top_k=10).collect()
-    calls.clear()
-    routed = _rows(loaded.search(q, top_k=10))
-    assert calls, "selective cached single clause should route"
-    monkeypatch.setenv("EX_SPARK_NO_WAND_ROUTE", "1")
-    exhaustive = _rows(loaded.search(q, top_k=10))
-    monkeypatch.delenv("EX_SPARK_NO_WAND_ROUTE")
-    assert routed == exhaustive == cold and routed
-
-    # dense term: df/N far above the gate -> exhaustive even warm
-    loaded.search_wand("common", "text", top_k=10).collect()
-    calls.clear()
-    loaded.search({"query": {"terms": {"text": "common"}}},
-                  top_k=10).collect()
-    assert not calls
+    for term in ("zzzrare", "common"):  # selective, then dense
+        loaded = Index.load(spark, path)
+        q = {"query": {"terms": {"text": term}}}
+        # cold caches: no df or field statistics read yet
+        assert "_vocab_local_cache" not in loaded.inverted.__dict__
+        calls.clear()
+        cold = _rows(loaded.search(q, top_k=10))
+        assert calls, "cold single clause should route"
+        calls.clear()
+        routed = _rows(loaded.search(q, top_k=10))  # warm caches
+        assert calls, "warm single clause should route"
+        monkeypatch.setenv("EX_SPARK_NO_WAND_ROUTE", "1")
+        exhaustive = _rows(loaded.search(q, top_k=10))
+        monkeypatch.delenv("EX_SPARK_NO_WAND_ROUTE")
+        assert routed == exhaustive == cold and routed
