@@ -18,8 +18,6 @@ search/     scorers: exhaustive DataFrame scorer (elasticlunr + BM25
             modes) and block-max WAND over compressed segments
 dsl/        query-DSL AST (match/terms/bool/not/match_all) -> DataFrame plan
 sources/    deterministic synthetic transcripts + testdata table loaders
-operators/  training-data pipeline ops: dedup (exact/minhash/simhash/
-            jaccard), ANN similarity search, text quality/lang-id
 streaming/  incremental ingest (structured streaming -> delta segments)
 """
 

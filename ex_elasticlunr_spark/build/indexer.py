@@ -630,8 +630,7 @@ class InvertedIndex:
             the save's serial tail of small jobs into overlapped work —
             on a cluster the same trick keeps executors busy while a
             vocabulary-sized stats job runs."""
-            if len(thunks) == 1 or os.environ.get(
-                    "EX_SPARK_SAVE_OVERLAP") == "0":
+            if len(thunks) == 1:
                 return [t() for t in thunks]
             with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
                 futs = [pool.submit(t) for t in thunks]

@@ -29,6 +29,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.literals import empty_df
 from ..search import scorer
 from .nodes import (
     BoolNode,
@@ -367,7 +368,7 @@ class QueryExecutor:
                 if details:
                     schema += (", matched int, positions "
                                + scorer.EMPTY_POSITIONS)
-                return spark.createDataFrame([], schema)
+                return empty_df(spark, schema)
         else:
             # base (filter/must) docs enter with matched=0 and EMPTY
             # positions — the reference drops clause positions when

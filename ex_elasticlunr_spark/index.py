@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build.indexer import InvertedIndex, build_index
 from .dsl.executor import QueryExecutor
+from .functions.literals import empty_df
 from .functions.udfs import AnalyzerConfig
 
 class Index:
@@ -140,7 +141,7 @@ class Index:
         """
         from pyspark.sql import functions as F
 
-        from .functions.literals import empty_df, in_expr, inline_rows
+        from .functions.literals import in_expr, inline_rows
 
         pipe = self.analyzers[field].to_query_pipeline()
         spark = self.inverted.postings.sparkSession
@@ -448,8 +449,8 @@ class Index:
                 "add_documents() (or load()) before search()")
         ex = self.executor(mode=mode, **kw)
         if query is None:
-            spark = self.inverted.postings.sparkSession
-            return spark.createDataFrame([], "docid string, score double")
+            return empty_df(self.inverted.postings.sparkSession,
+                            "docid string, score double")
         if search_after is None:
             routed = self._route_wand(query, top_k, options, mode,
                                       include_details, kw)
@@ -742,10 +743,9 @@ class Index:
         from pyspark.sql import functions as F
 
         terms = self.analyzers[field].to_query_pipeline().run_terms(word)
-        spark = self.inverted.term_stats.sparkSession
         if not terms:
-            return spark.createDataFrame(
-                [], "term string, df bigint, dist int")
+            return empty_df(self.inverted.term_stats.sparkSession,
+                            "term string, df bigint, dist int")
         term = terms[0]
         t = self.inverted.term_stats.where(F.col("field") == field).where(
             F.length("term").between(len(term) - max_edits,

@@ -66,6 +66,8 @@ def related_documents(
     docid — the cross-engine determinism contract.
     """
     key = index.key_col
+    spark = index.postings.sparkSession
+    empty_schema = "qid string, docid string, score double, rank long"
     post = index.postings.where(F.col("field") == field)
     vocab = index.term_stats.where(F.col("field") == field).select(
         "term", F.col("idf").alias("term_idf"))
@@ -109,8 +111,7 @@ def related_documents(
         terms_list = [r["term"] for r in
                       seeds.select("term").distinct().collect()]
         if not terms_list:
-            return index.postings.sparkSession.createDataFrame(
-                [], "qid string, docid string, score double, rank long")
+            return empty_df(spark, empty_schema)
         cand_post = post.where(in_expr("term", terms_list))
 
     entries = (
@@ -118,15 +119,14 @@ def related_documents(
         .where(F.col(key) != F.col("qid_key"))
         .join(vocab, "term")
     )
-    from .scorer import _fstats_local, entry_score_expr
+    from .scorer import _fstats_cols, entry_score_expr
 
-    fr0 = _fstats_local(index).get(field)
-    fstats = F.broadcast(inline_rows(
-        index.postings.sparkSession,
-        [(fr0["flnorm"],)] if fr0 is not None else [], "flnorm double"))
+    fs_cols = _fstats_cols(index, field)
+    if fs_cols is None:
+        return empty_df(spark, empty_schema)
     entry_score = entry_score_expr("elasticlunr")
     per_doc = (
-        entries.crossJoin(fstats)
+        entries.select("*", *fs_cols)
         .groupBy("qid_key", key)
         .agg(F.round(F.max(entry_score), 6).alias("score"))
     )
@@ -254,18 +254,13 @@ def search_many(
 
     entries = post.join(F.broadcast(matched) if literal_terms is not None
                         else matched, "term")
-    from .scorer import _fstats_local
+    from .scorer import _fstats_cols
 
-    fr0 = _fstats_local(index).get(field)
-    if fr0 is None:
+    fs_cols = _fstats_cols(index, field)
+    if fs_cols is None:
         return empty_df(
             spark, "query_id string, docid string, score double, rank long")
-    # the field's statistics ride as literal columns: a broadcast of
-    # even a one-row relation costs a Spark job to build
-    entries = entries.select(
-        "*", F.lit(fr0["flnorm"]).cast("double").alias("flnorm"),
-        F.lit(fr0["n_docs"]).cast("long").alias("n_docs"),
-        F.lit(fr0["avg_doc_len"]).cast("double").alias("avg_doc_len"))
+    entries = entries.select("*", *fs_cols)
 
     # shared formula source (search/scorer.py): bm25 sums qw-weighted
     # entries, elasticlunr takes the max (qw ignored by contract)

@@ -6,8 +6,7 @@ returns them raw in search results (core/index.ex:258-266), leaving
 snippet assembly to the caller. These operators finish that story:
 
 * :func:`snippet_ords` — token-ordinal snippets, fully relational over
-  the flat postings table (and therefore SQL-oracle-checkable: the
-  DuckDB gate oracle re-derives the same (docid, term, ord) relation).
+  the flat postings table.
 * :func:`highlight_spans` — character-offset spans + excerpt using the
   stored [start0, len0, start1, len1, ...] position arrays joined back
   to the original document text.

@@ -110,8 +110,7 @@ def _fstats_local(index) -> dict:
     (memoized by the field_stats DataFrame's object identity — every
     maintenance op returns a new object and ``_rebind_from`` reassigns
     the attribute, so a stale cache cannot survive a mutation). Shared
-    by the WAND clause resolver and the exhaustive scorer's inline
-    fstats relation."""
+    by the WAND clause resolver and ``_fstats_cols``."""
     src = index.field_stats
     cache = getattr(index, "_fstats_local_cache", None)
     if cache is None or cache[0] is not src:
@@ -120,6 +119,20 @@ def _fstats_local(index) -> dict:
         cache = (src, {r["field"]: r for r in rows.to_pylist()})
         index._fstats_local_cache = cache
     return cache[1]
+
+
+def _fstats_cols(index, field: str) -> Optional[list]:
+    """The field's ``flnorm``, ``n_docs`` and ``avg_doc_len`` as literal
+    columns (None values become NULL literals), or None when the field
+    has no field_stats row — the caller then returns an empty result.
+    Literals rather than a one-row relation: broadcasting even a local
+    relation runs a Spark job."""
+    fr = _fstats_local(index).get(field)
+    if fr is None:
+        return None
+    return [F.lit(fr["flnorm"]).cast("double").alias("flnorm"),
+            F.lit(fr["n_docs"]).cast("long").alias("n_docs"),
+            F.lit(fr["avg_doc_len"]).cast("double").alias("avg_doc_len")]
 
 
 # cap for the per-binding (field, term) -> (df, idf) memo below;
@@ -341,9 +354,9 @@ def terms_scores(
     """
     key = index.key_col
     empty_schema = _empty_schema(key, with_details)
-    if not terms:
-        spark = index.postings.sparkSession
-        return empty_df(spark, empty_schema)
+    fs_cols = _fstats_cols(index, field) if terms else None
+    if fs_cols is None:
+        return empty_df(index.postings.sparkSession, empty_schema)
 
     # hot path scans the narrow clustered postings; the details path
     # needs the positions column, which lives in the flat ingest table
@@ -398,20 +411,7 @@ def terms_scores(
         F.broadcast(matched_terms.withColumnRenamed("df", "term_df")
                     .withColumnRenamed("idf", "term_idf")),
         "term",
-    )
-
-    # per-binding memoized field_stats row -> inline literal relation
-    # (zero-task broadcast; values round-trip bit-exact) instead of a
-    # per-query broadcast build over the field_stats table
-    fr = _fstats_local(index).get(field)
-    # raw Row values (None -> NULL literal): bit-faithful to the old
-    # broadcast join even for degenerate NULL stats
-    fs_rows = ([(field, fr["flnorm"], fr["n_docs"], fr["avg_doc_len"])]
-               if fr is not None else [])
-    fstats = F.broadcast(inline_rows(
-        index.postings.sparkSession, fs_rows,
-        "field string, flnorm double, n_docs long, avg_doc_len double"))
-    entries = entries.join(fstats, "field")
+    ).select("*", *fs_cols)
 
     entry_score = entry_score_expr(mode, k1, b)
     agg_score = (F.max(entry_score) if mode == "elasticlunr"
@@ -677,7 +677,8 @@ def phrase_scores(
     ONLY, and the adjacency test is ONE aggregation keyed by
     (docid, ord - query_idx) — the classic positional-join without any
     per-doc Python or self-join chain. ``pdf`` (global doc frequency of
-    the phrase) is a 1-row broadcast; like terms scoring, it is computed
+    the phrase) is a literal on the driver-served route and a 1-row
+    broadcast on the distributed ones; like terms scoring, it is computed
     on the UNRESTRICTED corpus so clause scores are stable under bool
     composition (terms use global term_stats idf the same way).
     """
@@ -685,13 +686,16 @@ def phrase_scores(
     empty_schema = _empty_schema(key, with_details)
     spark = index.postings.sparkSession
     if not terms:
-        return spark.createDataFrame([], empty_schema)
+        return empty_df(spark, empty_schema)
     src = index.postings_full
     if "ords" not in src.columns:
         raise ValueError(
             "phrase queries need the 'ords' column: this index was built "
             "without positions (store_positions=False) or saved by a "
             "pre-ordinal version — rebuild to enable match_phrase")
+    fs_cols = _fstats_cols(index, field)
+    if fs_cols is None:
+        return empty_df(spark, empty_schema)
     k = len(terms)
     post = src.where(F.col("field") == field) \
               .where(in_expr("term", terms)) \
@@ -724,8 +728,8 @@ def phrase_scores(
         dtypes = dict(post.select(key, "doc_len").dtypes)
         per_doc = inline_rows(
             spark, per_rows,
-            f"{key} {dtypes[key]}, pf bigint, doc_len {dtypes['doc_len']}")
-        pdf_df = inline_rows(spark, [(pdf,)], "pdf bigint")
+            f"{key} {dtypes[key]}, pf bigint, doc_len {dtypes['doc_len']}"
+        ).withColumn("pdf", F.lit(pdf).cast("long"))
         if restrict is not None:
             per_doc = per_doc.join(restrict.select(key), key, "left_semi")
     elif not with_details:
@@ -782,7 +786,7 @@ def phrase_scores(
         pdf_df = hits.agg(F.count(F.lit(1)).alias("pdf"))
         if restrict is not None:
             hits = hits.join(restrict.select(key), key, "left_semi")
-        per_doc = hits
+        per_doc = hits.crossJoin(F.broadcast(pdf_df))
     else:
         # with_details keeps the per-occurrence explode: it must carry
         # each occurrence's (start, len) character offsets into the
@@ -821,17 +825,10 @@ def phrase_scores(
                         F.array_sort(F.flatten(F.collect_list("occ_pos"))),
                         lambda s: F.array(s["s"], s["l"]),
                     )).alias("pos_arr")]
-        per_doc = hits.groupBy(key).agg(*per_aggs)
+        per_doc = hits.groupBy(key).agg(*per_aggs) \
+            .crossJoin(F.broadcast(pdf_df))
 
-    # per-binding memoized field_stats row -> inline literal relation
-    # (zero-task broadcast) instead of a per-query broadcast build; raw
-    # Row values keep NULL fidelity with the old join
-    fr = _fstats_local(index).get(field)
-    fs_rows = ([(fr["flnorm"], fr["n_docs"], fr["avg_doc_len"])]
-               if fr is not None else [])
-    fstats = F.broadcast(inline_rows(
-        spark, fs_rows, "flnorm double, n_docs long, avg_doc_len double"))
-    scored = per_doc.crossJoin(F.broadcast(pdf_df)).crossJoin(fstats)
+    scored = per_doc.select("*", *fs_cols)
 
     if mode == "elasticlunr":
         idf = F.lit(1.0) + F.log10(

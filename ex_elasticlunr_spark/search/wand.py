@@ -139,7 +139,7 @@ SINGLE_PHASE_ENTRIES = 1 << 18
 DRIVER_SERVE_BYTES = 64 << 20
 # estimated bytes per candidate len block (codec v2 side table) counted
 # against DRIVER_SERVE_BYTES in bm25 mode; measured ~8 KB/block at 2M
-# turns (BENCH/r04_codec_bytes.json), doubled for safety
+# turns, doubled for safety
 LEN_BLOCK_EST_BYTES = 16 << 10
 # above this many boundary ordinals the docid resolve would push a
 # silly In() list — fall back to the distributed tail

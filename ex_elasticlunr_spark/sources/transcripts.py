@@ -78,46 +78,6 @@ def transcripts_df(spark: SparkSession, n_convs: int,
     return df
 
 
-def distributed_transcripts_df(spark: SparkSession, n_convs: int,
-                               turns_per_conv: int = 8, seed: int = 42,
-                               partitions: int = 32) -> DataFrame:
-    """Scale path: generate on executors (one range-partition per task)
-    instead of the driver — same rows as transcripts_df for the same
-    (n_convs, turns_per_conv, seed) only per conv, since each conv's
-    text stream is seeded independently here."""
-    conv_ids = spark.range(n_convs, numPartitions=partitions)
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("conv_id", "turn_idx", "role", "text", "tool", "ts")}
-            for c in pdf["id"]:
-                rng = random.Random((seed, int(c)).__hash__() & 0x7FFFFFFF)
-                conv_id = f"conv-{int(c):06d}"
-                for t in range(turns_per_conv):
-                    n_words = rng.randint(4, 24)
-                    out["conv_id"].append(conv_id)
-                    out["turn_idx"].append(t)
-                    out["role"].append(ROLES[t % 3])
-                    out["text"].append(
-                        " ".join(rng.choice(VOCAB) for _ in range(n_words))
-                    )
-                    out["tool"].append(rng.choice(TOOLS))
-                    out["ts"].append(
-                        EPOCH + _dt.timedelta(
-                            seconds=60 * (int(c) * turns_per_conv + t))
-                    )
-            yield pd.DataFrame(out)
-
-    return conv_ids.mapInPandas(
-        gen,
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp",
-    )
-
-
 def with_docid(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "docid", F.concat_ws(":", F.col("conv_id"), F.col("turn_idx"))

@@ -70,10 +70,7 @@ def await_terminated(query, secs: int) -> None:
     it before raising if it overruns. ``awaitTermination(timeout)``
     returning False is not a pass: the query keeps scheduling
     micro-batches in its (usually shared) SparkSession and degrades
-    everything that runs after it — the failure mode
-    ``sessionize_stream`` had with processing-time timers under
-    availableNow replays. One definition serves the test suite and the
-    gate battery."""
+    everything that runs after it."""
     if not query.awaitTermination(secs):
         query.stop()
         query.awaitTermination(60)

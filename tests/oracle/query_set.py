@@ -1,9 +1,8 @@
 """The reference query set (FIXTURES.md §3, adapted from the
 reference's dsl_test.exs cases) as a single source of truth for the
 rank-identity referee: tests/test_spark_engine.py proves rate == 1.0
-per query, bench.py measures and reports the rate in its JSON line
-(the BASELINE.json headline metric is "BM25 top-10 rank-identity rate
-on the reference query set").
+per query (the BASELINE.json headline metric is "BM25 top-10
+rank-identity rate on the reference query set").
 
 `reference_query_set(field)` parameterizes the searched field so the
 same cases run over the golden corpus ("content") and the transcripts

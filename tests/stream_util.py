@@ -1,8 +1,8 @@
 """Shared helper: a bounded (availableNow) test stream must TERMINATE.
 
-Thin re-export — the real guard lives in the package
-(ex_elasticlunr_spark.streaming.ingest.await_terminated) so the gate
-battery in __spark_entry__.py uses the exact same definition.
+Thin re-export of the package's guard
+(ex_elasticlunr_spark.streaming.ingest.await_terminated), so the tests
+use the definition the package exports.
 """
 
 from __future__ import annotations

@@ -227,6 +227,14 @@ def test_driver_served_classes_run_no_spark_job(spark, warehouse):
             n = _n_jobs(spark, lambda: ix.search(q, top_k=10,
                                                  mode=mode).collect())
             assert n <= (1 if cls == "fuzzy" else 0), (cls, mode, n)
+    # a driver-served phrase scores a local relation with its statistics
+    # as literals; only the ord -> docid join and the result run jobs
+    for text in PHRASES:
+        q = {"query": {"match_phrase": {"text": text}}}
+        for mode in ("bm25", "elasticlunr"):
+            n = _n_jobs(spark, lambda: ix.search(q, top_k=10,
+                                                 mode=mode).collect())
+            assert n <= 2, ("phrase", text, mode, n)
     n = _n_jobs(spark, lambda: ix.search_wand(
         "window stream", "text", top_k=10).collect())
     assert n == 0

@@ -1,11 +1,10 @@
-"""search_many (bulk multi-query), RRF fusion, and semantic_dedup."""
+"""search_many (bulk multi-query), keywords, count/matches, related
+documents and percolation."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from ex_elasticlunr_spark import Index
-from ex_elasticlunr_spark.operators.ann import semantic_dedup
-from ex_elasticlunr_spark.operators.hybrid import rrf_fusion
 
 
 DOCS = [
@@ -71,67 +70,6 @@ def test_search_many_empty_and_unknown(idx):
     assert out.count() == 0
 
 
-def test_rrf_fusion_ranks_and_counts(spark):
-    a = spark.createDataFrame(
-        [("x", 3.0), ("y", 2.0), ("z", 1.0)], "docid string, score double")
-    b = spark.createDataFrame(
-        [("y", 9.9), ("w", 5.0)], "docid string, score double")
-    got = {r["docid"]: (r["rrf_score"], r["n_lists"])
-           for r in rrf_fusion([a, b], k=60).collect()}
-    # list a ranks: x=1, y=2, z=3; list b ranks: y=1, w=2
-    assert got["y"] == (round(1 / 62 + 1 / 61, 6), 2)
-    assert got["x"] == (round(1 / 61, 6), 1)
-    assert got["w"] == (round(1 / 62, 6), 1)
-    assert got["z"] == (round(1 / 63, 6), 1)
-    ordered = [r["docid"] for r in rrf_fusion([a, b], k=60).collect()]
-    assert ordered == ["y", "x", "w", "z"]
-
-
-def test_semantic_dedup_greedy_min_id(spark):
-    """Identical vectors dedup to the smallest id; distinct vectors
-    survive."""
-    rows = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [1.0, 0.0, 0.0, 0.0]),   # dup of 1
-        (3, [0.0, 1.0, 0.0, 0.0]),
-        (4, [1.0, 1e-4, 0.0, 0.0]),  # near-dup of 1/2
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r["vec_id"]: r["keep"]
-           for r in semantic_dedup(df, threshold=0.999).collect()}
-    assert got == {"1": True, "2": False, "3": True, "4": False}
-
-
-def test_quantized_topk_recall(spark):
-    """int8 quantization keeps recall@10 vs exact brute force high on
-    the real embeddings table."""
-    from ex_elasticlunr_spark.operators.ann import (
-        brute_force_topk,
-        quantized_topk,
-    )
-
-    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qv = [float(x) for x in
-          df.where(F.col("vec_id") == 0).first()["embedding"]]
-    exact = {r["vec_id"] for r in brute_force_topk(df, qv, k=10).collect()}
-    quant = {r["vec_id"] for r in quantized_topk(df, qv, k=10).collect()}
-    assert len(exact & quant) >= 8
-
-
-def test_quantize_embeddings_reconstruction(spark):
-    """qvec * scale reconstructs each component within scale/2."""
-    from ex_elasticlunr_spark.operators.ann import quantize_embeddings
-
-    rows = [(1, [0.5, -1.0, 0.25, 0.0]), (2, [0.0, 0.0, 0.0, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r["vec_id"]: r for r in quantize_embeddings(df).collect()}
-    q1, s1 = got["1"]["qvec"], got["1"]["scale"]
-    orig = rows[0][1]
-    assert all(abs(q * s1 - x) <= s1 / 2 + 1e-12 for q, x in zip(q1, orig))
-    assert max(abs(q) for q in q1) == 127
-    assert got["2"]["qvec"] == [0, 0, 0, 0]  # zero vector: scale guard
-
-
 def test_keywords_tfidf_ranks(idx):
     """Every doc gets <= top_n keywords; d4's dominant term is spark
     or window (tf 3 and 2)."""
@@ -145,33 +83,6 @@ def test_keywords_tfidf_ranks(idx):
     assert d4[0][1] in ("spark", "window")
 
 
-def test_rerank_pairs_stub_and_plugin(spark):
-    """Token-overlap stub ranks the exact-match doc first; a custom
-    scorer callable plugs into the same Arrow-batched boundary."""
-    from ex_elasticlunr_spark.operators.rerank import rerank_pairs
-
-    docs = spark.createDataFrame(
-        [("d1", "alpha beta gamma"), ("d2", "alpha beta"),
-         ("d3", "delta epsilon")],
-        "docid string, text string")
-    pairs = spark.createDataFrame(
-        [("q0", "d1"), ("q0", "d2"), ("q0", "d3")],
-        "query_id string, docid string")
-    out = rerank_pairs(pairs, docs, {"q0": "alpha beta"})
-    got = [(r["docid"], r["rerank_score"], r["rank"]) for r in
-           out.orderBy("rank").collect()]
-    assert got[0][0] == "d2" and got[0][1] == 1.0
-    assert got[1][0] == "d1" and abs(got[1][1] - 2 / 3) < 1e-5
-    assert got[2][0] == "d3" and got[2][1] == 0.0
-
-    def longest_first(qt, texts):
-        return texts.str.len().astype("float64")
-
-    out2 = rerank_pairs(pairs, docs, {"q0": "alpha beta"},
-                        scorer=longest_first)
-    assert out2.orderBy("rank").first()["docid"] == "d1"
-
-
 def test_count_and_matches(idx):
     """Index.count equals the searched row count; matches() stays in
     the doc-key currency (no docid translation)."""
@@ -179,23 +90,6 @@ def test_count_and_matches(idx):
     assert idx.count(q) == idx.search(q).count()
     m = idx.matches(q)
     assert "score" in m.columns and "docid" not in m.columns
-
-
-def test_importance_sample_deterministic_and_monotone(spark):
-    """Same seed -> same sample; weight 1.0 keeps everything, 0 keeps
-    nothing."""
-    from ex_elasticlunr_spark.operators.quality import importance_sample
-
-    df = spark.createDataFrame(
-        [(str(i), 0.5) for i in range(200)], "docid string, w double")
-    a = {r["docid"] for r in importance_sample(df, "w").collect()}
-    b = {r["docid"] for r in importance_sample(df, "w").collect()}
-    assert a == b
-    assert 40 <= len(a) <= 160  # ~Binomial(200, .5)
-    full = df.withColumn("w", F.lit(1.0))
-    assert importance_sample(full, "w").count() == 200
-    none = df.withColumn("w", F.lit(0.0))
-    assert importance_sample(none, "w").count() == 0
 
 
 def test_related_documents_excludes_self(idx):

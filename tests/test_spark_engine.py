@@ -16,8 +16,7 @@ from tests.test_oracle import DOCS
 
 TOKENIZER_ONLY = AnalyzerConfig(stages=())
 
-# the reference query set (FIXTURES.md §3, adapted from dsl_test.exs);
-# shared with bench.py's rank_identity measurement
+# the reference query set (FIXTURES.md §3, adapted from dsl_test.exs)
 QUERY_SET = reference_query_set("content")
 
 
@@ -105,6 +104,89 @@ def test_transcripts_multifield_boosts(transcripts):
         for r in oracle_search(oidx, "search elixir", options=opts, top_k=10)
     ]
     assert_rank_identical(got, want)
+
+
+def test_stats_tables_equal_oracle(transcripts):
+    """The bookkeeping tables every scorer reads — doc lengths, term
+    df/idf, the per-field scalars and posting tfs — equal the oracle's
+    per field, zero-token docs included."""
+    idx, oidx = transcripts
+    inv = idx.inverted
+    for field in ("text", "tool"):
+        of = oidx.fields[field]
+
+        def rows(df):
+            return df.where(df.field == field).collect()
+
+        assert {r["docid"]: r["doc_len"]
+                for r in rows(inv.doc_stats)} == of.doc_len
+        terms = {r["term"]: r for r in rows(inv.term_stats)}
+        assert set(terms) == set(of.term_docs)
+        for t, r in terms.items():
+            assert r["df"] == len(of.term_docs[t])
+            assert r["idf"] == pytest.approx(of.idf[t], abs=1e-12)
+        (fs,) = rows(inv.field_stats)
+        assert fs["n_docs"] == len(of.ids)
+        assert fs["n_unique_terms"] == len(of.term_docs)
+        assert fs["flnorm"] == pytest.approx(of.flnorm, abs=1e-12)
+        assert fs["avg_doc_len"] == pytest.approx(of.avg_doc_len(),
+                                                  abs=1e-12)
+        post = {(r["term"], r["docid"]): r for r in rows(inv.postings)}
+        assert set(post) == {(t, d) for t, docs in of.term_docs.items()
+                             for d in docs}
+        for (t, d), r in post.items():
+            assert r["tf_raw"] == of.term_docs[t][d]["total"]
+            assert r["tf"] == pytest.approx(of.tf(t, d), abs=1e-12)
+
+
+def _top_tfidf_terms(of, tf, n):
+    """The oracle's pick of a seed's ``n`` highest tf*idf vocabulary
+    terms, ties on the term."""
+    cands = [t for t in tf if t in of.idf]
+    return sorted(cands, key=lambda t: (-tf[t] * of.idf[t], t))[:n]
+
+
+@pytest.mark.parametrize("mode", ["elasticlunr", "bm25"])
+def test_more_like_this_equals_oracle_terms_query(transcripts, mode):
+    """MoreLikeThis = the seed text's top tf*idf terms run as one terms
+    query, in both scoring modes."""
+    idx, oidx = transcripts
+    of = oidx.fields["text"]
+    seed = "the quick elixir fox: a quick search over elixir tool output"
+    tf = {}
+    for tok in of.analyze(seed, is_query=True):
+        tf[tok.token] = tf.get(tok.token, 0) + 1
+    picked = _top_tfidf_terms(of, tf, 3)
+    assert len(picked) == 3
+    view = oidx.bm25() if mode == "bm25" else oidx
+    want = oracle_results(view, {"query": {"terms": {"text": picked}}})
+    got = spark_results(idx.more_like_this(seed, "text", max_query_terms=3,
+                                           mode=mode))
+    assert want and len(picked) < len(tf)
+    assert_rank_identical(got, want)
+
+
+def test_related_documents_equal_oracle(transcripts):
+    """Item-item related docs: each seed doc's top tf*idf terms scored
+    as an elasticlunr terms query over the other docs, scores rounded
+    to 6 places, ties on the docid."""
+    from ex_elasticlunr_spark.search.batch import related_documents
+
+    idx, oidx = transcripts
+    of = oidx.fields["text"]
+    seeds = sorted(of.ids)[:3]
+    out = related_documents(idx.inverted, "text", docids=seeds,
+                            seed_terms=4, top_k=5).collect()
+    for qid in seeds:
+        tf = {t: docs[qid]["total"] for t, docs in of.term_docs.items()
+              if qid in docs}
+        q = {"query": {"terms": {"text": _top_tfidf_terms(of, tf, 4)}}}
+        hits = sorted(((round(s, 6), d) for d, s in oracle_results(oidx, q)
+                       if d != qid), key=lambda h: (-h[0], h[1]))[:5]
+        got = sorted((r["rank"], r["docid"], r["score"])
+                     for r in out if r["qid"] == qid)
+        assert hits and [(d, s) for _, d, s in got] == \
+            [(d, s) for s, d in hits], qid
 
 
 def test_incremental_add_and_remove(spark, golden):

@@ -119,91 +119,6 @@ def test_stream_to_index_durable_generations(spark, tmp_path):
     assert InvertedIndex.load(spark, wh).docs.count() == full.count()
 
 
-def test_dedup_exact_stream_first_arrival_wins(spark, tmp_path):
-    """Streaming exact dedup keeps one row per normalized-content hash
-    across micro-batches (state within the watermark), and the batch
-    operator over the same rows flags exactly the dropped surplus."""
-    from pyspark.sql import functions as F
-
-    from ex_elasticlunr_spark.operators.dedup import (
-        dedup_exact_stream,
-        exact_duplicates,
-    )
-
-    src = str(tmp_path / "dd_in")
-    os.makedirs(src)
-    rows1 = [("a", "The quick  fox", "2026-01-01 00:00:00"),
-             ("b", "lazy dog", "2026-01-01 00:00:30"),
-             ("c", "the QUICK fox", "2026-01-01 00:01:00")]  # dup of a
-    rows2 = [("d", "lazy   DOG", "2026-01-01 00:02:00"),      # dup of b
-             ("e", "brand new", "2026-01-01 00:02:30")]
-    schema = "docid string, text string, ts_s string"
-
-    def w(rows, name):
-        spark.createDataFrame(rows, schema).select(
-            "docid", "text", F.col("ts_s").cast("timestamp").alias("ts")
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(src, name))
-
-    w(rows1, "f1.parquet")
-    w(rows2, "f2.parquet")
-    stream = spark.readStream.schema(
-        "docid string, text string, ts timestamp").option(
-        "maxFilesPerTrigger", "1").parquet(src + "/*.parquet")
-    q = (dedup_exact_stream(stream, watermark_delay="10 minutes")
-         .writeStream.format("memory").queryName("dd_mem")
-         .outputMode("append").trigger(availableNow=True).start())
-    await_terminated(q, 120)
-
-    kept = {r["docid"] for r in spark.sql(
-        "SELECT docid FROM dd_mem").collect()}
-    # one survivor per hash; f1 processed before f2 (lexicographic)
-    assert kept == {"a", "b", "e"}
-
-    batch_dups = exact_duplicates(
-        spark.read.parquet(src + "/*.parquet"))
-    flagged = {r["keep_docid"] for r in batch_dups.collect()}
-    assert flagged == {"a", "b"}
-
-
-def test_quality_operators_compose_on_streams(spark, tmp_path):
-    """The map-only quality operators (pure column expressions) run
-    unchanged on a readStream and emit exactly the batch results — the
-    at-ingest quality-scoring pipeline shape."""
-    from pyspark.sql import functions as F
-
-    from ex_elasticlunr_spark.operators.quality import (
-        lang_id,
-        quality_scores,
-        token_counts,
-    )
-
-    src = str(tmp_path / "qs_in")
-    os.makedirs(src)
-    rows = [(str(i), f"the quick value row{i} spark merge window data")
-            for i in range(40)]
-    batch_df = spark.createDataFrame(rows, "docid string, text string")
-    batch_df.coalesce(2).write.mode("overwrite").parquet(src + "/p.parquet")
-
-    def pipe(df):
-        q = quality_scores(df).select("docid", "quality")
-        t = token_counts(df).select("docid", "ws_tokens")
-        l = lang_id(df).select("docid", "pred_lang")
-        return q.join(t, "docid").join(l, "docid")
-
-    expected = sorted(map(tuple, pipe(
-        spark.read.parquet(src + "/p.parquet")).collect()))
-
-    stream = spark.readStream.schema("docid string, text string").option(
-        "maxFilesPerTrigger", "1").parquet(src + "/p.parquet")
-    q = (pipe(stream)
-         .writeStream.format("memory").queryName("qs_mem")
-         .outputMode("append").trigger(availableNow=True).start())
-    await_terminated(q, 120)
-    got = sorted(map(tuple, spark.sql("SELECT * FROM qs_mem").collect()))
-    assert got == expected
-
-
 def test_stream_replay_after_checkpoint_loss_commits_nothing(
         spark, tmp_path):
     """The replay guards survive every manifest rewrite: wiping the
