@@ -19,6 +19,8 @@ search/     scorers: exhaustive DataFrame scorer (elasticlunr + BM25
 dsl/        query-DSL AST (match/terms/bool/not/match_all) -> DataFrame plan
 sources/    deterministic synthetic transcripts + testdata table loaders
 streaming/  incremental ingest (structured streaming -> delta segments)
+operators/  beside the index: event-log sessions/rollups, conversation
+            assembly, reciprocal-rank fusion
 """
 
 __version__ = "0.1.0"

@@ -1,3 +1,7 @@
-from . import ann, dedup, multimodal, quality
+"""Pipeline operators that sit beside the index: event-log sessions and
+rollups (``events``), conversation assembly (``conversations``) and
+reciprocal-rank fusion of ranked lists (``hybrid``)."""
 
-__all__ = ["ann", "dedup", "multimodal", "quality"]
+from . import conversations, events, hybrid
+
+__all__ = ["conversations", "events", "hybrid"]

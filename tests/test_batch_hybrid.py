@@ -1,10 +1,11 @@
-"""search_many (bulk multi-query), keywords, count/matches, related
-documents and percolation."""
+"""search_many (bulk multi-query), RRF fusion, keywords, count/matches,
+related documents and percolation."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from ex_elasticlunr_spark import Index
+from ex_elasticlunr_spark.operators.hybrid import rrf_fusion
 
 
 DOCS = [
@@ -68,6 +69,22 @@ def test_search_many_empty_and_unknown(idx):
     unknown-term queries emit no rows."""
     out = idx.search_many({"q1": "the", "q2": "zzznope"}, "text")
     assert out.count() == 0
+
+
+def test_rrf_fusion_ranks_and_counts(spark):
+    a = spark.createDataFrame(
+        [("x", 3.0), ("y", 2.0), ("z", 1.0)], "docid string, score double")
+    b = spark.createDataFrame(
+        [("y", 9.9), ("w", 5.0)], "docid string, score double")
+    got = {r["docid"]: (r["rrf_score"], r["n_lists"])
+           for r in rrf_fusion([a, b], k=60).collect()}
+    # list a ranks: x=1, y=2, z=3; list b ranks: y=1, w=2
+    assert got["y"] == (round(1 / 62 + 1 / 61, 6), 2)
+    assert got["x"] == (round(1 / 61, 6), 1)
+    assert got["w"] == (round(1 / 62, 6), 1)
+    assert got["z"] == (round(1 / 63, 6), 1)
+    ordered = [r["docid"] for r in rrf_fusion([a, b], k=60).collect()]
+    assert ordered == ["y", "x", "w", "z"]
 
 
 def test_keywords_tfidf_ranks(idx):

@@ -1,6 +1,6 @@
-"""Local replica of the driver's correctness gate: run every
-__spark_entry__.queries() entry AND its oracle_sql() on the same
-parquet at sf0.001, compare row-count + sorted values.
+"""Run every tests/entry_queries.py queries() entry AND its DuckDB
+oracle on the same parquet at sf0.001, compare row-count + sorted
+values.
 """
 
 import math
@@ -8,9 +8,8 @@ import math
 import duckdb
 import pytest
 
-import __spark_entry__ as entry_mod
-
-SF_DIR = "/root/testdata/sf0.001"
+from tests import entry_queries as entry_mod
+from tests.entry_queries import SF_DIR
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -45,14 +44,14 @@ def rows_canon(rows, cols):
 
 
 QUERIES = entry_mod.queries()
-ORACLES = entry_mod.oracle_sql()
+ORACLES = entry_mod.oracles()
 CHECKED = sorted(set(QUERIES) & set(ORACLES))
 
 
 def test_oracle_coverage():
     # every oracle key must have a query; most queries must have oracles
     assert set(ORACLES) <= set(QUERIES)
-    # every queries() entry has a DuckDB oracle (round-1 verdict ask)
+    # every queries() entry has a DuckDB oracle
     assert set(QUERIES) == set(ORACLES)
 
 
