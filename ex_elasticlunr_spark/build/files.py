@@ -9,7 +9,10 @@ one-part case. The parts are immutable bind state, listed once, and
 tied to the DataFrame object the binding assigned to the table: a
 maintenance op that assigns a new object (a pending add/remove, a
 rebind) leaves the old parts behind, exactly like the per-binding memos
-keyed by object identity (search/scorer.py ``_fstats_local``).
+keyed by object identity (search/scorer.py ``_fstats_local``). Each
+part's ``pyarrow.dataset`` is opened on its first read and held with
+the binding, so later reads do not re-read the file footers; a rebind
+drops it with the rest of the record.
 
 :func:`scan` is the one way the serving path pulls index rows to the
 driver. On a bound table it reads the part files with pyarrow, the
@@ -100,7 +103,8 @@ def bind(index, parts: dict) -> None:
                     and index._segments is None)
                 or (table == "seg_lens" and index._seg_lens is None)):
             continue  # not bound from this snapshot's table
-        index._files[table] = (TABLES[table](index), tuple(ps))
+        index._files[table] = (TABLES[table](index), tuple(ps),
+                               [None] * len(ps))
 
 
 def prefix_range(prefix: str) -> tuple:
@@ -199,6 +203,19 @@ def _shift(tbl, part: Part):
     return tbl
 
 
+def _dataset(bound, i: int):
+    """Part ``i``'s dataset of a bound-table record, opened once. Two
+    threads that both find the slot empty each open an equal dataset;
+    the later assignment wins and both read the same files."""
+    d = bound[2][i]
+    if d is None:
+        import pyarrow.dataset as ds
+
+        d = bound[2][i] = ds.dataset(list(bound[1][i].files),
+                                     format="parquet")
+    return d
+
+
 def scan(index, table: str, columns: Sequence[str], cond=None,
          live: bool = True, limit: Optional[int] = None):
     """Rows of ``table`` matching ``cond`` as a ``pyarrow.Table`` of
@@ -213,15 +230,14 @@ def scan(index, table: str, columns: Sequence[str], cond=None,
         return _spark_scan(df, columns, cond, limit)
     import numpy as np
     import pyarrow as pa
-    import pyarrow.dataset as ds
 
     dead = (np.fromiter(index._dead_ords, np.int64)
             if live and index._dead_ords else None)
     out, n = [], 0
-    for part in bound[1]:
+    for i, part in enumerate(bound[1]):
         if not part.files:
             continue
-        d = ds.dataset(list(part.files), format="parquet")
+        d = _dataset(bound, i)
         pdead = dead if "ord" in d.schema.names else None
         sc = d.scanner(columns=list(columns),
                        filter=_to_arrow(cond, part, pdead))

@@ -510,7 +510,11 @@ class Index:
         driver-served plan reads its rows from the snapshot's files
         (build/files.py) and runs no Spark job, which no exhaustive
         plan can match. ``DRIVER_SERVE_BYTES`` (search/wand.py) still
-        sends oversize candidate sets to the distributed WAND plan."""
+        sends oversize candidate sets to the distributed WAND plan.
+
+        A top-level ``match_phrase`` is served on the driver too
+        (search/scorer.py ``phrase_topk``); a phrase inside a bool, or
+        one over the driver's row cap, keeps the executor's plan."""
         import os as _os
 
         if (include_details or not isinstance(top_k, int) or top_k <= 0
@@ -537,12 +541,34 @@ class Index:
                                          **kw)
         if not (isinstance(query, dict) and "query" in query):
             return None
-        from .dsl.nodes import BoolNode, MatchNode, TermsNode, parse
+        from .dsl.nodes import (
+            BoolNode,
+            MatchNode,
+            MatchPhraseNode,
+            PhraseNode,
+            TermsNode,
+            parse,
+            rewrite_match_phrase,
+        )
 
         try:
             node = parse(query["query"])
         except Exception:
             return None  # let the executor raise its own error shape
+        if isinstance(node, MatchPhraseNode):
+            if node.field not in self.analyzers:
+                return None
+            # two or more analyzed tokens: the driver-served phrase; one
+            # token: a terms leaf (below)
+            node = rewrite_match_phrase(
+                node, self.analyzers[node.field].to_query_pipeline())
+            if isinstance(node, PhraseNode):
+                from .search.scorer import phrase_topk
+
+                return phrase_topk(self.inverted, node.field, node.terms,
+                                   top_k, boost=node.boost, mode=mode,
+                                   driver_max_rows=node.driver_max_rows,
+                                   **kw)
 
         def _leaf(n):
             """terms/match leaf -> TermsNode, else None (ineligible)."""
@@ -765,11 +791,13 @@ class Index:
     def search_many(self, queries, field: str, top_k: int = 10,
                     mode: str = "bm25", k1: float = 1.2,
                     b: float = 0.75) -> DataFrame:
-        """Bulk multi-query top-k in ONE Spark job: ``queries`` is
-        {query_id: text} (driver-side, union-of-terms pushed into the
-        postings scan) or a DataFrame(query_id, query_text) for
-        corpus-sized query sets. Returns DataFrame(query_id, docid,
-        score, rank) — see search/batch.py for the plan shape."""
+        """Bulk multi-query top-k: ``queries`` is {query_id: text}
+        (analyzed on the driver; on a loaded warehouse scored there
+        from the segments with no Spark job, else one plan with the
+        union of terms pushed into the postings scan) or a
+        DataFrame(query_id, query_text) for corpus-sized query sets
+        (one Spark plan). Returns DataFrame(query_id, docid, score,
+        rank) — see search/batch.py for both shapes."""
         from .search.batch import search_many as _sm
 
         # pass THIS index's analyzer config: query-time views

@@ -1,17 +1,28 @@
-"""Bulk multi-query scoring: Q queries against the index in ONE job.
+"""Bulk multi-query scoring: Q queries against the index in one pass.
 
 The reference serves one query per call (core/index.ex:262-265); at
 training-data-mining scale the workload is the transpose — thousands to
 millions of queries (e.g. every eval prompt, every seed document of a
 retrieval sweep) scored against the same corpus. Running Q single-query
-jobs pays Q× (scan + agg + driver round-trip). The Spark-first shape is
-query-data-parallel:
+jobs pays Q× (scan + agg + driver round-trip). Two shapes serve it:
+
+Driver-served (a dict batch on an index whose segments are bound,
+payload under search/wand.py ``DRIVER_SERVE_BYTES``): NO Spark job.
+The union of the batch's live terms is read once from the segments
+(pyarrow over the snapshot's files, build/files.py), decoded with the
+WAND codec (search/wand.py ``decode_blocks``), scored per query in
+numpy and ranked with one ordinals read for the whole batch — the
+search-head shape of the single-query classes.
+
+Spark-planned (a DataFrame query set, or a batch over the cap), one
+plan, query-data-parallel:
 
     queries(query_id, text)
       -> analyze                      [driver-side for a dict, the same
                                        Arrow-batched analyzer otherwise]
       -> qterms(query_id, qt, qw)     qw = term multiplicity in query
-      -> broadcast-join term_stats    (vocabulary-sized idf lookup)
+      -> join term statistics         (literal rows for a dict batch,
+                                       the vocabulary otherwise)
       -> ONE postings scan, term-pruned by the UNION of all query terms
          (pushed In(term, ...) over the term-clustered table — row-group
          pruning works for a thousand-query batch exactly like for one)
@@ -26,11 +37,13 @@ postings — not Q full passes. The per-(query, doc) aggregation keys on
 
 Scores are rounded to 6 decimals BEFORE ranking (ties broken on docid
 asc) so ranks are reproducible bit-for-bit across engines — the same
-contract as the single-query gate queries.
+contract as the single-query gate queries; the driver route rounds as
+Spark's ``round`` does (HALF_UP on the decimal string).
 """
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Dict, Optional, Union
 
 from pyspark.sql import DataFrame, Window, functions as F
@@ -146,6 +159,103 @@ def related_documents(
             .select("qid", "docid", "score", "rank"))
 
 
+def _round6(x: float) -> float:
+    """Spark's ``round(x, 6)`` of a double: HALF_UP on the decimal
+    string of ``x`` (Java's ``BigDecimal.valueOf``), not numpy's
+    half-even rounding of the binary value."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _many_from_driver(index, rows, field: str, top_k: int, mode: str,
+                      k1: float, b: float) -> Optional[list]:
+    """A dict batch scored on the driver with no Spark job, on an index
+    whose segments are bound: the result rows (query_id, docid, score,
+    rank). ``rows`` are the analyzed (query_id, term, qw) triples.
+
+    One capped metadata read and one payload read of ``segments`` for
+    the union of the batch's live terms, and one read of ``seg_lens``
+    for their blocks in bm25 mode, decoded by search/wand.py
+    ``decode_blocks`` (tombstoned ords dropped). df/idf come from
+    ``_vocab_lookup``, field statistics from ``_fstats_local``. Each
+    term's entry scores are computed once, by the formulas of
+    ``entry_score_expr`` in its operation order; each query then sums
+    them weighted by ``qw`` (bm25) or takes their max (elasticlunr).
+    Only each query's boundary set is rounded like Spark's
+    ``round(x, 6)``, then ranked (rounded score desc, docid asc) with
+    one ordinals read for the whole batch (``ranked_top``).
+
+    Returns None — the caller runs the Spark plan — when the segments
+    are not bound, the payload is over ``DRIVER_SERVE_BYTES``, or a
+    query's boundary ties are over ``RESOLVE_INLINE_CAP``."""
+    import math
+
+    import numpy as np
+
+    from ..build.files import scan
+    from . import wand
+    from .scorer import _fstats_local, _vocab_lookup
+
+    fr = _fstats_local(index).get(field)
+    if (index._segments is None or top_k <= 0 or fr is None
+            or not wand.DRIVER_SERVE_BYTES
+            or mode not in ("elasticlunr", "bm25")):
+        return None
+    looked = _vocab_lookup(index, [(field, t) for _, t, _ in rows])
+    live = sorted({t for _, t, _ in rows if looked[(field, t)]})
+    if not live:
+        return []
+    block_size = index._segments[0]
+    cond = [(("field", "==", field), ("term", "in", live))]
+    meta = scan(index, "segments", ["block_id", "block_bytes"], cond)
+    bids = set(meta.column(0).to_pylist())
+    nbytes = sum(meta.column(1).to_pylist())
+    if mode == "bm25":
+        nbytes += len(bids) * wand.LEN_BLOCK_EST_BYTES
+    if nbytes > wand.DRIVER_SERVE_BYTES:
+        return None
+    lens = (wand.decode_lens(index, {(field, x) for x in bids}, block_size)
+            if mode == "bm25" else {})
+    n_docs, avgdl = fr["n_docs"], fr["avg_doc_len"]
+    entries: dict = {}  # term -> [(ords, entry scores)] per block
+    for _f, t, bid, oa, tf in wand.decode_blocks(index, cond, block_size):
+        df, idf = looked[(field, t)]
+        if mode == "elasticlunr":
+            e = np.sqrt(tf) * (idf * idf) * fr["flnorm"]
+        else:
+            lo, lv = lens[(field, bid)]
+            dl = lv[np.searchsorted(lo, oa)]
+            e = math.log(1.0 + (float(n_docs - df) + 0.5) / (df + 0.5)) * (
+                (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + b * dl / avgdl)))
+        entries.setdefault(t, []).append((oa, e))
+
+    by_q: dict = {}
+    for qid, t, qw in rows:
+        for oa, e in entries.get(t, ()):
+            by_q.setdefault(qid, []).append(
+                (oa, e if mode == "elasticlunr" else e * float(qw)))
+    groups = {}
+    for qid, parts in by_q.items():
+        uo, inv = np.unique(np.concatenate([p[0] for p in parts]),
+                            return_inverse=True)
+        e = np.concatenate([p[1] for p in parts])
+        if mode == "elasticlunr":
+            v = np.full(uo.size, -np.inf)
+            np.maximum.at(v, inv, e)
+        else:
+            v = np.zeros(uo.size)
+            np.add.at(v, inv, e)
+        # a doc can round up to the k-th rounded score only from within
+        # 1e-6 below it: round just those
+        i = uo.size - min(top_k, uo.size)
+        m = v >= _round6(float(np.partition(v, i)[i])) - 1e-6
+        groups[qid] = (uo[m], np.array([_round6(x) for x in v[m].tolist()]))
+    top = wand.ranked_top(index, groups, top_k)
+    if top is None:
+        return None
+    return [(qid, d, s, r) for qid in sorted(top)
+            for r, (d, s) in enumerate(top[qid], 1)]
+
+
 def search_many(
     index,
     queries: Union[Dict[str, str], DataFrame],
@@ -161,12 +271,14 @@ def search_many(
     query (rounded-score desc, docid asc).
 
     ``queries``: a driver-side mapping {query_id: query_text} — each
-    text is analyzed with the field's query pipeline and the union of
-    all terms is PUSHED into the postings scan as a literal
-    ``In(term, ...)`` — or a DataFrame(query_id, query_text) for
-    corpus-sized query sets, analyzed with the same Arrow-batched
-    analyzer as ingest (no literal pushdown possible: the term set is
-    not driver-resident; the scan is still single-pass).
+    text is analyzed with the field's query pipeline, and the batch is
+    scored on the driver when the segments are bound
+    (:func:`_many_from_driver`), else the union of all terms is PUSHED
+    into the postings scan as a literal ``In(term, ...)`` — or a
+    DataFrame(query_id, query_text) for corpus-sized query sets,
+    analyzed with the same Arrow-batched analyzer as ingest (no literal
+    pushdown possible: the term set is not driver-resident; the scan is
+    still single-pass).
 
     Semantics per query match the single-query ``match`` path
     (dsl/nodes.rewrite_match): duplicate query terms contribute
@@ -176,6 +288,7 @@ def search_many(
     """
     spark = index.postings.sparkSession
     key = index.key_col
+    schema = "query_id string, docid string, score double, rank long"
     # ``analyzer`` override: Index.search_many passes its OWN config so
     # query-time views (with_query_synonyms, per-field query_pipeline
     # swaps) apply to bulk search exactly like single-query search —
@@ -196,8 +309,10 @@ def search_many(
             for t, n in sorted(counts.items()):
                 rows.append((str(qid), t, n))
         if not rows:
-            return spark.createDataFrame(
-                [], "query_id string, docid string, score double, rank long")
+            return empty_df(spark, schema)
+        served = _many_from_driver(index, rows, field, top_k, mode, k1, b)
+        if served is not None:
+            return inline_rows(spark, served, schema)
         literal_terms = sorted({t for _, t, _ in rows})
     else:
         from ..functions.udfs import analyze_postings
@@ -258,8 +373,7 @@ def search_many(
 
     fs_cols = _fstats_cols(index, field)
     if fs_cols is None:
-        return empty_df(
-            spark, "query_id string, docid string, score double, rank long")
+        return empty_df(spark, schema)
     entries = entries.select("*", *fs_cols)
 
     # shared formula source (search/scorer.py): bm25 sums qw-weighted

@@ -34,7 +34,7 @@ from typing import Optional, Union
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.literals import array_lit
+from ..functions.literals import array_lit, empty_df
 
 from ..functions.udfs import AnalyzerConfig, analyze_postings
 
@@ -105,7 +105,7 @@ def percolate(
                     .select(F.lit("").alias("query_id"), "docid",
                             F.lit(0).cast("long").alias("n_matched"),
                             F.lit(0).cast("long").alias("n_terms")))
-            return spark.createDataFrame([], out_schema)
+            return empty_df(spark, out_schema)
         hits = (docs.select(
                     F.col(docid_col).cast("string").alias("docid"),
                     F.array_distinct(

@@ -643,6 +643,62 @@ def _phrase_per_doc_driver(index, field: str, key: str,
     return ("served", served[0], served[1])
 
 
+def phrase_topk(index, field: str, terms: List[str], k: int,
+                boost: float = 1.0, mode: str = "elasticlunr",
+                k1: float = 1.2, b: float = 0.75,
+                driver_max_rows: Optional[int] = None):
+    """Top-``k`` DataFrame(docid, score) of a top-level phrase, served
+    on the driver with no Spark job: the integer hit statistics of
+    :func:`_phrase_per_doc_driver`, scored in numpy by the formulas of
+    :func:`phrase_scores` in the same operation order as its Spark
+    expressions, and the docids of the top-k boundary resolved in one
+    ordinals read (search/wand.py ``ranked_top``). The one
+    transcendental scalar, the idf of ``pdf``, comes from the JVM's
+    ``StrictMath`` (what Spark's log/log10 evaluate) over py4j, so the
+    scores equal the distributed plan's exactly.
+
+    Returns None — the caller runs :func:`phrase_scores` — when the
+    driver path does not apply: a zero row cap, an over-cap phrase, or
+    an index whose doc ordinals are not the bound segments' (a fresh
+    build), so the boundary resolve has no ordinals file to read."""
+    import numpy as np
+
+    from .wand import ranked_top
+
+    rows_cap = (PHRASE_DRIVER_MAX_ROWS if driver_max_rows is None
+                else int(driver_max_rows))
+    fr = _fstats_local(index).get(field)
+    if (not CHECKPOINT_PHRASE_HITS or rows_cap <= 0 or fr is None
+            or mode not in ("elasticlunr", "bm25")
+            or index.key_col != "ord" or index._segments is None
+            or index._segments[2] is not index.ordinals_df()
+            or "ords" not in index.postings_full.columns):
+        return None
+    res = _phrase_per_doc_driver(index, field, "ord", terms, len(terms),
+                                 rows_cap=rows_cap)
+    if res[0] != "served":
+        return None
+    spark = index.postings.sparkSession
+    if not res[1]:
+        return empty_df(spark, "docid string, score double")
+    ords, pf, dl = (np.asarray(c) for c in zip(*res[1]))
+    pf, pdf, n_docs = pf.astype(np.float64), res[2], fr["n_docs"]
+    smath = spark._jvm.java.lang.StrictMath
+    if mode == "elasticlunr":
+        idf = 1.0 + smath.log10(float(n_docs) / (float(pdf) + 1.0))
+        score = np.sqrt(pf) * idf * idf * fr["flnorm"]
+    else:
+        idf = smath.log(1.0 + (float(n_docs - pdf) + 0.5)
+                        / (float(pdf) + 0.5))
+        score = idf * (pf * (k1 + 1.0)) / (
+            pf + k1 * ((1.0 - b)
+                       + b * dl.astype(np.float64) / fr["avg_doc_len"]))
+    top = ranked_top(index, {0: (ords, score * float(boost))}, k)
+    if top is None:
+        return None
+    return inline_rows(spark, top[0], "docid string, score double")
+
+
 def phrase_scores(
     index,
     field: str,

@@ -87,7 +87,10 @@ the snapshot's files, so a driver-served query runs NO Spark job (a
 fuzzy or regex clause pays one, for its vocabulary match). Oversize
 candidate sets fall through to the distributed plan above;
 tests/test_segments_wand.py TestDriverServe pins identity between the
-two.
+two. Its block decode (:func:`decode_blocks`, :func:`decode_lens`) and
+its boundary docid resolve (:func:`ranked_top`) are shared with the
+driver-served phrase (search/scorer.py ``phrase_topk``) and
+``search_many`` (search/batch.py).
 """
 
 from __future__ import annotations
@@ -278,21 +281,101 @@ def _restrict_triples(cand: DataFrame, triples) -> DataFrame:
     return cand.where(cond)
 
 
+def decode_blocks(index, cond, block_size: int) -> list:
+    """The segments rows matching ``cond`` (one ``build/files.py
+    scan``), each decoded with the codec the distributed mapInPandas
+    runs (build/codec.py): a list of (field, term, block_id, ords,
+    tf_raw as float64), the binding's tombstoned ords dropped and
+    blocks left empty skipped."""
+    import numpy as np
+
+    from ..build.codec import decode_block_arrays
+
+    seg = scan(index, "segments", ["field", "term", "block_id", "payload"],
+               cond)
+    tomb = (np.fromiter(sorted(index._dead_ords), dtype=np.int64)
+            if index._dead_ords else None)
+    out = []
+    for field, term, bid, payload in zip(*(
+            seg.column(c).to_pylist()
+            for c in ("field", "term", "block_id", "payload"))):
+        oa, tf = decode_block_arrays(payload, bid * block_size)
+        if tomb is not None and oa.size:
+            keep = ~np.isin(oa, tomb)
+            oa, tf = oa[keep], tf[keep]
+        if oa.size:
+            out.append((field, term, bid, oa, tf.astype(np.float64)))
+    return out
+
+
+def decode_lens(index, pairs, block_size: int) -> dict:
+    """(field, block_id) -> (ords, doc_len as float64) for the len
+    blocks of ``pairs`` (one ``scan`` of ``seg_lens``); a posting's
+    doc_len is ``lens[np.searchsorted(ords, its_ord)]``."""
+    import numpy as np
+
+    from ..build.codec import decode_block_arrays
+
+    fields = sorted({f for f, _ in pairs})
+    if not fields:
+        return {}
+    lt = scan(index, "seg_lens", ["field", "block_id", "payload"],
+              [(("field", "==", f),
+                ("block_id", "in", sorted({bid for g, bid in pairs
+                                           if g == f})))
+               for f in fields])
+    out = {}
+    for f, bid, pl in zip(*(lt.column(i).to_pylist() for i in range(3))):
+        lo, lv = decode_block_arrays(pl, bid * block_size)
+        out[(f, bid)] = (lo, lv.astype(np.float64))
+    return out
+
+
+def ranked_top(index, groups: dict, k: int) -> Optional[dict]:
+    """{gid: (ords, scores)} numpy pairs -> {gid: [(docid, score)]},
+    each group's top ``k`` by (score desc, docid asc). Docids are
+    resolved for the boundary sets only — every ord whose score ties or
+    beats its group's k-th score, where the docid tie-break needs real
+    docids — with ONE ``scan`` of ``ordinals`` for all groups. None
+    when a group's boundary set exceeds RESOLVE_INLINE_CAP (the caller
+    falls back to its Spark plan). Groups without entries are left
+    out."""
+    import numpy as np
+
+    bounds = {}
+    for gid, (o, s) in groups.items():
+        if not s.size:
+            continue
+        i = s.size - min(k, s.size)
+        m = s >= np.partition(s, i)[i]
+        if int(m.sum()) > RESOLVE_INLINE_CAP:
+            return None
+        bounds[gid] = (o[m].tolist(), s[m].tolist())
+    if not bounds:
+        return {}
+    want = sorted({x for o, _ in bounds.values() for x in o})
+    ot = scan(index, "ordinals", ["ord", "docid"], [(("ord", "in", want),)])
+    omap = dict(zip(ot.column(0).to_pylist(), ot.column(1).to_pylist()))
+    return {gid: sorted(((omap[x], v) for x, v in zip(o, s)),
+                        key=lambda p: (-p[1], p[0]))[:k]
+            for gid, (o, s) in bounds.items()}
+
+
 def _serve_from_driver(index, stats, by_cid, good, meta_rows,
                        k: int, mode: str, k1: float, b: float, msm: int,
                        block_size: int):
     """Serve a single-phase query entirely from the driver: one read of
     the candidate block payloads (+ their len blocks in bm25 mode), the
     SAME pure-Python codec decode the distributed mapInPandas runs
-    (build/codec.py decode_block), the same clause algebra, then one
-    ordinal->docid lookup for the top-k boundary. Every read goes
-    through ``build/files.py scan``: on a bound warehouse pyarrow over
-    the snapshot's files, so the query runs no Spark job. Returns None
-    when the query does not qualify (payload too large, boundary tie
-    set too large) — the caller falls through to the distributed plan,
-    so this is only ever a latency fast path, never a semantics change.
-    Identity with the distributed plan is pinned by
-    tests/test_segments_wand.py.
+    (:func:`decode_blocks`), the same clause algebra, then one
+    ordinal->docid lookup for the top-k boundary (:func:`ranked_top`).
+    Every read goes through ``build/files.py scan``: on a bound
+    warehouse pyarrow over the snapshot's files, so the query runs no
+    Spark job. Returns None when the query does not qualify (payload
+    too large, boundary tie set too large) — the caller falls through
+    to the distributed plan, so this is only ever a latency fast path,
+    never a semantics change. Identity with the distributed plan is
+    pinned by tests/test_segments_wand.py.
 
     Scale shape: the byte cap (DRIVER_SERVE_BYTES) bounds what a query
     may pull to the driver — selective queries over a 100 TB index
@@ -301,11 +384,8 @@ def _serve_from_driver(index, stats, by_cid, good, meta_rows,
     to the distributed plan the cap exists for."""
     import numpy as np
 
-    from ..build.codec import decode_block_arrays
-
     if k <= 0 or not DRIVER_SERVE_BYTES:
         return None
-    tomb = index._dead_ords
 
     spark = index.postings.sparkSession
     # fetch set: the per-clause cross product (terms x good block_ids)
@@ -330,23 +410,13 @@ def _serve_from_driver(index, stats, by_cid, good, meta_rows,
     if fetch_bytes > DRIVER_SERVE_BYTES:
         return None
 
-    seg = scan(index, "segments", ["field", "term", "block_id", "payload"],
-               [(("field", "==", by_cid[cid]["field"]),
+    posts = decode_blocks(
+        index, [(("field", "==", by_cid[cid]["field"]),
                  ("term", "in", by_cid[cid]["terms"]),
                  ("block_id", "in", sorted(bids)))
-                for cid, bids in gbids.items()])
-    posts = zip(*(seg.column(c).to_pylist()
-                  for c in ("field", "term", "block_id", "payload")))
-    lens_map: Dict[Tuple[str, int], Tuple] = {}
-    if mode != "elasticlunr":
-        lt = scan(index, "seg_lens", ["field", "block_id", "payload"],
-                  [(("field", "==", f), ("block_id", "in", sorted(
-                      {p[1] for p in fetch_pairs if p[0] == f})))
-                   for f in sorted({p[0] for p in fetch_pairs})])
-        for f, bid, pl in zip(*(lt.column(i).to_pylist()
-                                for i in range(3))):
-            lo, lv = decode_block_arrays(pl, bid * block_size)
-            lens_map[(f, bid)] = (lo, lv.astype(np.float64))
+                for cid, bids in gbids.items()], block_size)
+    lens_map = (decode_lens(index, fetch_pairs, block_size)
+                if mode != "elasticlunr" else {})
 
     # (field, term) -> every clause referencing it (same-field clauses
     # each take their own contribution from one decoded block)
@@ -357,28 +427,13 @@ def _serve_from_driver(index, stats, by_cid, good, meta_rows,
     cinfo = {r[0]: (r[5], r[6]) for r in stats}
     neg_cids = {r[0] for r in stats if r[9]}
     req_cids = {r[0] for r in stats if r[8]} - neg_cids
-    tomb_arr = (np.fromiter(sorted(tomb), dtype=np.int64)
-                if tomb else None)
 
     # per-clause vectorized aggregation (the groupBy(ord) of the
     # distributed exact_scores, via numpy grouping — no per-entry
     # Python loop anywhere)
     parts: Dict[int, list] = {cid: [] for cid in cids}
-    for field, term, bid, payload in posts:
-        key = (field, term)
-        if key not in tmap:  # candidate block of a term no clause kept
-            continue
-        oa, tf = decode_block_arrays(payload, bid * block_size)
-        if not oa.size:
-            continue
-        tfa = tf.astype(np.float64)
-        if tomb_arr is not None:
-            keep = ~np.isin(oa, tomb_arr)
-            if not keep.all():
-                oa, tfa = oa[keep], tfa[keep]
-                if oa.size == 0:
-                    continue
-        for cid, w, mult, avgdl in tmap[key]:
+    for field, term, bid, oa, tfa in posts:
+        for cid, w, mult, avgdl in tmap[(field, term)]:
             if mode == "elasticlunr":
                 sc = np.sqrt(tfa) * w
             else:
@@ -443,24 +498,12 @@ def _serve_from_driver(index, stats, by_cid, good, meta_rows,
             & (negm_v == 0))
     if not qual.any():
         return empty
-    result = dict(zip(all_ords[qual].tolist(), score_v[qual].tolist()))
-
-    # docid resolve for the boundary set only: every ord whose score
-    # ties-or-beats the k-th score (the docid tie-break needs real
-    # docids, and only there)
-    svals = sorted(result.values(), reverse=True)
-    kth = svals[min(k, len(svals)) - 1]
-    bound_ords = [oo for oo, s in result.items() if s >= kth]
-    if len(bound_ords) > RESOLVE_INLINE_CAP:
+    top = ranked_top(index, {0: (all_ords[qual], score_v[qual])}, k)
+    if top is None:
         return None
-    ot = scan(index, "ordinals", ["ord", "docid"],
-              [(("ord", "in", bound_ords),)])
-    omap = dict(zip(ot.column(0).to_pylist(), ot.column(1).to_pylist()))
-    top = sorted(((omap[oo], result[oo]) for oo in bound_ords),
-                 key=lambda p: (-p[1], p[0]))[:k]
     # inline literal relation: collecting the result costs ZERO tasks
     # (createDataFrame would slice 10 rows over defaultParallelism)
-    return inline_rows(spark, top, "docid string, score double")
+    return inline_rows(spark, top[0], "docid string, score double")
 
 
 def wand_topk_multi(

@@ -10,8 +10,12 @@ adds documents and tombstones others:
   modes — including a doc tombstoned and re-added in one generation, a
   term whose every posting is tombstoned, and terms and docids holding
   ``'``, ``\\`` and non-ASCII characters;
-* after a binding's first query, term/and/or/bool/prefix queries run
-  no Spark job and fuzzy runs at most one;
+* after a binding's first query, term/and/or/bool/prefix/phrase
+  queries and a dict ``search_many`` batch run no Spark job, and fuzzy
+  runs at most one;
+* the driver-served ``search_many`` equals its Spark plan and the
+  oracle;
+* each bound part's dataset is opened once per binding;
 * with the driver-serve cap at 0 the single-clause classes take the
   distributed WAND plan and still equal the exhaustive executor;
 * a pending removal on a loaded reader is visible before ``save_delta``
@@ -227,14 +231,21 @@ def test_driver_served_classes_run_no_spark_job(spark, warehouse):
             n = _n_jobs(spark, lambda: ix.search(q, top_k=10,
                                                  mode=mode).collect())
             assert n <= (1 if cls == "fuzzy" else 0), (cls, mode, n)
-    # a driver-served phrase scores a local relation with its statistics
-    # as literals; only the ord -> docid join and the result run jobs
     for text in PHRASES:
         q = {"query": {"match_phrase": {"text": text}}}
         for mode in ("bm25", "elasticlunr"):
             n = _n_jobs(spark, lambda: ix.search(q, top_k=10,
                                                  mode=mode).collect())
-            assert n <= 2, ("phrase", text, mode, n)
+            assert n == 0, ("phrase", text, mode, n)
+    for mode in ("bm25", "elasticlunr"):
+        n = _n_jobs(spark, lambda: ix.search_many(
+            MANY, "text", top_k=10, mode=mode).collect())
+        assert n == 0, ("many", mode, n)
+    # a batch whose every query analyzes to zero terms
+    stop = {"a": "the", "b": "and of"}
+    assert ix.search_many(stop, "text").collect() == []
+    assert _n_jobs(spark, lambda: ix.search_many(stop, "text")
+                   .collect()) == 0
     n = _n_jobs(spark, lambda: ix.search_wand(
         "window stream", "text", top_k=10).collect())
     assert n == 0
@@ -259,6 +270,111 @@ def test_distributed_wand_equals_exhaustive(spark, generational,
             monkeypatch.delenv("EX_SPARK_NO_WAND_ROUTE")
             assert [(d, round(s, 9)) for d, s in got] == \
                 [(d, round(s, 9)) for d, s in want] and got, (cls, mode)
+
+
+MANY_REFEREE = {
+    "dup": "spark spark fox",        # qw = 2 for spark
+    "gone": "solo",                  # every posting tombstoned
+    "readded": "phoenix brown",      # u1 tombstoned and re-added
+    "few": "café",                   # fewer matches than top_k
+    7: "lorem o'brien naïve",        # an int query id
+    "unknown": "zzzz qqqq",
+    "stop": "the of",
+}
+
+
+def _many_rows(ix, mode, top_k):
+    rows = ix.search_many(MANY_REFEREE, "text", top_k=top_k,
+                          mode=mode).collect()
+    by_q: dict = {}
+    for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
+        by_q.setdefault(r["query_id"], []).append((r["docid"], r["score"]))
+        assert r["rank"] == len(by_q[r["query_id"]])
+    return by_q
+
+
+def test_search_many_driver_equals_spark_plan_and_oracle(spark, warehouse,
+                                                         monkeypatch):
+    from ex_elasticlunr_spark.search import wand as wand_mod
+
+    path, oidx, docs = warehouse
+    ix = Index.load(spark, path)
+    # the binding's first query pays its one-time field statistics
+    ix.search(CLASSES["term"], top_k=10).collect()
+    for mode in ("bm25", "elasticlunr"):
+        view = oidx.bm25() if mode == "bm25" else oidx
+        for top_k in (3, 40):
+            box = []
+            # served on the driver: no Spark job
+            assert _n_jobs(spark, lambda: box.append(
+                _many_rows(ix, mode, top_k))) == 0, (mode, top_k)
+            got = box[0]
+            monkeypatch.setattr(wand_mod, "DRIVER_SERVE_BYTES", 0)
+            want = _many_rows(ix, mode, top_k)
+            monkeypatch.undo()
+            assert set(got) == set(want), (mode, top_k)
+            for qid, text in MANY_REFEREE.items():
+                g = got.get(str(qid), [])
+                assert ranked_equal(g, want.get(str(qid), []), top_k,
+                                    MANY_TOL), (qid, mode, top_k)
+                if qid == "stop":  # zero terms: no rows, not match_all
+                    continue
+                o = [(r["ref"], r["score"]) for r in oracle_search(
+                    view, {"query": {"match": {"text": text}}})]
+                assert ranked_equal(g, o, top_k, MANY_TOL), (qid, mode)
+            assert "unknown" not in got and "stop" not in got
+            assert ("gone" in got) == ("s1" in docs) and got["7"]
+            assert "u1" in dict(got["readded"]) or top_k == 3
+            assert 0 < len(got["few"]) < top_k or top_k == 3
+
+
+def test_scan_opens_each_part_once(spark, generational, monkeypatch):
+    import sys
+    import threading
+
+    import pyarrow.dataset as ds
+
+    from ex_elasticlunr_spark.build.files import bind, scan
+
+    ix = Index.load(spark, generational[0])
+    inv = ix.inverted
+    cond = [(("field", "==", "text"), ("term", "in", ["spark", "fox"]))]
+    first = scan(inv, "postings", ["term", "ord", "tf_raw"], cond)
+    opened = []
+    real = ds.dataset
+
+    def spy(source, *a, **kw):
+        opened.append(source)
+        return real(source, *a, **kw)
+
+    monkeypatch.setattr(ds, "dataset", spy)
+    for _ in range(3):
+        assert scan(inv, "postings", ["term", "ord", "tf_raw"],
+                    cond).equals(first)
+    assert not opened
+    # a rebind drops the datasets with the rest of the record: threads
+    # racing on the empty slots open the parts afresh and read equal
+    # tables
+    bind(inv, {"postings": list(inv._files["postings"][1])})
+    n = 8
+    out = [None] * n
+
+    def read(i):
+        out[i] = scan(inv, "postings", ["term", "ord", "tf_raw"], cond)
+
+    threads = [threading.Thread(target=read, args=(i,)) for i in range(n)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert all(o is not None and o.equals(first) for o in out)
+    assert 1 <= len(opened) <= n * len(inv._files["postings"][1])
 
 
 def test_pending_removal_never_reads_bound_files(spark, single,

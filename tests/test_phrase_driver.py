@@ -248,3 +248,48 @@ def test_driver_max_rows_option_no_global_write(loaded):
                for r in idx.search(q_capped, top_k=50).collect())
     assert a == b and a
     assert sc.PHRASE_DRIVER_MAX_ROWS == before  # no global mutation
+
+
+@pytest.fixture(scope="module")
+def rand_loaded(rand_idx, spark, tmp_path_factory):
+    ix, texts = rand_idx
+    path = str(tmp_path_factory.mktemp("pr") / "idx")
+    ix.save(path)
+    return Index.load(spark, path), texts
+
+
+def test_topk_route_identity(rand_loaded, loaded):
+    """A top-level phrase with a finite top_k on a loaded index is
+    scored on the driver (scorer.phrase_topk): its ranked rows equal the
+    distributed plan's exactly (==), in both modes, boosted or not."""
+    ix, texts = rand_loaded
+    served = {"n": 0}
+    orig = scorer.phrase_topk
+
+    def spy(*a, **kw):
+        out = orig(*a, **kw)
+        served["n"] += out is not None
+        return out
+
+    cases = [(ix, {"query": {"match_phrase": {"text": p}}})
+             for p in _rand_phrases(texts, n=12)]
+    cases += [(loaded, QUERIES[i]) for i in range(4)]
+    cases.append((loaded, {"query": {"match_phrase": {"content": {
+        "query": "quick fox", "boost": 2.5}}}}))
+    scorer.phrase_topk = spy
+    try:
+        for mode in ("elasticlunr", "bm25"):
+            for ixx, q in cases:
+                got = [(r["docid"], r["score"])
+                       for r in ixx.search(q, top_k=3, mode=mode).collect()]
+                old = scorer.PHRASE_DRIVER_MAX_ROWS
+                scorer.PHRASE_DRIVER_MAX_ROWS = 0
+                try:
+                    want = [(r["docid"], r["score"]) for r in ixx.search(
+                        q, top_k=3, mode=mode).collect()]
+                finally:
+                    scorer.PHRASE_DRIVER_MAX_ROWS = old
+                assert got == want, (q, mode)
+    finally:
+        scorer.phrase_topk = orig
+    assert served["n"] >= len(cases)

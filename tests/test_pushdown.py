@@ -128,11 +128,15 @@ def test_details_scan_pushes_in_filter_to_positions_table(loaded):
     assert "/positions" in plan
 
 
-def test_search_many_pushes_union_of_terms(loaded):
-    """The bulk path pushes the UNION of all query terms as one literal
-    In(term, ...) into the narrow postings scan — a thousand-query batch
-    still costs ~one pruned scan."""
+def test_search_many_pushes_union_of_terms(loaded, monkeypatch):
+    """The bulk path's Spark plan pushes the UNION of all query terms as
+    one literal In(term, ...) into the narrow postings scan — a
+    thousand-query batch still costs ~one pruned scan. (The driver
+    cap at 0 keeps the batch off the driver-served route.)"""
+    from ex_elasticlunr_spark.search import wand
     from ex_elasticlunr_spark.search.batch import search_many
+
+    monkeypatch.setattr(wand, "DRIVER_SERVE_BYTES", 0)
 
     res = search_many(loaded.inverted,
                       {"qa": "spark merge", "qb": "window merge"},
