@@ -1,7 +1,7 @@
 """Generational delta persistence: append-only index maintenance.
 
 The reference mutates its ETS tables in place and re-serializes the
-whole index on save (storage/disk.ex:22-31); the v5 parquet warehouse
+whole index on save (storage/disk.ex:22-31); the parquet warehouse
 made that a full rewrite per save. At 100 TB that is the one remaining
 maintenance anti-pattern: adding 1% of documents must not rewrite 100 TB
 of term-clustered postings. This module is the Lucene segment/commit-
@@ -9,8 +9,8 @@ point model re-expressed over parquet:
 
   warehouse/
     manifest.json            <- commit point ("generations": [...])
-    postings/ positions/ ... <- generation 0 (the base, never rewritten)
-    deltas/gen-00001/        <- one full v5 layout per save_delta batch
+    snap-NNNNNN/postings/ ... <- generation 0 (the base, never rewritten)
+    deltas/gen-00001/        <- one full layout per save_delta batch
       postings/ ... manifest.json
       tombstones/            <- docids REMOVED from prior generations
     deltas/gen-00002/ ...
@@ -29,7 +29,7 @@ point model re-expressed over parquet:
   ``block_id`` by ``ord_base // block_size`` re-bases every posting
   without touching a byte of payload.
 * ``bind_generations`` (called by ``InvertedIndex._rebind_from``)
-  presents the union of generations as one index: postings/positions/
+  presents the union of generations as one index: postings and
   segments union with shifted ords, tombstoned docs filtered out (gen
   K's tombstones kill docs of generations < K only, so an update =
   tombstone + re-add in the same generation survives), term df partials
@@ -165,18 +165,18 @@ def save_delta(inv, tag: Optional[str] = None) -> str:
         raise ValueError("save_delta(): no pending add/remove operations")
     spark = inv.postings.sparkSession
     manifest = _read_manifest(path)
-    if manifest.get("version", 0) < 5:
-        raise ValueError("delta saves need a version-5 base warehouse")
+    from .indexer import _write_history, check_layout, read_table
+
+    check_layout(manifest)
     # backfill the PREVIOUS commit's history twin before mutating the
     # manifest (heals a crash between its root replace and history copy)
-    from .indexer import _write_history, read_table
 
     _write_history(path, manifest)
     block_size = int(manifest.get("block_size", 4096))
     gens = list(manifest.get("generations", []))
 
     # global ordinal high-water mark across base + prior generations
-    prev_max = _ord_high_water(spark, path, manifest, gens)
+    prev_max = _ord_high_water(manifest, gens)
 
     batches = adds or [None]  # tombstone-only delta: one table-less gen
     last_dir = ""
@@ -184,10 +184,7 @@ def save_delta(inv, tag: Optional[str] = None) -> str:
     # manifest): a reader of the pre-compaction manifest may still be
     # scanning the folded-away gen directories during their GC grace
     # window, so a fresh generation must never REUSE one of their names.
-    # Legacy manifests without the counter fall back to len(gens) —
-    # their historical naming, correct because their save() deleted
-    # deltas/ at commit.
-    gen_seq = int(manifest.get("gen_seq", len(gens)))
+    gen_seq = int(manifest["gen_seq"])
     for i, sub in enumerate(batches):
         ord_base = ((prev_max // block_size) + 1) * block_size
         gen_seq += 1
@@ -225,8 +222,8 @@ def save_delta(inv, tag: Optional[str] = None) -> str:
             sub.save(gen_dir, with_segments=manifest.get("segments", True),
                      block_size=block_size, _history=False)
             gm = _read_manifest(gen_dir)
-            entry["max_ord"] = int(gm.get("max_ord") or 0)
-            entry["field_doc_stats"] = gm.get("field_doc_stats", {})
+            entry["max_ord"] = int(gm["max_ord"])
+            entry["field_doc_stats"] = gm["field_doc_stats"]
         gens.append(entry)
         prev_max = ord_base + entry["max_ord"]
         last_dir = gen_dir
@@ -243,34 +240,22 @@ def save_delta(inv, tag: Optional[str] = None) -> str:
     return last_dir
 
 
-def _gen_docs(entry: dict) -> Optional[int]:
+def _gen_docs(entry: dict) -> int:
     """Approximate live-doc size of a generation from its manifest
     partials (max over fields: a doc indexed under several fields is
-    one doc). ``None`` for an ADDS generation written without the
-    partials (legacy writer) — size UNKNOWN, which the auto tier
-    policy must treat as unfoldable, not free; tombstone-only
-    generations genuinely carry 0 docs."""
-    fds = entry.get("field_doc_stats")
-    if not fds:
-        return 0 if not entry.get("has_adds") else None
+    one doc); tombstone-only generations carry 0 docs."""
+    fds = entry.get("field_doc_stats") or {}
     return max((int(v[0]) for v in fds.values()), default=0)
 
 
-def _ord_high_water(spark, path: str, manifest: dict, gens: list) -> int:
+def _ord_high_water(manifest: dict, gens: list) -> int:
     """Global ordinal high-water mark across base + ``gens`` — the
     shared generation-placement rule of ``save_delta`` and
     ``compact_tiered`` (a divergence here would collide ordinal
     ranges between the two commit paths)."""
     if gens:
         return int(gens[-1]["ord_base"]) + int(gens[-1]["max_ord"])
-    prev_max = manifest.get("max_ord")
-    if prev_max is None:  # legacy base manifest: one tiny agg
-        from .indexer import read_table, tables_dir
-
-        prev_max = (read_table(
-            spark, os.path.join(tables_dir(path, manifest), "ordinals"))
-            .agg(F.max("ord").alias("m")).first()["m"]) or 0
-    return int(prev_max)
+    return int(manifest["max_ord"])
 
 
 def _tomb_field_stats(pre_doc_stats: DataFrame,
@@ -334,14 +319,14 @@ def compact_tiered(inv, tail: Optional[int] = None,
                          "with save_delta() first")
     spark = inv.postings.sparkSession
     manifest = _read_manifest(path)
-    if manifest.get("version", 0) < 5:
-        raise ValueError("tiered compaction needs a version-5 warehouse")
+    from .indexer import (
+        InvertedIndex, _gc_stale_artifacts, _write_history, check_layout,
+        read_table)
+
+    check_layout(manifest)
     gens = list(manifest.get("generations", []))
     if len(gens) < 2:
         return ""  # nothing worth folding
-
-    from .indexer import (
-        InvertedIndex, _gc_stale_artifacts, _write_history, read_table)
 
     # ---- pick the fold: a contiguous newest suffix --------------------
     if tail is not None:
@@ -349,20 +334,13 @@ def compact_tiered(inv, tail: Optional[int] = None,
     else:
         # newest gen always seeds the fold; extend backwards while the
         # next-older generation is size-comparable to the accumulated
-        # tail (tombstone-only generations count 0 and always fold;
-        # an UNKNOWN-size adds generation — legacy writer without the
-        # field_doc_stats partials — never auto-folds: treating it as
-        # free would bind the merge cost to its full size, breaking
-        # the bounded-by-the-run contract; explicit ``tail`` remains
-        # the override)
+        # tail (tombstone-only generations count 0 and always fold)
         sizes = [_gen_docs(e) for e in gens]
-        if sizes[-1] is None:
-            return ""
         acc = sizes[-1]
         cut = len(gens) - 1
         while cut > 0:
             g = sizes[cut - 1]
-            if g is None or (acc > 0 and g > tier_ratio * acc):
+            if acc > 0 and g > tier_ratio * acc:
                 break
             acc += g
             cut -= 1
@@ -391,10 +369,14 @@ def compact_tiered(inv, tail: Optional[int] = None,
         # generations after it, so placing one after ``first`` in the
         # view would wrongly remove survivors — it is carry-only.
         # Ordinals re-base relative to ``first`` (both bases are
-        # block-aligned, so the shift stays pure block arithmetic)
+        # block-aligned, so the shift stays pure block arithmetic). The
+        # view is only saved, and save() derives every statistic from
+        # its rows, so the field partials here (``first``'s) only fill
+        # the shape bind_generations expects.
         rest = suffix[suffix.index(first) + 1:]
         synth = {
             "block_size": block_size,
+            "field_doc_stats": first["field_doc_stats"],
             "generations": [
                 {**e, "ord_base": int(e.get("ord_base", rel_base)) - rel_base}
                 for e in rest
@@ -415,11 +397,11 @@ def compact_tiered(inv, tail: Optional[int] = None,
         carried = carried.distinct()
 
     # ---- write the merged generation ----------------------------------
-    gen_seq = int(manifest.get("gen_seq", len(gens))) + 1
+    gen_seq = int(manifest["gen_seq"]) + 1
     name = "gen-%05d" % gen_seq
     gen_dir = os.path.join(path, DELTAS_DIR, name)
     os.makedirs(gen_dir, exist_ok=True)
-    prev_max = _ord_high_water(spark, path, manifest, keep)
+    prev_max = _ord_high_water(manifest, keep)
     entry = {
         "name": name,
         "ord_base": ((prev_max // block_size) + 1) * block_size,
@@ -431,8 +413,8 @@ def compact_tiered(inv, tail: Optional[int] = None,
         view.save(gen_dir, with_segments=manifest.get("segments", True),
                   block_size=block_size, _history=False)
         gm = _read_manifest(gen_dir)
-        entry["max_ord"] = int(gm.get("max_ord") or 0)
-        entry["field_doc_stats"] = gm.get("field_doc_stats", {})
+        entry["max_ord"] = int(gm["max_ord"])
+        entry["field_doc_stats"] = gm["field_doc_stats"]
         view.unpersist()
     if carried is not None:
         carried.write.mode("overwrite").parquet(
@@ -525,7 +507,6 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
     # ---- per-part tables (part 0 = base, part k = generation k) -------
     parts = [dict(
         postings=inv.postings,
-        positions=inv.postings_full,
         ordinals=inv._ordinals,
         doc_stats=inv.doc_stats.select("field", "docid", "doc_len"),
         docs=inv.docs,
@@ -538,64 +519,49 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
     from .indexer import read_table, tables_dir
 
     # the files behind each table, part by part (build/files.py): the
-    # base's as bound by _rebind_from, then each adds generation's; a
-    # table some part lacks stays a Spark read (so does field_stats,
-    # assembled below rather than read)
+    # base's as bound by _rebind_from, then each adds generation's
+    # (field_stats is assembled below rather than read, so it stays a
+    # Spark read)
     files = {name: list(b[1]) for name, b in inv._files.items()
              if name != "field_stats"}
 
     for e in entries:
-        gd = os.path.join(path, DELTAS_DIR, e["name"])
-        # tombstones are written directly at the gen root; the gen's
-        # TABLE set was written by a nested save() and resolves through
-        # the gen's own manifest (snapshot subdir on current writers,
-        # the gen root on legacy layouts / table-less tombstone gens)
-        try:
-            gt = tables_dir(gd, _read_manifest(gd))
-        except FileNotFoundError:
-            gt = gd
         tombs.append(_tomb_docids(path, e))
         if not e.get("has_adds"):
             parts.append(None)
             continue
+        # tombstones are written directly at the gen root; the gen's
+        # TABLE set was written by a nested save() and resolves through
+        # the gen's own manifest (its snapshot subdirectory)
+        gd = os.path.join(path, DELTAS_DIR, e["name"])
+        gt = tables_dir(gd, _read_manifest(gd))
         base = int(e["ord_base"])
-        for name in list(files):
-            d = os.path.join(gt, name)
-            if os.path.exists(d):
-                files[name].append(list_part(d, base, block_size))
-            else:
-                del files[name]
-        post = _tf(_shift(read_table(spark, os.path.join(gt, "postings")),
-                          base))
-        pos = post
-        if os.path.exists(os.path.join(gt, "positions")):
-            pos = _tf(_shift(
-                read_table(spark, os.path.join(gt, "positions")), base))
-        seg = None
-        if os.path.exists(os.path.join(gt, "segments")):
+        for name in files:
+            files[name].append(list_part(os.path.join(gt, name), base,
+                                         block_size))
+
+        def _read(name):
+            return read_table(spark, os.path.join(gt, name))
+
+        seg = lens = None
+        if inv._segments is not None:
             # block-aligned ord_base: the payload decodes relative to
             # block_id * block_size, so shifting block_id re-bases the
-            # whole block without touching the compressed bytes
-            seg = (read_table(spark, os.path.join(gt, "segments"))
+            # whole block without touching the compressed bytes; the
+            # doc_len blocks re-base the same way
+            seg = (_read("segments")
                    .withColumn("block_id",
                                F.col("block_id") + F.lit(base // block_size))
                    .withColumn("min_ord", F.col("min_ord") + F.lit(base))
                    .withColumn("max_ord", F.col("max_ord") + F.lit(base)))
-        lens = None
-        if os.path.exists(os.path.join(gt, "seg_lens")):
-            # same block-aligned re-base as the posting segments
-            lens = (read_table(spark, os.path.join(gt, "seg_lens"))
-                    .withColumn("block_id",
-                                F.col("block_id") + F.lit(base // block_size)))
+            lens = _read("seg_lens").withColumn(
+                "block_id", F.col("block_id") + F.lit(base // block_size))
         parts.append(dict(
-            postings=post, positions=pos,
-            ordinals=_shift(
-                read_table(spark, os.path.join(gt, "ordinals")), base),
-            doc_stats=read_table(spark, os.path.join(gt, "doc_stats"))
-            .select("field", "docid", "doc_len"),
-            docs=read_table(spark, os.path.join(gt, "docs")),
-            term_stats=read_table(spark, os.path.join(gt, "term_stats"))
-            .select("field", "term", "df"),
+            postings=_tf(_shift(_read("postings"), base)),
+            ordinals=_shift(_read("ordinals"), base),
+            doc_stats=_read("doc_stats").select("field", "docid", "doc_len"),
+            docs=_read("docs"),
+            term_stats=_read("term_stats").select("field", "term", "df"),
             segments=seg,
             seg_lens=lens,
         ))
@@ -632,7 +598,6 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
 
     raw_postings = _union("postings")
     inv.postings = _alive(raw_postings)
-    inv.postings_full = _alive(_union("positions"))
     inv._ordinals = _alive(_union("ordinals"))
     # the durable base-gen ordinals_extra no longer covers the merged
     # docs universe — recompute lazily on demand
@@ -661,14 +626,9 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
     ts_sum = (rows.groupBy("field", "term").agg(F.sum("df").alias("df"))
               .where(F.col("df") > 0))
 
-    counts = _merged_field_counts(manifest)
-    if counts is not None:
-        nd_df = inline_rows(
-            spark, [(f, n) for f, (n, _s) in sorted(counts.items())],
-            "field string, n_docs long")
-    else:  # legacy base manifest without field_doc_stats partials
-        nd_df = inv.doc_stats.groupBy("field").agg(
-            F.count(F.lit(1)).alias("n_docs"))
+    counts = sorted(_merged_field_counts(manifest).items())
+    nd_df = inline_rows(spark, [(f, n) for f, (n, _s) in counts],
+                        "field string, n_docs long")
     inv.term_stats = (
         ts_sum.join(F.broadcast(nd_df), "field")
         .withColumn("idf", F.lit(1.0) + F.log10(
@@ -676,27 +636,17 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
         .drop("n_docs")
     )
 
-    doc_stats = inv.doc_stats
-
     def _fs_thunk():
         import math
 
         vrows = {r["field"]: r["n"] for r in ts_sum.groupBy("field").agg(
             F.count(F.lit(1)).alias("n")).collect()}
-        if counts is not None:
-            items = sorted(counts.items())
-        else:
-            items = sorted(
-                (r["field"], (int(r["n"]), int(r["s"] or 0)))
-                for r in doc_stats.groupBy("field").agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("doc_len").alias("s")).collect())
         rows = [
             (f, n,
              int(vrows.get(f) or 0),
              (1.0 / math.sqrt(vrows[f])) if vrows.get(f) else 0.0,
              (float(s) / n) if n else 0.0)
-            for f, (n, s) in items
+            for f, (n, s) in counts
         ]
         return inline_rows(spark, rows, _FS_SCHEMA)
 
@@ -704,33 +654,21 @@ def bind_generations(inv, spark, path: str, manifest: dict) -> None:
     inv._fs_thunk = _fs_thunk
 
     # ---- segments for WAND --------------------------------------------
-    segs = [p["segments"] for p in live]
-    lens = [p["seg_lens"] for p in live]
-    if segs and all(s is not None for s in segs):
-        inv._segments = (block_size, _union_all(segs), inv._ordinals)
+    if inv._segments is not None:
         # doc_len blocks union the same way (lens of tombstoned docs
         # stay in the union — decode joins are keyed by the live,
-        # tombstone-filtered posting ords, so dead entries never match);
-        # a missing per-gen table falls back to the lazy doc_stats build
-        inv._seg_lens = (_union_all(lens)
-                         if all(x is not None for x in lens) else None)
-    else:
-        # fall back to segments() — its streaming path still works: the
-        # union preserves each generation's block-clustered partitions
-        # (the literal tombstone filter and the ord shift are map-side)
-        inv._segments = None
-        inv._seg_lens = None
+        # tombstone-filtered posting ords, so dead entries never match)
+        inv._segments = (block_size, _union("segments"), inv._ordinals)
+        inv._seg_lens = _union("seg_lens")
     bind(inv, files)
 
 
-def _merged_field_counts(manifest: dict) -> Optional[dict]:
-    """{field: [n_docs, sum_doc_len]} across base + generations minus
+def _merged_field_counts(manifest: dict) -> dict:
+    """{field: (n_docs, sum_doc_len)} across base + generations minus
     tombstone decrements, from manifest integer arithmetic alone (no
-    Spark job). None when the base predates the partials."""
-    base = manifest.get("field_doc_stats")
-    if not base:
-        return None
-    out = {f: [int(n), int(s)] for f, (n, s) in base.items()}
+    Spark job)."""
+    out = {f: [int(n), int(s)]
+           for f, (n, s) in manifest["field_doc_stats"].items()}
     for e in manifest["generations"]:
         for f, (n, s) in (e.get("field_doc_stats") or {}).items():
             cur = out.setdefault(f, [0, 0])

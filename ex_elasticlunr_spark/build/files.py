@@ -54,7 +54,6 @@ _BLOCK_COLS = frozenset(("block_id",))
 # recorded parts are checked against, and the Spark read's source)
 TABLES = {
     "postings": lambda ix: ix.postings,
-    "positions": lambda ix: ix.postings_full,
     # per-generation df partials on a generational binding (the caller
     # sums them); the merged statistics everywhere else
     "term_stats": lambda ix: ix.term_stats,
@@ -98,11 +97,8 @@ def bind(index, parts: dict) -> None:
     reassignment of that table leaves its files behind."""
     index._files = {}
     for table, ps in parts.items():
-        if ((table == "positions" and index.postings_full is index.postings)
-                or (table in ("segments", "ordinals")
-                    and index._segments is None)
-                or (table == "seg_lens" and index._seg_lens is None)):
-            continue  # not bound from this snapshot's table
+        if table == "ordinals" and index._segments is None:
+            continue  # no segments bound: nothing in this ordinal space
         index._files[table] = (TABLES[table](index), tuple(ps),
                                [None] * len(ps))
 

@@ -26,19 +26,18 @@ Dataflow (one analyzer pass over the data, MAP-ONLY postings):
     field_stats = per-field scalars (n_docs, unique terms, flnorm,
                   avgdl) — two per-field collects, assembled driver-side
 
-save() then persists the v5 layout in overlapped phases: flat ingest
-write (staging) ∥ docs scan, then the term-clustering shuffles (narrow
-postings ∥ positions) ∥ doc_stats ∥ ordinals table, then stats ∥
-compressed segments (both reading the clustered parquet).
+save() then persists the v6 layout in overlapped phases: flat ingest
+write (staging) ∥ docs scan, then the one term-clustering shuffle of
+``postings`` ∥ doc_stats ∥ ordinals table, then stats ∥ compressed
+segments (both reading the clustered parquet's narrow columns).
 
 Scale notes (10^12 turns):
   * the ingest pass itself is shuffle-free — the build is
     embarrassingly parallel up to the stats aggregations, whose
     outputs are vocabulary- or doc-sized with map-side combine; the
-    durable layout costs the term-clustering shuffles (narrow hot-path
-    postings, and the positional table when positions are stored —
-    overlapped, and neither carries the docid string: result docids
-    resolve through the ordinals table);
+    durable layout costs one term-clustering shuffle (the postings
+    table, positions included when they are stored; it carries no
+    docid string: result docids resolve through the ordinals table);
   * term-level skew appears only in clustering/segment compaction and
     is handled with ordinal-range salting (block-aligned pmod salt);
   * field_stats/term_stats are tiny relative to postings and are
@@ -59,20 +58,26 @@ from .files import TABLES, bind, list_part, parquet_files
 
 
 
-# every table directory name a warehouse snapshot can contain (across
-# layout versions) — the GC sweep and legacy-layout retirement key off it
-KNOWN_TABLES = (
-    "postings", "positions", "flat", "docs", "doc_stats", "field_stats",
-    "term_stats", "ordinals", "ordinals_extra", "segments", "seg_lens",
-)
+# the on-disk layout save() writes; load, save_delta and compact_tiered
+# refuse any other (check_layout)
+LAYOUT_VERSION = 6
+
+
+def check_layout(manifest: dict) -> None:
+    """Raise ``ValueError`` unless ``manifest`` describes the current
+    layout."""
+    version = manifest.get("version")
+    if version != LAYOUT_VERSION:
+        raise ValueError(
+            f"warehouse layout version {version} is not supported (this "
+            f"library reads version {LAYOUT_VERSION}): rebuild the index "
+            f"and save it again")
 
 
 def tables_dir(path: str, manifest: dict) -> str:
     """Directory holding ``manifest``'s table set: the manifest's
-    snapshot subdirectory for snapshot-versioned warehouses, the
-    warehouse root for legacy layouts (tables written in place)."""
-    snap = manifest.get("snapshot_dir")
-    return os.path.join(path, snap) if snap else path
+    snapshot subdirectory."""
+    return os.path.join(path, manifest["snapshot_dir"])
 
 
 # parquet footer key under which Spark's writer stores the Spark schema
@@ -122,11 +127,10 @@ def table_path(path: str, name: str) -> str:
 def _gc_stale_artifacts(path: str, manifest: dict) -> None:
     """Delete everything the CURRENT committed manifest does not
     reference: older snapshot directories, delta generations dropped by
-    a compaction, legacy root-level tables superseded by a snapshot,
-    and crashed staging dirs. Called at the START of the next save —
-    never at commit — so anything a reader of the previous manifest can
-    still be scanning survives one full commit cycle (the same grace
-    contract as Iceberg snapshot expiry with retention 1)."""
+    a compaction, and crashed staging dirs. Called at the START of the
+    next save — never at commit — so anything a reader of the previous
+    manifest can still be scanning survives one full commit cycle (the
+    same grace contract as Iceberg snapshot expiry with retention 1)."""
     import glob as _glob
     import shutil as _shutil
 
@@ -143,13 +147,6 @@ def _gc_stale_artifacts(path: str, manifest: dict) -> None:
             for d in _glob.glob(os.path.join(ddir, "gen-*")):
                 if os.path.basename(d) not in live_gens:
                     _shutil.rmtree(d, ignore_errors=True)
-    if cur_snap:
-        # a snapshot manifest never references root-level tables: retire
-        # a legacy in-place layout left by an older writer
-        for name in KNOWN_TABLES:
-            p = os.path.join(path, name)
-            if os.path.exists(p):
-                _shutil.rmtree(p, ignore_errors=True)
     for junk in (".staging", ".old"):
         _shutil.rmtree(os.path.join(path, junk), ignore_errors=True)
     # retained commit-history manifests (time travel): prune entries
@@ -175,7 +172,8 @@ DELTAS_DIR = "deltas"  # mirrors build/deltas.py (import cycle guard)
 
 def _history_readable(path: str, manifest: dict) -> bool:
     """True iff every artifact ``manifest`` references still exists."""
-    if not os.path.isdir(tables_dir(path, manifest)):
+    if ("snapshot_dir" not in manifest
+            or not os.path.isdir(tables_dir(path, manifest))):
         return False
     return all(
         os.path.isdir(os.path.join(path, DELTAS_DIR, e["name"]))
@@ -275,15 +273,16 @@ def list_snapshots(path: str) -> list:
 class InvertedIndex:
     """A built index: five DataFrames + per-field analyzer configs.
 
-    Tables (durable v5 layout; logical schemas in SURVEY.md §1.2):
-      postings(field, term, ord, tf_raw, tf, doc_len)
-                                             -- NARROW term-clustered hot
-                                                path; no docid (ordinals
-                                                resolve result rows)
-      positions(field, term, ord, tf_raw, doc_len, positions, ords)
-                                             -- term-clustered positional
-                                                table (postings_full on a
-                                                loaded index)
+    Tables (durable v6 layout; logical schemas in SURVEY.md §1.2):
+      postings(field, term, ord, tf_raw, tf, doc_len[, positions, ords])
+                                             -- the one term-clustered
+                                                posting table; positions
+                                                and token ordinals when
+                                                store_positions is set;
+                                                no docid (ordinals
+                                                resolve result rows).
+                                                Readers project the
+                                                columns they need.
       doc_stats(field, docid, doc_len[, ord])
       field_stats(field, n_docs, n_unique_terms, flnorm, avg_doc_len)
       term_stats(field, term, df, idf)       -- elasticlunr idf
@@ -307,14 +306,8 @@ class InvertedIndex:
         docs: DataFrame,
         analyzers: Dict[str, AnalyzerConfig],
         store_positions: bool = True,
-        postings_full: Optional[DataFrame] = None,
     ):
         self.postings = postings
-        # the positions-bearing postings view (== postings for a fresh
-        # build; the term-clustered positions table on a loaded v5
-        # index). The scoring hot path uses the narrow `postings`;
-        # phrase/details/introspection use this one.
-        self.postings_full = postings_full if postings_full is not None else postings
         self.doc_stats = doc_stats
         self._fs_thunk = None  # lazy field_stats builder (multi-gen load)
         self.field_stats = field_stats
@@ -325,7 +318,7 @@ class InvertedIndex:
         self._flat = None  # build-time analyzer output incl. sentinel rows
         self._segments = None  # (block_size, segments DF, ordinals DF)
         self._seg_lens = None  # per-(field, block) doc_len blocks (codec v2)
-        self._ordinals = None  # durable docid->ord table (v4+ layout)
+        self._ordinals = None  # durable docid->ord table (loaded index)
         self._key = None  # explicit currency override (see key_col)
         self._ord_map = None  # cached translate plan (fresh builds)
         self._ordinals_all = None  # translate incl. zero-content docs
@@ -371,8 +364,8 @@ class InvertedIndex:
         """The internal per-doc key the query path aggregates on.
 
         ``ord`` (int64) wherever a consistent global ordinal space
-        exists — fresh builds (map-only ingest ordinals) and loaded v5
-        indexes (whose narrow postings carry NO docid at all: the ~17-byte
+        exists — fresh builds (map-only ingest ordinals) and loaded
+        indexes (whose postings carry NO docid at all: the ~17-byte
         docid string is resolved from the ordinals table only for final
         result rows, the one thing that shrinks the build's clustering
         shuffle AND makes per-doc aggregation an int-keyed operation).
@@ -437,7 +430,7 @@ class InvertedIndex:
                 self._seg_lens = None
         if (self._ordinals is not None and "ord" in self.postings.columns
                 and not force):
-            # v4 layout saved without segments: the postings table is
+            # a warehouse saved without segments: the postings table is
             # already block-clustered with ords — pure-map build
             from .segments import build_segments_streaming
 
@@ -505,15 +498,7 @@ class InvertedIndex:
                 size = 1 << 62
             n = int(min(max(size // (1 << 20), 2), sc.defaultParallelism))
             if size < (1 << 62) and n < sc.defaultParallelism:
-                # keep the postings_full identity: on fresh builds the
-                # positional view IS the postings table, and leaving it
-                # bound to the pre-repartition plan would make every
-                # phrase/details query MISS the cache and re-run the
-                # analyzer (measured +0.35 s per phrase query)
-                same_full = self.postings_full is self.postings
                 self.postings = self.postings.repartition(n)
-                if same_full:
-                    self.postings_full = self.postings
                 self.doc_stats = self.doc_stats.repartition(
                     max(n // 2, 1))
         self.cache()
@@ -570,27 +555,25 @@ class InvertedIndex:
         """Persist as a partitioned parquet warehouse (Iceberg-shaped
         layout; reference analogue: storage/disk.ex:22-31).
 
-        Durable layout (version 5), Lucene-shaped table split:
+        Durable layout (version 6), Lucene-shaped table split:
 
-        * ``postings``  — NARROW (field, term, ord, tf_raw, doc_len),
-          shuffled once on (field, term, pmod(block, salt)) and sorted
-          within partitions by (term, field, ord): row groups carry
-          tight term ranges so the query path's pushed ``In(term, ...)``
-          /``StartsWith`` predicates prune on every scan, the
-          block-aligned salt bounds hot-term skew AND makes every
-          (field, term, block) complete inside one partition. NO docid:
+        * ``postings``  — (field, term, ord, tf_raw, doc_len), plus the
+          positional columns (positions char-offset pairs, ords token
+          ordinals) when ``store_positions`` is set: the north rule's
+          "term -> sorted (docID, tf, positions)" posting shape, in ONE
+          table. Shuffled once on (field, term, pmod(block, salt)) and
+          sorted within partitions by (term, field, ord): row groups
+          carry tight term ranges so the query path's pushed
+          ``In(term, ...)``/``StartsWith`` predicates prune on every
+          scan, the block-aligned salt bounds hot-term skew AND makes
+          every (field, term, block) complete inside one partition.
+          Parquet is columnar, so a scoring scan that projects the
+          narrow columns never reads the position arrays. NO docid:
           the ~17-byte docid string would be the widest column of the
           build's wide shuffle; result rows resolve docids through
           ``ordinals`` instead (index.key_col / executor translate).
-        * ``positions`` — the positional columns (positions char-offset
-          pairs + ords token ordinals), clustered with the SAME keys and
-          sort in an overlapped parallel shuffle — the north rule's
-          "term -> sorted (docID, tf, positions)" posting shape. The
-          phrase/snippet/highlight/details paths scan it with the same
-          pushed-predicate pruning as the hot path (Lucene's .pos
-          next-to-postings shape; the array shuffle is paid once, at
-          save). The doc-ordered ``flat`` analyzer dump is now a
-          STAGING artifact only.
+          The doc-ordered ``flat`` analyzer dump is a STAGING artifact
+          only.
         * ``ordinals``  — the global docID assignment (docid -> ord;
           map-only ingest stride for fresh builds, sorted zipWithIndex
           for merges, build/ordinals.py).
@@ -600,6 +583,17 @@ class InvertedIndex:
         * stats tables derive from ONE aggregation pass over the
           clustered parquet (the vocabulary-sized (field, term) counts
           are persisted and reused for field_stats + term_stats).
+
+        ``timings`` (when given) receives each stage's seconds:
+        ``postings_write_sec`` the flat STAGING write (the analyzer
+        pass; no durable postings table), ``positions_write_sec`` the
+        term-clustering shuffle and write of the ``postings`` table,
+        ``doc_stats_wall_sec``, ``ordinals_wall_sec``,
+        ``stats_write_sec`` (term_stats + field_stats) and
+        ``segments_write_sec`` (segments + seg_lens) their tables;
+        ``ingest_wall_sec``, ``cluster_wall_sec`` and ``tail_wall_sec``
+        the three serial phases' wall times, and ``*_cpu_sec`` the
+        host-wide busy CPU per phase (Linux only).
 
         Everything is written to a ``.staging`` subdirectory and swapped
         in atomically at the end: saving an index whose lineage reads
@@ -672,8 +666,8 @@ class InvertedIndex:
 
         # ---- phase 1: INGEST — the analyzer output written exactly as
         # produced (map-only, no shuffle): one analyzer pass feeding
-        # every durable table; staging-only in the v5 layout (the
-        # durable positional home is the term-clustered positions table)
+        # every durable table; staging-only (the durable positional home
+        # is the term-clustered postings table)
         t0 = _time.perf_counter()
         _cpu0 = _busy_jiffies()
         flat_cols = ["field", "docid", "term", "tf_raw", "doc_len"]
@@ -685,15 +679,15 @@ class InvertedIndex:
         # zipWithIndex (their ingest ordinals would collide across
         # builds)
         has_ingest_ord = self._flat is not None and "ord" in self._flat.columns
-        # compaction fast-path: a LOADED index (v5 or multi-generation
-        # union) already has a valid global ordinal space — reuse it as
-        # the "ingest" ordinal instead of restoring docids onto every
+        # compaction fast-path: a LOADED index (one generation or a
+        # multi-generation union) already has a valid global ordinal
+        # space — reuse it as the "ingest" ordinal instead of restoring docids onto every
         # posting row (a wide array-bearing shuffle join) only to
         # reassign fresh ordinals with a second one. Posting rows carry
         # docid NULL (nothing downstream reads it when ords ride along);
         # only the sentinel rows need real docids — a docid-sized join.
         reuse_ord = (self._flat is None
-                     and "docid" not in self.postings_full.columns
+                     and "docid" not in self.postings.columns
                      and self._ordinals is not None)
         if has_ingest_ord or reuse_ord:
             flat_cols.append("ord")
@@ -706,7 +700,7 @@ class InvertedIndex:
             flat = flat.select(*flat_cols)
         else:
             # reconstruct the sentinel layout from postings + doc_stats
-            src = self.postings_full
+            src = self.postings
             if reuse_ord:
                 src = src.withColumn("docid", F.lit(None).cast("string"))
             elif "docid" not in src.columns:
@@ -725,8 +719,6 @@ class InvertedIndex:
                 sent = sent.join(self.ordinals_df(), "docid")
             if self.store_positions:
                 for c in ("positions", "ords"):
-                    if c not in src.columns:
-                        src = src.withColumn(c, F.lit(None).cast("array<int>"))
                     sent = sent.withColumn(c, F.lit(None).cast("array<int>"))
             flat = src.select(*flat_cols).unionByName(sent.select(*flat_cols))
         # ---- phase 1 (overlapped): the analyzer-heavy flat ingest write
@@ -827,7 +819,7 @@ class InvertedIndex:
             ordinals_box.append(o)
             stage_secs["ordinals_wall_sec"] = _time.perf_counter() - s0
 
-        # ---- phase 3: TERM-CLUSTERED narrow postings --------------------
+        # ---- phase 3: TERM-CLUSTERED postings --------------------------
         # ONE clustering shuffle (plus, only for merged indexes, the
         # docid->ordinal shuffle-hash join — fresh builds carry ingest
         # ordinals in the flat table). The salt is pmod(block_id,
@@ -838,29 +830,24 @@ class InvertedIndex:
         # further shuffle, and (c) within-partition (field, term, ord)
         # sort gives parquet row groups tight term ranges: the query
         # path's pushed In(term,...) / StartsWith predicates prune row
-        # groups on every scan. No positions column here — the hot path
-        # stays narrow.
+        # groups on every scan. No docid: the ~17-byte docid string is
+        # resolved from the ordinals table only for final result rows —
+        # it would otherwise be the single widest column riding the
+        # build's only wide shuffle.
         try:
             n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
         except (TypeError, ValueError):
             n_shuffle = spark.sparkContext.defaultParallelism
+        pos_cols = ["positions", "ords"] if self.store_positions else []
 
-        def _cluster_write(extra_cols, table, timing_key):
-            """ONE term-clustering shuffle + within-partition sort +
-            write. Used for both the NARROW hot-path postings (no docid:
-            the ~17-byte docid string is resolved from the ordinals
-            table only for final result rows — it would otherwise be the
-            single widest column riding the build's only wide shuffle)
-            and, when positions are stored, the positional table (same
-            keys/sort, so phrase/snippet/details scans get the same
-            pushed-predicate row-group pruning the narrow path has)."""
-            base_cols = ["field", "term", "tf_raw", "doc_len"]
+        def _w_cluster():
+            base_cols = ["field", "term", "tf_raw", "doc_len", *pos_cols]
             if has_ingest_ord:
                 pre = raw.where(F.col("term").isNotNull()).select(
-                    *base_cols, "ord", *extra_cols)
+                    *base_cols, "ord")
             else:
                 posts = raw.where(F.col("term").isNotNull()).select(
-                    *base_cols, "docid", *extra_cols)
+                    *base_cols, "docid")
                 # SHUFFLE_HASH: the default sort-merge join would sort
                 # the whole postings side by docid only to immediately
                 # re-shuffle it by term — the hash join skips both sorts
@@ -879,71 +866,27 @@ class InvertedIndex:
                 # selects within the term's row groups.
                 .sortWithinPartitions("term", "field", "ord")
                 .select("field", "term", "ord", "tf_raw", "doc_len",
-                        *extra_cols)
+                        *pos_cols)
             )
             s0 = _time.perf_counter()
-            clustered.write.mode("overwrite").parquet(_sp(table))
-            stage_secs[timing_key] = _time.perf_counter() - s0
+            clustered.write.mode("overwrite").parquet(_sp("postings"))
+            stage_secs["positions_write_sec"] = _time.perf_counter() - s0
 
-        def _w_cluster():
-            _cluster_write([], "postings", "cluster_write_sec")
-
-        def _w_positions():
-            # the positional table pays the array shuffle/sort ONCE at
-            # save (the north rule's term->sorted (docID, tf, positions)
-            # posting shape); before v5 positions stayed doc-ordered in
-            # the flat ingest table, which made every phrase/snippet/
-            # details query an unpruned full-corpus scan on a loaded
-            # index (round-2 VERDICT "What's wrong #1")
-            _cluster_write(["positions", "ords"], "positions",
-                           "positions_write_sec")
-
-        # ONE clustering shuffle, not two: when positions are stored,
-        # their table is a superset of the narrow postings columns under
-        # the SAME keys and sort — so only the positional table rides
-        # the (only) corpus-wide shuffle, and the narrow hot-path
-        # postings table is derived below as a MAP-ONLY column
-        # projection of the written positions parquet (guide §2.4
-        # "remove shuffles outright" / §8 "move heavy bytes once,
-        # derive the rest"). Before this, the same posting rows were
-        # shuffled and sorted twice (once narrow, once with arrays).
-        cluster_thunks = ([_w_positions] if self.store_positions
-                          else [_w_cluster])
         if has_ingest_ord:
             # no join dependency: the big shuffle overlaps the two
             # docid-sized table builds
-            _overlap(*cluster_thunks, _w_doc_stats, _w_ordinals)
+            _overlap(_w_cluster, _w_doc_stats, _w_ordinals)
         else:
             _overlap(_w_doc_stats, _w_ordinals)
-            _overlap(*cluster_thunks)
+            _w_cluster()
         t2 = _time.perf_counter()
         _cpu2 = _busy_jiffies()
         ordinals = ordinals_box[0]
         doc_stats = read_table(spark, _sp("doc_stats"))
-        narrow_cols = ["field", "term", "ord", "tf_raw", "doc_len"]
-        if self.store_positions:
-            # stats + segments read the positions parquet's NARROW
-            # columns directly (columnar scan — array columns never
-            # leave disk), so they do not serialize behind the
-            # projection write; the durable postings table itself is
-            # written in the phase-4 overlap group below. The read
-            # bin-packs several salt-partition files per task, so a
-            # WITHIN-PARTITION re-sort (local, no shuffle) restores
-            # tight per-row-group term ranges for the pushed In(term)
-            # pruning the query path relies on.
-            postings = read_table(spark, _sp("positions")) \
-                .select(*narrow_cols)
-
-            def _w_postings_proj():
-                s0 = _time.perf_counter()
-                (postings.sortWithinPartitions("term", "field", "ord")
-                 .write.mode("overwrite").parquet(_sp("postings")))
-                stage_secs["cluster_write_sec"] = _time.perf_counter() - s0
-
-            proj_thunks = [_w_postings_proj]
-        else:
-            postings = read_table(spark, _sp("postings"))
-            proj_thunks = []
+        # stats + segments read the clustered parquet's NARROW columns
+        # (columnar scan — array columns never leave disk)
+        postings = read_table(spark, _sp("postings")).select(
+            "field", "term", "ord", "tf_raw", "doc_len")
 
         # ---- phase 4 (overlapped): stats ∥ segments — both read the
         # clustered parquet and are otherwise independent. Stats are
@@ -1035,19 +978,16 @@ class InvertedIndex:
                 .write.mode("overwrite").parquet(_sp("seg_lens"))
             stage_secs["segments_write_sec"] = _time.perf_counter() - s0
 
-        # v5: the doc-ordered flat ingest table is a STAGING artifact
-        # only (one analyzer pass feeding every durable table) — the
-        # durable positional home is the term-clustered `positions`
+        # the doc-ordered flat ingest table is a STAGING artifact only
+        # (one analyzer pass feeding every durable table)
         tables = ["postings", "docs", "doc_stats", "field_stats",
                   "term_stats", "ordinals", "ordinals_extra"]
-        if self.store_positions:
-            tables.append("positions")
         fds_box: dict = {}
         if with_segments:
             tables += ["segments", "seg_lens"]
-            _overlap(_write_stats, _w_segments, *proj_thunks)
+            _overlap(_write_stats, _w_segments)
         else:
-            _overlap(_write_stats, *proj_thunks)
+            _write_stats()
         # global ordinal high-water mark: generational delta saves place
         # the next generation's ordinal space above it (block-aligned);
         # computed inside _w_ordinals, overlapped with the clustering
@@ -1059,13 +999,9 @@ class InvertedIndex:
         _cpu4 = _busy_jiffies()
 
         manifest = {
-            "version": 5,
+            "version": LAYOUT_VERSION,
             "store_positions": self.store_positions,
-            "clustered_positions": self.store_positions,
-            "clustered_ord": True,
-            "ordinals_extra": True,
             "segments": with_segments,
-            "codec": 2,  # (gap, tf) payloads + seg_lens side table
             "block_size": block_size,
             "max_ord": int(max_ord_row["m"] or 0),
             "field_doc_stats": fds_box.get("v", {}),
@@ -1132,7 +1068,7 @@ class InvertedIndex:
             for k in stage_secs:
                 timings[k] = round(stage_secs[k], 4)
             timings["ingest_wall_sec"] = round(t1 - t0, 4)
-            # doc_stats/ordinals + cluster shuffle(s)
+            # doc_stats/ordinals + the clustering shuffle
             timings["cluster_wall_sec"] = round(t2 - t1, 4)
             # stats ∥ segments
             timings["tail_wall_sec"] = round(t4 - t2, 4)
@@ -1167,61 +1103,27 @@ class InvertedIndex:
         for df in self._aux_persisted:
             df.unpersist()
         self._aux_persisted = []
-        version = manifest.get("version", 2)
-        # snapshot-versioned warehouses keep their tables under the
-        # manifest's snapshot subdirectory; legacy layouts at the root
         tp = tables_dir(path, manifest)
-        if version >= 5:
-            # v5 layout: NARROW term-clustered postings (field, term,
-            # ord, tf_raw, doc_len — no docid: result rows translate via
-            # the ordinals table) + the term-clustered positional table
-            # (same keys/sort, carrying positions+ords) as postings_full
-            self.postings = read_table(
-                spark, os.path.join(tp, "postings")
-            ).withColumn("tf", F.sqrt(F.col("tf_raw")))
-            if manifest.get("clustered_positions") and os.path.exists(
-                    os.path.join(tp, "positions")):
-                self.postings_full = read_table(
-                    spark, os.path.join(tp, "positions")
-                ).withColumn("tf", F.sqrt(F.col("tf_raw")))
-            else:
-                self.postings_full = self.postings
-            self._ordinals = read_table(spark, os.path.join(tp, "ordinals"))
-            extra_p = os.path.join(tp, "ordinals_extra")
-            if (manifest.get("ordinals_extra")
-                    and not manifest.get("generations")
-                    and os.path.exists(extra_p)):
-                # universe translate = pure union of two parquet scans
-                # (generational binds fall back to the lazy anti-join —
-                # bind_generations resets this)
-                self._ordinals_all = self._ordinals.select(
-                    "docid", F.col("ord").cast("long").alias("ord")
-                ).unionByName(read_table(spark, extra_p))
-        elif version == 4:
-            # v4 split layout: narrow clustered postings (hot path),
-            # positions in the doc-ordered flat ingest table (cold path)
-            self.postings = read_table(
-                spark, os.path.join(tp, "postings")
-            ).withColumn("tf", F.sqrt(F.col("tf_raw")))
-            self.postings_full = (
-                read_table(spark, os.path.join(tp, "flat"))
-                .where(F.col("term").isNotNull())
-                .withColumn("tf", F.sqrt(F.col("tf_raw")))
-            )
-            self._ordinals = read_table(spark, os.path.join(tp, "ordinals"))
-        else:
-            raw = read_table(spark, os.path.join(tp, "postings"))
-            if manifest.get("doc_rows_in_postings"):
-                raw = raw.where(F.col("term").isNotNull())
-            if "tf" not in raw.columns:
-                raw = raw.withColumn("tf", F.sqrt(F.col("tf_raw")))
-            self.postings = raw
-            self.postings_full = raw
-            self._ordinals = None
-        self.doc_stats = read_table(spark, os.path.join(tp, "doc_stats"))
-        self.field_stats = read_table(spark, os.path.join(tp, "field_stats"))
-        self.term_stats = read_table(spark, os.path.join(tp, "term_stats"))
-        self.docs = read_table(spark, os.path.join(tp, "docs"))
+
+        def _read(name):
+            return read_table(spark, os.path.join(tp, name))
+
+        # the one term-clustered posting table (positions + ords when
+        # stored; no docid: result rows translate via the ordinals table)
+        self.postings = _read("postings").withColumn(
+            "tf", F.sqrt(F.col("tf_raw")))
+        self._ordinals = _read("ordinals")
+        if not manifest.get("generations"):
+            # universe translate = pure union of two parquet scans
+            # (generational binds fall back to the lazy anti-join —
+            # bind_generations resets this)
+            self._ordinals_all = self._ordinals.select(
+                "docid", F.col("ord").cast("long").alias("ord")
+            ).unionByName(_read("ordinals_extra"))
+        self.doc_stats = _read("doc_stats")
+        self.field_stats = _read("field_stats")
+        self.term_stats = _read("term_stats")
+        self.docs = _read("docs")
         if self._segments is not None:
             self._segments[1].unpersist()
             self._segments[2].unpersist()
@@ -1229,31 +1131,20 @@ class InvertedIndex:
         if self._seg_lens is not None:
             self._seg_lens.unpersist()
         self._seg_lens = None
-        # codec v1 warehouses interleaved doc_len into posting payloads;
-        # ignore their segments — the lazy streaming rebuild re-encodes
-        # from the clustered postings in the current format
-        if (manifest.get("segments") and manifest.get("codec", 1) >= 2
-                and os.path.exists(os.path.join(tp, "segments"))):
-            self._segments = (
-                manifest.get("block_size", 4096),
-                read_table(spark, os.path.join(tp, "segments")),
-                # reuse the SAME DataFrame object bound above:
-                # seg_len_blocks' trust_inline fast path checks
-                # `seg_ords is self._ordinals` — a second read of the
-                # identical parquet would defeat it and pay a redundant
-                # docid->ord join on every lens rebuild
-                self._ordinals if self._ordinals is not None
-                else read_table(spark, os.path.join(tp, "ordinals")),
-            )
-            if os.path.exists(os.path.join(tp, "seg_lens")):
-                self._seg_lens = read_table(
-                    spark, os.path.join(tp, "seg_lens"))
-        if version >= 5:
-            # the files behind the bound tables, for the driver's reads
-            # (build/files.py scan)
-            bind(self, {name: [list_part(os.path.join(tp, name))]
-                        for name in TABLES
-                        if os.path.isdir(os.path.join(tp, name))})
+        if manifest["segments"]:
+            # reuse the SAME ordinals DataFrame object bound above:
+            # seg_len_blocks' trust_inline fast path checks
+            # `seg_ords is self._ordinals` — a second read of the
+            # identical parquet would defeat it and pay a redundant
+            # docid->ord join on every lens rebuild
+            self._segments = (manifest["block_size"], _read("segments"),
+                              self._ordinals)
+            self._seg_lens = _read("seg_lens")
+        # the files behind the bound tables, for the driver's reads
+        # (build/files.py scan)
+        bind(self, {name: [list_part(os.path.join(tp, name))]
+                    for name in TABLES
+                    if os.path.isdir(os.path.join(tp, name))})
         if manifest.get("generations"):
             from .deltas import bind_generations
 
@@ -1293,6 +1184,7 @@ class InvertedIndex:
         else:
             with open(os.path.join(path, "manifest.json")) as fh:
                 manifest = json.load(fh)
+        check_layout(manifest)
         analyzers = {
             f: _analyzer_from_manifest(cfg)
             for f, cfg in manifest["fields"].items()
@@ -1348,7 +1240,7 @@ class InvertedIndex:
     def remove_documents(self, docids: DataFrame) -> "InvertedIndex":
         """Anti-join tombstones + stats refresh (field.ex:136-146, B4).
 
-        On an ord-keyed index (loaded v5: postings carry no docid) the
+        On an ord-keyed index (loaded: postings carry no docid) the
         tombstone docids translate to ords first — a tombstone-sized
         join, after which the postings anti-join keys on the int ordinal.
 
@@ -1363,19 +1255,13 @@ class InvertedIndex:
             F.col(docids.columns[0]).cast("string").alias("docid"))
         if "docid" in self.postings.columns:
             postings = self.postings.join(t, "docid", "left_anti")
-            pf = None
-            if self.postings_full is not self.postings:
-                pf = self.postings_full.join(t, "docid", "left_anti")
         else:
             t_ords = t.join(self.ordinals_df(), "docid").select("ord")
             postings = self.postings.join(t_ords, "ord", "left_anti")
-            pf = None
-            if self.postings_full is not self.postings:
-                pf = self.postings_full.join(t_ords, "ord", "left_anti")
         doc_stats = self.doc_stats.join(t, "docid", "left_anti")
         docs = self.docs.join(t, "docid", "left_anti")
         out = _finalize(postings, docs, self.analyzers, self.store_positions,
-                        doc_stats=doc_stats, postings_full=pf)
+                        doc_stats=doc_stats)
         if "docid" not in postings.columns:
             # stay ord-keyed: the (pruned) translation table carries over
             out._key = "ord"
@@ -1549,7 +1435,7 @@ def build_index(
 
 
 def _finalize(postings, docs, analyzers, store_positions,
-              doc_stats=None, ids=None, postings_full=None) -> InvertedIndex:
+              doc_stats=None, ids=None) -> InvertedIndex:
     """Derive doc/term/field stats from a postings table (B5/B6).
 
     ``doc_len`` is denormalized into postings (BM25 needs no query-time
@@ -1618,55 +1504,31 @@ def _finalize(postings, docs, analyzers, store_positions,
         docs=docs,
         analyzers=analyzers,
         store_positions=store_positions,
-        postings_full=postings_full,
     )
 
 
 def _merge(old: InvertedIndex, new: InvertedIndex) -> InvertedIndex:
     # the two sides may carry different physical extras (ord on a loaded
-    # narrow table, positions on a fresh build) — union on the core
-    # scoring columns; the positions-bearing view unions separately.
-    # Per-build ingest ordinals collide across builds, so the merged
-    # index keys on docid (save() then reassigns global ordinals); a
-    # loaded v5 side carries no docid in postings and restores it from
-    # its ordinals table first.
-    core = ["field", "term", "docid", "tf_raw", "doc_len", "tf"]
+    # table, the flat table's ingest ord on a fresh build) — union on the
+    # scoring columns, plus the positional ones when positions are
+    # stored. Per-build ingest ordinals collide across builds, so the
+    # merged index keys on docid (save() then reassigns global
+    # ordinals); a loaded side carries no docid in postings and restores
+    # it from its ordinals table first.
+    cols = ["field", "term", "docid", "tf_raw", "doc_len", "tf"]
+    if old.store_positions:
+        cols += ["positions", "ords"]
 
-    def _with_docid(df, inv):
-        if "docid" in df.columns:
-            return df
-        return df.join(inv.ordinals_df(), "ord")
+    def _side(inv):
+        df = inv.postings
+        if "docid" not in df.columns:
+            df = df.join(inv.ordinals_df(), "ord")
+        return df.select(*cols)
 
-    postings = (
-        _with_docid(old.postings, old).select(*core)
-        .unionByName(_with_docid(new.postings, new).select(*core)))
-    pf = None
-    # build the positional view whenever either side carries positions —
-    # including two FRESH builds (whose postings_full IS postings but
-    # embeds the positions columns): without this, chained in-memory
-    # add_documents would silently drop phrase/details capability
-    has_pos = old.store_positions and (
-        "positions" in old.postings_full.columns
-        or "positions" in new.postings_full.columns)
-    if (old.postings_full is not old.postings
-            or new.postings_full is not new.postings
-            or has_pos):
-        full_cols = list(core)
-        if old.store_positions:
-            full_cols += ["positions", "ords"]
-
-        def _full(df, inv):
-            df = _with_docid(df, inv)
-            for c in ("positions", "ords"):
-                if c in full_cols and c not in df.columns:
-                    df = df.withColumn(c, F.lit(None).cast("array<int>"))
-            return df.select(*full_cols)
-
-        pf = _full(old.postings_full, old).unionByName(
-            _full(new.postings_full, new))
+    postings = _side(old).unionByName(_side(new))
     doc_stats = old.doc_stats.select("field", "docid", "doc_len").unionByName(
         new.doc_stats.select("field", "docid", "doc_len")
     )
     docs = old.docs.unionByName(new.docs).distinct()
     return _finalize(postings, docs, old.analyzers, old.store_positions,
-                     doc_stats=doc_stats, postings_full=pf)
+                     doc_stats=doc_stats)

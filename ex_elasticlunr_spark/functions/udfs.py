@@ -95,7 +95,7 @@ class AnalyzerConfig:
         do_trim = "trim" in self.stages
         do_stop = "stop" in self.stages
         do_stem = "stem" in self.stages
-        stem1 = _stem
+        stem1 = porter2.stem  # lru_cache'd: one bounded cache per worker
         extra = self.extra
         sep = self.separator
         ascii_mode = not self.unicode
@@ -150,28 +150,6 @@ POSTINGS_SCHEMA_NOPOS = (
 
 ORD_STRIDE = 1 << 33  # ingest-ordinal space per input partition
 
-# worker-lifetime stem cache (term -> stem), shared across tasks by
-# reused Python workers because this module is shipped to executors by
-# import, not pickled by value (guide §4.5). Bounded: past
-# _STEM_CACHE_MAX entries the oldest goes first, so a worker's memory
-# does not grow with the vocabulary.
-_STEM_CACHE: dict = {}
-_STEM_CACHE_MAX = 1 << 16
-
-
-def _stem(term: str) -> str:
-    """porter2 stem of ``term`` through the worker's bounded cache."""
-    s = _STEM_CACHE.get(term)
-    if s is None:
-        s = porter2.stem(term)
-        while len(_STEM_CACHE) >= _STEM_CACHE_MAX:
-            try:
-                _STEM_CACHE.pop(next(iter(_STEM_CACHE)), None)
-            except (StopIteration, RuntimeError):
-                break  # emptied or resized by another thread
-        _STEM_CACHE[term] = s
-    return s
-
 
 def analyze_postings(stacked, configs: dict, positions: bool = True,
                      doc_rows: bool = False, with_ord: bool = False):
@@ -220,12 +198,12 @@ def analyze_postings(stacked, configs: dict, positions: bool = True,
         from ..analysis.trimmer import trim_str
         from ..analysis.token import Token
 
-        # module-level stem cache: udfs.py is an importable module
-        # shipped to executors, so a reused Python worker
+        # porter2.stem's lru_cache lives in an importable module shipped
+        # to executors, so a reused Python worker
         # (spark.python.worker.reuse, the default) keeps the stemmed
         # vocabulary across tasks instead of re-stemming it per task
-        # (guide §4.5)
-        stem1 = _stem
+        # (guide §4.5); the cache is bounded
+        stem1 = porter2.stem
 
         if with_ord:
             from pyspark import TaskContext

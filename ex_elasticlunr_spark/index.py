@@ -241,8 +241,8 @@ class Index:
 
     def term_frequency(self, field: str, term: str) -> DataFrame:
         """(docid, tf) for a term — Field.term_frequency/2 (tf = sqrt of
-        the raw count, field.ex:235). On a loaded v5 index the narrow
-        postings carry no docid; the term's (pruned, term-df-sized) rows
+        the raw count, field.ex:235). On a loaded index the postings
+        carry no docid; the term's (pruned, term-df-sized) rows
         resolve docids via the ordinals table."""
         from pyspark.sql import functions as F
 
@@ -262,7 +262,7 @@ class Index:
         if row is None:
             return None
         fs = self.inverted.field_stats.where(F.col("field") == field).first()
-        docs = self.inverted.postings_full.where(
+        docs = self.inverted.postings.where(
             (F.col("field") == field) & (F.col("term") == term)
         )
         if "docid" not in docs.columns:
@@ -495,7 +495,7 @@ class Index:
         ``operator: and``/msm, prefix, fuzzy or regex expansion), the
         string-search sugar (every field in one segments pass), or a
         bool of terms/match leaves — on an index whose segments are
-        ALREADY bound (a loaded v5 warehouse, or after any explicit
+        ALREADY bound (a loaded warehouse, or after any explicit
         search_wand call) serves through ``search/wand.py`` —
         rank-identical by the tests/test_segments_wand.py identity
         suites, and pinned routed==unrouted by
@@ -515,13 +515,10 @@ class Index:
         A top-level ``match_phrase`` is served on the driver too
         (search/scorer.py ``phrase_topk``); a phrase inside a bool, or
         one over the driver's row cap, keeps the executor's plan."""
-        import os as _os
-
         if (include_details or not isinstance(top_k, int) or top_k <= 0
                 or mode not in ("elasticlunr", "bm25")
                 or set(kw) - {"k1", "b"}
-                or self.inverted._segments is None
-                or _os.environ.get("EX_SPARK_NO_WAND_ROUTE")):
+                or self.inverted._segments is None):
             return None
         if isinstance(query, str):
             boosts = None

@@ -8,10 +8,10 @@ query, which terms/values are most frequent?". Spark-first design:
 * the matched-doc set comes from the same compiled query subtree every
   search runs (dsl/executor.py), keyed by ``ord`` pre-translation so
   no docid strings ride the join;
-* the postings side is the narrow term-clustered table — the semi join
-  on the doc key is a plain hash join (AQE broadcasts the match set
-  when it is small, the common case for selective queries), and the
-  per-term partial aggregation is tiny because each clustered
+* the postings side is the term-clustered table's narrow columns — the
+  semi join on the doc key is a plain hash join (AQE broadcasts the
+  match set when it is small, the common case for selective queries),
+  and the per-term partial aggregation is tiny because each clustered
   partition holds few distinct terms (same property the save-time
   stats aggregation exploits, build/indexer.py phase 4);
 * top-n with a deterministic (count desc, term asc) tie-break is a
@@ -66,7 +66,7 @@ def keywords_tfidf(inv, field: str, top_n: int = 5) -> DataFrame:
 
     The batch shape of "characterize every document" (tag clouds,
     weak topic labels, routing features for a training mix). Plan:
-    the narrow postings scan joins the broadcast vocabulary for idf,
+    the column-pruned postings scan joins the broadcast vocabulary for idf,
     then ONE window partitioned by the doc key ranks terms per doc —
     partitions are doc-sized (bounded by doc length), so the window
     never concentrates load; the docid string joins in only for the
@@ -104,7 +104,7 @@ def significant_terms(inv, matches: DataFrame, field: str,
     only); (score desc, term asc) top-n via TakeOrdered.
 
     Plan shape (scale notes): the foreground counts are the facet_terms
-    plan — the narrow term-clustered postings scan column-pruned to
+    plan — the term-clustered postings scan column-pruned to
     (field, term, key), semi-joined with the match set (AQE broadcasts
     it for selective queries), one partial-aggregated groupBy term.
     Background df/n_docs come FREE from the vocabulary stats tables the

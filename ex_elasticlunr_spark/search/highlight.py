@@ -56,7 +56,7 @@ def snippet_ords(index, field: str, terms: List[str], window: int = 8,
             "built with store_positions=False or loaded from a "
             "reference dump that has no token ordinals")
     key = index.key_col
-    post = index.postings_full.where(F.col("field") == field)
+    post = index.postings.where(F.col("field") == field)
     if restrict is not None:
         post = post.join(restrict.select(key), key, "left_semi")
     # the doc key may itself be named "ord" (doc ordinal); the exploded
@@ -136,7 +136,7 @@ def highlight_spans(index, field: str, terms: List[str],
             "highlight_spans needs stored positions: this index was built "
             "with store_positions=False")
     key = index.key_col
-    post = index.postings_full.where(F.col("field") == field)
+    post = index.postings.where(F.col("field") == field)
     if restrict is not None:
         post = post.join(restrict.select(key), key, "left_semi")
     occ = (

@@ -27,7 +27,7 @@ Physical shape (scale rationale):
 
 Doc-key currency: every scorer emits rows keyed by ``index.key_col`` —
 the int64 global ordinal wherever a consistent ordinal space exists
-(fresh builds, loaded v5 indexes whose narrow postings carry no docid),
+(fresh builds, loaded indexes whose postings carry no docid),
 else the docid string. The executor translates ord->docid ONCE per
 query via the ordinals table (WAND does the same, search/wand.py) — so
 the ~17-byte docid never rides scoring shuffles or the build's
@@ -45,8 +45,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ..build.files import prefix_range, scan, to_sql
 from ..functions.literals import array_lit, empty_df, in_expr, inline_rows
 
-
-CHECKPOINT_PHRASE_HITS = True  # see phrase_scores
 
 # phrase driver-serve caps (see _phrase_per_doc_driver): collect at most
 # this many (doc, term) position rows to the driver, and inline at most
@@ -358,11 +356,9 @@ def terms_scores(
     if fs_cols is None:
         return empty_df(index.postings.sparkSession, empty_schema)
 
-    # hot path scans the narrow clustered postings; the details path
-    # needs the positions column, which lives in the flat ingest table
-    # on a loaded index (postings_full)
-    src = index.postings_full if with_details else index.postings
-    post = src.where(F.col("field") == field)
+    # one posting table for both: the hot path's projection reads only
+    # the narrow columns, the details path adds the positions column
+    post = index.postings.where(F.col("field") == field)
     # push a literal term predicate into the scan (the equi-join with the
     # resolved vocab can't reach the parquet reader; this can — shows up
     # as PushedFilters: In(term, ...) / StringStartsWith, pruning row
@@ -467,8 +463,8 @@ def _phrase_conjunctive_cands(index, field: str, key: str,
     this set is a superset of the phrase's doc set and restricting the
     positions explode to it never changes results (pdf included).
 
-    Plan shape (100 TB rationale): the NARROW postings table (no
-    position arrays — fixed-width (field, term, key) rows) is scanned
+    Plan shape (100 TB rationale): the postings table's narrow columns
+    (no position arrays — fixed-width (field, term, key) rows) are scanned
     with the pushed ``In(term)`` predicate, so the scan is bounded by
     the query terms' document frequencies, and one aggregation keyed
     by doc counts distinct terms — the same asymptotic as any
@@ -553,7 +549,7 @@ def _phrase_per_doc_driver(index, field: str, key: str,
                            rows_cap: Optional[int] = None):
     """Driver-serve fast path for phrase hit detection: ONE row-capped
     read of the query terms' position rows (``build/files.py scan`` of
-    ``positions``: pyarrow over the bound files, ``Scanner.head`` as
+    ``postings``: pyarrow over the bound files, ``Scanner.head`` as
     the cap), then the same adjacency algebra as the distributed plan
     (see ``_phrase_adjacency_serve``). Returns a tagged outcome:
 
@@ -578,7 +574,7 @@ def _phrase_per_doc_driver(index, field: str, key: str,
     instead of going straight to the distributed plan: the conjunctive
     candidate set bounds the position rows that actually matter, so
     the candidate keys are collected (one row-capped job whose shuffle
-    is the narrow-postings candidate aggregation) and the position read
+    is the narrow candidate aggregation) and the position read
     is restricted to them. Only when even the conjunction is over-cap
     does the distributed plan run — and then it inherits the candidate
     relation as a semi-join prune, so its explode is
@@ -629,7 +625,7 @@ def _phrase_per_doc_driver(index, field: str, key: str,
         if len(cands) > rows_cap:
             return ("distributed", cand_df)
         conj += ((key, "in", [r[0] for r in cands]),)
-    tbl = scan(index, "positions", [key, "term", "ords", "doc_len"],
+    tbl = scan(index, "postings", [key, "term", "ords", "doc_len"],
                [conj], limit=rows_cap + 1)
     # num_rows <= cap proves the limit truncated nothing (belt over the
     # stats gate: serving a TRUNCATED scan would change semantics)
@@ -668,11 +664,11 @@ def phrase_topk(index, field: str, terms: List[str], k: int,
     rows_cap = (PHRASE_DRIVER_MAX_ROWS if driver_max_rows is None
                 else int(driver_max_rows))
     fr = _fstats_local(index).get(field)
-    if (not CHECKPOINT_PHRASE_HITS or rows_cap <= 0 or fr is None
+    if (rows_cap <= 0 or fr is None
             or mode not in ("elasticlunr", "bm25")
             or index.key_col != "ord" or index._segments is None
             or index._segments[2] is not index.ordinals_df()
-            or "ords" not in index.postings_full.columns):
+            or "ords" not in index.postings.columns):
         return None
     res = _phrase_per_doc_driver(index, field, "ord", terms, len(terms),
                                  rows_cap=rows_cap)
@@ -743,12 +739,12 @@ def phrase_scores(
     spark = index.postings.sparkSession
     if not terms:
         return empty_df(spark, empty_schema)
-    src = index.postings_full
+    src = index.postings
     if "ords" not in src.columns:
         raise ValueError(
             "phrase queries need the 'ords' column: this index was built "
-            "without positions (store_positions=False) or saved by a "
-            "pre-ordinal version — rebuild to enable match_phrase")
+            "without positions (store_positions=False) — rebuild to "
+            "enable match_phrase")
     fs_cols = _fstats_cols(index, field)
     if fs_cols is None:
         return empty_df(spark, empty_schema)
@@ -763,11 +759,7 @@ def phrase_scores(
     rows_cap = (PHRASE_DRIVER_MAX_ROWS if driver_max_rows is None
                 else int(driver_max_rows))
     outcome, cand_prune = "distributed", None
-    if (CHECKPOINT_PHRASE_HITS and not with_details
-            and rows_cap > 0):
-        # CHECKPOINT_PHRASE_HITS=False doubles as the "keep the full
-        # distributed lineage inspectable" switch (plan-shape tests) —
-        # the driver path, like the checkpoint, would hide the scan
+    if not with_details and rows_cap > 0:
         res = _phrase_per_doc_driver(index, field, key, terms, k,
                                       rows_cap=rows_cap)
         outcome = res[0]
@@ -833,12 +825,8 @@ def phrase_scores(
         # set once — it is exactly phrase-doc-frequency sized.
         # localCheckpoint (GC-cleaned by the ContextCleaner) instead of
         # persist, which would accumulate storage across queries in a
-        # long-lived session. CHECKPOINT_PHRASE_HITS=False keeps the
-        # full lineage visible for plan-shape tests
-        # (tests/test_pushdown.py pins the pushed In(term) on the
-        # positions-table scan, which the checkpoint would hide).
-        if CHECKPOINT_PHRASE_HITS:
-            hits = hits.localCheckpoint(eager=True)
+        # long-lived session.
+        hits = hits.localCheckpoint(eager=True)
         pdf_df = hits.agg(F.count(F.lit(1)).alias("pdf"))
         if restrict is not None:
             hits = hits.join(restrict.select(key), key, "left_semi")
@@ -869,8 +857,7 @@ def phrase_scores(
                 )).alias("occ_pos")]
         hits = (occ.groupBy(key, hit_key).agg(*aggs)
                 .where(F.col("nq") == k))
-        if CHECKPOINT_PHRASE_HITS:
-            hits = hits.localCheckpoint(eager=True)
+        hits = hits.localCheckpoint(eager=True)
         pdf_df = hits.agg(F.count_distinct(key).alias("pdf"))
 
         if restrict is not None:
@@ -927,7 +914,7 @@ def proximity_scores(
     ``slop`` post-pipeline token ordinals; score = boost/(1+min_dist),
     so closer co-occurrences rank first, deterministically.
 
-    Plan shape (100 TB rationale): the positions-table scan is pruned
+    Plan shape (100 TB rationale): the postings scan is pruned
     by the pushed ``In(term, ...)`` (two terms), each side collapses to
     one row per (doc, term) carrying its ordinal ARRAY, and the min
     distance is a JVM-side nested array transform — no per-occurrence
@@ -937,7 +924,7 @@ def proximity_scores(
     spark = index.postings.sparkSession
     if len(terms) != 2:
         raise ValueError("proximity_scores takes exactly two terms")
-    src = index.postings_full
+    src = index.postings
     if "ords" not in src.columns:
         raise ValueError(
             "span_near needs the 'ords' column: this index was built "

@@ -742,8 +742,8 @@ def wand_topk_multi(
             # payload participates in the key: clause-shared terms
             # contribute EXACT duplicate rows (same payload), which
             # collapse — but partial blocks sharing (field, term,
-            # block_id) with DISTINCT payloads (streaming-builder seams,
-            # re-blocked v4 loads) are disjoint ord subsets that must
+            # block_id) with DISTINCT payloads (streaming-builder
+            # seams) are disjoint ord subsets that must
             # BOTH survive to decode
             blocks = blocks.select(
                 "field", "term", "block_id", "payload"

@@ -93,7 +93,7 @@ def stream_to_index(
     tiered: bool = True,
     trigger_available_now: bool = True,
 ):
-    """Structured Streaming -> a continuously maintained DURABLE v5
+    """Structured Streaming -> a continuously maintained DURABLE
     warehouse: the first micro-batch becomes the base save, every later
     micro-batch appends a GENERATION via ``save_delta``
     (build/deltas.py) — per-batch cost is proportional to the batch,

@@ -265,9 +265,9 @@ def test_distributed_wand_equals_exhaustive(spark, generational,
     for cls in ("term", "and", "prefix", "fuzzy"):
         for mode in ("bm25", "elasticlunr"):
             got = _rows(ix, CLASSES[cls], mode)
-            monkeypatch.setenv("EX_SPARK_NO_WAND_ROUTE", "1")
-            want = _rows(ix, CLASSES[cls], mode)
-            monkeypatch.delenv("EX_SPARK_NO_WAND_ROUTE")
+            with monkeypatch.context() as m:
+                m.setattr(Index, "_route_wand", lambda *a, **k: None)
+                want = _rows(ix, CLASSES[cls], mode)
             assert [(d, round(s, 9)) for d, s in got] == \
                 [(d, round(s, 9)) for d, s in want] and got, (cls, mode)
 
@@ -401,17 +401,10 @@ def test_pending_removal_never_reads_bound_files(spark, single,
     assert not opened
 
 
-def test_stem_cache_stays_under_its_cap(monkeypatch):
+def test_stem_cache_is_bounded():
+    """The analyzers stem through ``porter2.stem``, whose one per-worker
+    cache must stay bounded as the vocabulary grows."""
     from ex_elasticlunr_spark.analysis import porter2
-    from ex_elasticlunr_spark.functions import udfs
 
-    monkeypatch.setattr(udfs, "_STEM_CACHE", {})
-    monkeypatch.setattr(udfs, "_STEM_CACHE_MAX", 4)
-    words = ["running", "jumped", "happily", "searches", "running",
-             "indexes", "cats", "jumped", "generously", "stems"]
-    for w in words:
-        assert udfs._stem(w) == porter2.stem(w)
-        assert len(udfs._STEM_CACHE) <= 4
-    # oldest first: the last four distinct insertions remain
-    assert list(udfs._STEM_CACHE) == ["cats", "jumped", "generously",
-                                      "stems"]
+    maxsize = porter2.stem.cache_info().maxsize
+    assert maxsize is not None and 0 < maxsize <= 1 << 16

@@ -53,13 +53,13 @@ def test_delta_add_matches_full_rebuild(spark, corpus, base_path):
         return sorted((f, os.path.getmtime(os.path.join(d, f)))
                       for f in os.listdir(d) if f.endswith(".parquet"))
 
-    before = {t: listing(t) for t in ("postings", "positions", "segments")}
+    before = {t: listing(t) for t in ("postings", "segments")}
 
     loaded = Index.load(spark, base_path)
     loaded.add_documents(df2, docid_col="docid")
     gen_dir = loaded.inverted.save_delta()
     assert gen_dir.endswith("gen-00001")
-    assert {t: listing(t) for t in ("postings", "positions", "segments")} \
+    assert {t: listing(t) for t in ("postings", "segments")} \
         == before, "delta save must not rewrite base tables"
 
     re = Index.load(spark, base_path)
@@ -126,7 +126,7 @@ def test_delta_remove_tombstones(spark, corpus, base_path):
     # match_all universe shrinks with the tombstones
     assert re.search({"query": {"match_all": {}}}).count() == 48
     # the positional path (incl. the phrase driver-serve gate, whose
-    # collect reads the same tombstone-anti-joined postings_full and
+    # collect reads the same tombstone-anti-joined postings and
     # whose df gate reads the tombstone-exact term_stats) excludes them
     ph = {r["docid"] for r in re.search(
         {"query": {"match_phrase": {"text": "merge window"}}}).collect()}

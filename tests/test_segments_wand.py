@@ -609,12 +609,10 @@ class TestWandRequired:
     side so the comparison can never be WAND-vs-WAND."""
 
     def _exhaustive(self, index, q, mode, monkeypatch, k=10):
-        monkeypatch.setenv("EX_SPARK_NO_WAND_ROUTE", "1")
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(Index, "_route_wand", lambda *a, **k: None)
             return [(r["docid"], round(r["score"], 9))
                     for r in index.search(q, top_k=k, mode=mode).collect()]
-        finally:
-            monkeypatch.delenv("EX_SPARK_NO_WAND_ROUTE")
 
     @pytest.mark.parametrize("mode", ["bm25", "elasticlunr"])
     def test_must_plus_should_equals_exhaustive(self, spark, index, mode,
@@ -724,12 +722,10 @@ class TestWandNegative:
     the exhaustive executor with routing disabled on the want side."""
 
     def _exhaustive(self, index, q, mode, monkeypatch, k=10):
-        monkeypatch.setenv("EX_SPARK_NO_WAND_ROUTE", "1")
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(Index, "_route_wand", lambda *a, **k: None)
             return [(r["docid"], round(r["score"], 9))
                     for r in index.search(q, top_k=k, mode=mode).collect()]
-        finally:
-            monkeypatch.delenv("EX_SPARK_NO_WAND_ROUTE")
 
     @pytest.mark.parametrize("mode", ["bm25", "elasticlunr"])
     def test_must_not_equals_exhaustive(self, spark, index, mode,

@@ -77,7 +77,7 @@ def test_span_near_in_bool_filter(idx):
 def test_describe_reports_layout(spark, idx, tmp_path):
     d = idx.describe()
     assert d["fields"] == ["text"]
-    assert d["version"] == 5 and d["generations"] == []
+    assert d["version"] == 6 and d["generations"] == []
     assert d["documents"] == 4 and d["vocabulary"]["text"] > 0
     # after a delta append, the generation shows up
     idx.add_documents(

@@ -228,40 +228,6 @@ def test_tiered_noop_below_two_gens(spark, tmp_path):
     assert len(_manifest(wh)["generations"]) == 1
 
 
-def test_tiered_auto_policy_skips_unsized_legacy_gen(spark, tmp_path):
-    """An ADDS generation whose manifest entry lacks the
-    field_doc_stats partials (legacy writer) has UNKNOWN size: the
-    auto policy must refuse to fold it (folding would bind the merge
-    cost to its full size, not the micro-batch run) — explicit
-    ``tail`` remains the override."""
-    wh = str(tmp_path / "wh")
-    ix = Index(name="t").add_field("content")
-    ix.add_documents(spark.createDataFrame(
-        [("b0", "base spark")], "id string, content string"), docid_col="id")
-    ix.save(wh)
-    ix = Index.load(spark, wh, name="t")
-    for g in range(2):
-        ix.add_documents(spark.createDataFrame(
-            [(f"a{g}", f"delta window {g}")], "id string, content string"),
-            docid_col="id")
-        ix.save_delta()
-        ix = Index.load(spark, wh, name="t")
-    # simulate the legacy entry shape on the OLDER generation
-    m = _manifest(wh)
-    del m["generations"][0]["field_doc_stats"]
-    with open(os.path.join(wh, "manifest.json"), "w") as fh:
-        json.dump(m, fh)
-    ix = Index.load(spark, wh, name="t")
-    assert ix.inverted.compact_tiered() == ""  # unsized gen blocks auto
-    ix = Index.load(spark, wh, name="t")
-    assert ix.inverted.compact_tiered(tail=2) != ""  # explicit override
-    ref = _rebuild(spark, [("b0", "base spark"),
-                           ("a0", "delta window 0"),
-                           ("a1", "delta window 1")])
-    got = Index.load(spark, wh, name="t")
-    assert _hits(got, "spark window") == _hits(ref, "spark window")
-
-
 def test_tiered_rejects_pending_ops(spark, tmp_path):
     wh = str(tmp_path / "wh")
     ix = Index(name="t").add_field("content")

@@ -4,8 +4,6 @@ segments-bound index serve through the block-max fast path. Routed
 results must equal the exhaustive executor's exactly, and routing must
 never trigger a segment build by itself."""
 
-import os
-
 import pytest
 
 from ex_elasticlunr_spark import Index
@@ -65,7 +63,7 @@ def _rows(df):
 def test_routed_equals_executor(saved, mode, qi, monkeypatch):
     q = QUERIES[qi]
     got = _rows(saved.search(q, top_k=10, mode=mode))
-    monkeypatch.setenv("EX_SPARK_NO_WAND_ROUTE", "1")
+    monkeypatch.setattr(Index, "_route_wand", lambda *a, **k: None)
     want = _rows(saved.search(q, top_k=10, mode=mode))
     assert got == want and got
 
@@ -73,7 +71,7 @@ def test_routed_equals_executor(saved, mode, qi, monkeypatch):
 @pytest.mark.parametrize("mode", ["bm25", "elasticlunr"])
 def test_routed_string_search(saved, mode, monkeypatch):
     got = _rows(saved.search("elixir tool run", top_k=10, mode=mode))
-    monkeypatch.setenv("EX_SPARK_NO_WAND_ROUTE", "1")
+    monkeypatch.setattr(Index, "_route_wand", lambda *a, **k: None)
     want = _rows(saved.search("elixir tool run", top_k=10, mode=mode))
     assert got == want and got
 
@@ -82,7 +80,7 @@ def test_routed_string_with_boosts(saved, monkeypatch):
     opts = {"fields": {"text": {"boost": 2.0}, "tool": {"boost": 0}}}
     got = _rows(saved.search("elixir search", top_k=10, mode="bm25",
                              options=opts))
-    monkeypatch.setenv("EX_SPARK_NO_WAND_ROUTE", "1")
+    monkeypatch.setattr(Index, "_route_wand", lambda *a, **k: None)
     want = _rows(saved.search("elixir search", top_k=10, mode="bm25",
                               options=opts))
     assert got == want and got
@@ -248,7 +246,7 @@ def test_map_sugar_routes_and_matches(saved, mode, monkeypatch):
     q = {"text": "elixir tool", "tool": "search"}
     opts = {"bool": "or", "expand": True}
     got = _rows(saved.search(q, top_k=10, options=opts, mode=mode))
-    monkeypatch.setenv("EX_SPARK_NO_WAND_ROUTE", "1")
+    monkeypatch.setattr(Index, "_route_wand", lambda *a, **k: None)
     want = _rows(saved.search(q, top_k=10, options=opts, mode=mode))
     assert got == want and got
 
@@ -290,7 +288,7 @@ def test_single_clause_routes_cold_or_warm(spark, tmp_path, monkeypatch):
         calls.clear()
         routed = _rows(loaded.search(q, top_k=10))  # warm caches
         assert calls, "warm single clause should route"
-        monkeypatch.setenv("EX_SPARK_NO_WAND_ROUTE", "1")
-        exhaustive = _rows(loaded.search(q, top_k=10))
-        monkeypatch.delenv("EX_SPARK_NO_WAND_ROUTE")
+        with monkeypatch.context() as m:
+            m.setattr(Index, "_route_wand", lambda *a, **k: None)
+            exhaustive = _rows(loaded.search(q, top_k=10))
         assert routed == exhaustive == cold and routed
