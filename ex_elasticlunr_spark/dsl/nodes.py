@@ -9,6 +9,7 @@ second IR, handed to Catalyst).
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field as dc_field
 from typing import List, Optional, Union
 
@@ -258,6 +259,18 @@ def _parse_span_near(options):
     )
 
 
+def _fuzziness(fname, value) -> int:
+    """A ``fuzziness`` option as its floor: an edit distance is an
+    integer, so ``<= 1.5`` allows what ``<= 1`` does (as in Spark's
+    comparison). A non-number raises a ValueError naming the field."""
+    try:
+        return math.floor(value)
+    except (TypeError, ValueError, OverflowError):
+        raise ValueError(
+            f"fuzziness for field {fname!r} must be a number; "
+            f"got {value!r}") from None
+
+
 def _parse_terms(options):
     if not options:
         return MatchAllNode()
@@ -290,7 +303,7 @@ def _parse_terms(options):
         terms=[str(t) for t in terms],
         boost=opts.get("boost", 1),
         expand=opts.get("expand", False),
-        fuzziness=opts.get("fuzziness", 0),
+        fuzziness=_fuzziness(fname, opts.get("fuzziness", 0)),
         regex=opts.get("regex", False),
         minimum_should_match=opts.get("minimum_should_match", 1),
     )
@@ -326,7 +339,7 @@ def _parse_match(options):
         query=params.get("query"),
         boost=params.get("boost", 1),
         expand=params.get("expand", False),
-        fuzziness=params.get("fuzziness", 0),
+        fuzziness=_fuzziness(fname, params.get("fuzziness", 0)),
         operator=operator,
         minimum_should_match=params.get("minimum_should_match", default_msm),
     )

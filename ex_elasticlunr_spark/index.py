@@ -759,9 +759,10 @@ class Index:
         desc, term asc), fully deterministic (term is unique).
 
         Served from vocabulary-sized ``term_stats`` alone, like
-        ``suggest``: a length-banded scan + a JVM-side levenshtein —
-        the same edit-ball resolve terms_fuzzy uses
-        (search/scorer.py), surfaced as its own API. An input whose
+        ``suggest``: a length-banded scan + a JVM-side levenshtein, one
+        Spark plan. It keeps that plan: a fuzzy query's edit ball is
+        matched on the driver instead (search/scorer.py
+        ``_edit_ball``), with the same distance. An input whose
         analysis yields no term (stopword, empty) suggests nothing."""
         from pyspark.sql import functions as F
 

@@ -279,17 +279,85 @@ def _query_terms_df(index, field: str, terms: List[str],
                     *cols))
 
 
+def _code_points(arr, length: int):
+    """The (len(arr), length) uint32 code points of a ``string``
+    (int32-offset) Array whose every value has ``length`` code points:
+    ASCII rows (one byte per code point) straight from the Arrow
+    offsets and data buffers, the others through one UTF-32 encode."""
+    import numpy as np
+
+    out = np.empty((len(arr), length), np.uint32)
+    if not length:
+        return out
+    _, obuf, dbuf = arr.buffers()
+    off = np.frombuffer(obuf, np.int32)[arr.offset:arr.offset + len(arr) + 1]
+    data = np.frombuffer(dbuf, np.uint8)
+    ascii_ = np.diff(off) == length
+    out[ascii_] = data[off[:-1][ascii_, None] + np.arange(length)]
+    rest = np.flatnonzero(~ascii_)
+    if rest.size:
+        r = arr.take(rest)
+        _, obuf, dbuf = r.buffers()
+        roff = np.frombuffer(obuf, np.int32)[r.offset:r.offset + len(r) + 1]
+        text = bytes(np.frombuffer(dbuf, np.uint8)[roff[0]:roff[-1]])
+        out[rest] = np.frombuffer(
+            text.decode("utf-8").encode("utf-32-le"),
+            np.uint32).reshape(-1, length)
+    return out
+
+
+def _edit_ball(col, q: str, k: int):
+    """Boolean mask over the string Array ``col``: Levenshtein(term, q)
+    <= k, counted in code points like Spark's ``levenshtein`` and
+    ``length`` (and tests/oracle ``levenshtein``). Terms outside the
+    length band ``|len(term) - len(q)| <= k`` are never compared; each
+    length L in the band is one code-point matrix, and the DP runs
+    row by row over ``q``'s code points with one (L + 1, n) row of
+    distances for all n terms at once."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    qc = np.frombuffer(q.encode("utf-32-le"), np.uint32)
+    lens = pc.utf8_length(col).to_numpy()
+    hit = np.zeros(len(col), bool)
+    for length in range(max(len(qc) - k, 0), len(qc) + k + 1):
+        idx = np.flatnonzero(lens == length)
+        if not idx.size:
+            continue
+        cps = _code_points(col.take(idx), length).T
+        row = np.repeat(np.arange(length + 1, dtype=np.int32)[:, None],
+                        idx.size, axis=1)
+        for i, c in enumerate(qc, 1):
+            cur = np.empty_like(row)
+            cur[0] = i
+            np.minimum(row[1:] + 1, row[:-1] + (cps != c), out=cur[1:])
+            for j in range(1, length + 1):
+                np.minimum(cur[j], cur[j - 1] + 1, out=cur[j])
+            row = cur
+            # a term's row minimum never falls further down the DP:
+            # drop the terms already more than k edits away
+            near = row.min(axis=0) <= k
+            if not near.all():
+                idx, cps, row = idx[near], cps[:, near], row[:, near]
+        hit[idx] = row[-1] <= k
+    return hit
+
+
 def _expansion_rows(index, field: str, terms: List[str], expand: bool,
                     fuzziness: int, regex: bool) -> Optional[list]:
     """(qt_idx, qt, term, df, idf) rows of a prefix/fuzzy/regex
     expansion: ONE capped read of the vocabulary for the matching
-    terms, whose df/idf then come from :func:`_vocab_lookup`. A prefix
-    reads ``term_stats`` through ``build/files.py scan`` as
-    ``t <= term < succ(t)`` ranges (row groups prune; no Spark job on
-    a bound warehouse), and its df partials save the lookup's own
-    read. Fuzzy and regex matches need the JVM's levenshtein/regex and
-    collect :func:`_query_terms_df` over every generation's vocabulary
-    partials in one job. ``None`` past RESOLVE_INLINE_CAP rows: callers
+    terms, whose df/idf then come from :func:`_vocab_lookup`, with the
+    read's df partials (summed over generations) saving the lookup's
+    own read. A prefix reads ``term_stats`` through
+    ``build/files.py scan`` as ``t <= term < succ(t)`` ranges (row
+    groups prune). A fuzzy match reads the field's whole vocabulary
+    the same way and matches it on the driver (:func:`_edit_ball`; a
+    float fuzziness acts as its floor, as ``<= 1.5`` does in Spark).
+    Neither runs a Spark job on a bound warehouse. Regex matches need
+    the JVM's regex semantics and collect :func:`_query_terms_df` over
+    every generation's vocabulary partials in one job. ``None`` past
+    RESOLVE_INLINE_CAP (query term, vocabulary row) matches: callers
     keep the distributed plan."""
     from .wand import RESOLVE_INLINE_CAP, _collect_limit_one_job
 
@@ -306,6 +374,28 @@ def _expansion_rows(index, field: str, terms: List[str], expand: bool,
             partial[(field, term)] = partial.get((field, term), 0) + df
         got = {(qi, term) for _, term in partial
                for qi, q in enumerate(terms) if term.startswith(q)}
+    elif not regex:
+        import numpy as np
+        import pyarrow as pa
+
+        t = scan(index, "term_stats", ["term", "df"],
+                 [(("field", "==", field),)])
+        k = math.floor(fuzziness)
+        col = t.column(0).cast(pa.string()).combine_chunks()
+        balls = {q: _edit_ball(col, q, k) for q in set(terms)}
+        n = sum(int(balls[q].sum()) for q in terms)
+        if n >= cap:
+            return None
+        matched = np.zeros(len(col), bool)
+        for ball in balls.values():
+            matched |= ball
+        rows = np.flatnonzero(matched)
+        names = col.take(rows).to_pylist()
+        partial = {}
+        for term, df in zip(names, t.column(1).take(rows).to_pylist()):
+            partial[(field, term)] = partial.get((field, term), 0) + df
+        got = {(qi, names[j]) for qi, q in enumerate(terms)
+               for j in np.flatnonzero(balls[q][rows])}
     else:
         vocab = (index._df_partials if index._df_partials is not None
                  else index.term_stats)

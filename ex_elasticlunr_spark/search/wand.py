@@ -84,7 +84,8 @@ INDEX is distributed; the scorer of a selective query need not be).
 Its block metadata, payloads, len blocks and docids come through
 ``build/files.py scan``: on a bound warehouse pyarrow reads them from
 the snapshot's files, so a driver-served query runs NO Spark job (a
-fuzzy or regex clause pays one, for its vocabulary match). Oversize
+regex clause pays one, for its vocabulary match; a fuzzy clause's edit
+ball is matched on the driver too). Oversize
 candidate sets fall through to the distributed plan above;
 tests/test_segments_wand.py TestDriverServe pins identity between the
 two. Its block decode (:func:`decode_blocks`, :func:`decode_lens`) and

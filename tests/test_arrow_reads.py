@@ -10,9 +10,8 @@ adds documents and tombstones others:
   modes — including a doc tombstoned and re-added in one generation, a
   term whose every posting is tombstoned, and terms and docids holding
   ``'``, ``\\`` and non-ASCII characters;
-* after a binding's first query, term/and/or/bool/prefix/phrase
-  queries and a dict ``search_many`` batch run no Spark job, and fuzzy
-  runs at most one;
+* after a binding's first query, term/and/or/bool/prefix/fuzzy/phrase
+  queries and a dict ``search_many`` batch run no Spark job;
 * the driver-served ``search_many`` equals its Spark plan and the
   oracle;
 * each bound part's dataset is opened once per binding;
@@ -230,7 +229,7 @@ def test_driver_served_classes_run_no_spark_job(spark, warehouse):
             # the first mode meets cold df lookups: file reads too
             n = _n_jobs(spark, lambda: ix.search(q, top_k=10,
                                                  mode=mode).collect())
-            assert n <= (1 if cls == "fuzzy" else 0), (cls, mode, n)
+            assert n == 0, (cls, mode, n)
     for text in PHRASES:
         q = {"query": {"match_phrase": {"text": text}}}
         for mode in ("bm25", "elasticlunr"):

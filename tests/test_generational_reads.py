@@ -3,10 +3,11 @@ search/scorer.py _vocab_lookup).
 
 A warehouse with one delta generation that carries both adds and
 tombstones must answer every query class with no more Spark jobs than
-the pre-delta commit does, bind without persisting anything, and stay
-rank-identical to the oracle in both scoring modes — including a doc
-tombstoned and re-added in the same generation and a term whose every
-posting is tombstoned. Also pinned here: the term-statistics memo under
+the pre-delta commit does (a fuzzy query none once warm), bind without
+persisting anything, and stay rank-identical to the oracle in both
+scoring modes — including a doc tombstoned and re-added in the same
+generation and a term whose every posting is tombstoned, looked up
+exactly or through a fuzzy edit ball. Also pinned here: the term-statistics memo under
 concurrent eviction, tombstoned docids that need SQL escaping under
 either ``spark.sql.parser.escapedStringLiterals`` setting, the
 TOMB_LOCAL_CAP bound past which ``save_delta`` compacts instead, and
@@ -67,6 +68,8 @@ ORACLE_QUERIES = [
                                    {"match": {"text": "solo"}}],
                         "must_not": {"match": {"text": "dolor"}}}}},
     {"query": {"terms": {"text": {"value": "tokan", "fuzziness": 1}}}},
+    # the edit ball holds "solo", every posting of which is gone
+    {"query": {"terms": {"text": {"value": "sola", "fuzziness": 1}}}},
     {"query": {"terms": {"text": {"value": "seg", "expand": True}}}},
     {"query": {"match": {"text": "solo"}}},      # every posting gone
     {"query": {"match": {"text": "phoenix"}}},   # re-added u1 included
@@ -164,6 +167,8 @@ def test_query_classes_cost_no_more_jobs_than_base(spark, warehouse):
             g = _jobs(spark, lambda: run(gen, mode).collect())
             p = _jobs(spark, lambda: run(pre, mode).collect())
             assert len(g) <= len(p), (cls, mode, g, p)
+            if cls == "fuzzy":  # the edit ball is matched on the driver
+                assert g == [], (mode, g)
 
 
 def test_bind_runs_one_job_and_persists_nothing(spark, warehouse):
@@ -194,6 +199,9 @@ def test_generational_and_base_readers_equal_oracle(spark, warehouse,
         {"query": {"match": {"text": "phoenix"}}}, top_k=10).collect()}
     assert "u1" in hits  # re-added in the generation that tombstoned it
     assert gen.search({"query": {"match": {"text": "solo"}}}).count() == 0
+    sola = {"query": {"terms": {"text": {"value": "sola", "fuzziness": 1}}}}
+    assert gen.search(sola).count() == 0
+    assert {r["docid"] for r in pre.search(sola).collect()} == {"s1", "s2"}
     assert not gen.has_token("text", "solo")
 
 

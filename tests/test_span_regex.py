@@ -165,6 +165,30 @@ class TestParserGuards:
         with pytest.raises(ValueError, match="need a 'query'"):
             parse({"match_phrase": {"text": {"boost": 2}}})
 
+    def test_float_fuzziness_is_its_floor(self, idx):
+        from ex_elasticlunr_spark.dsl.nodes import parse
+
+        assert parse({"terms": {"text": {"value": "x",
+                                         "fuzziness": 1.5}}}).fuzziness == 1
+        assert parse({"match": {"text": {"query": "x",
+                                         "fuzziness": 2.9}}}).fuzziness == 2
+
+        def hits(fuzz):
+            return sorted((r["docid"], r["score"]) for r in idx.search(
+                {"query": {"terms": {"text": {"value": "spars",
+                                              "fuzziness": fuzz}}}}
+            ).collect())
+
+        assert hits(1.5) == hits(1) and hits(1)
+
+    def test_non_numeric_fuzziness_names_the_field(self, idx):
+        from ex_elasticlunr_spark.dsl.nodes import parse
+
+        with pytest.raises(ValueError, match="fuzziness for field 'text'"):
+            parse({"terms": {"text": {"value": "x", "fuzziness": "AUTO"}}})
+        with pytest.raises(ValueError, match="fuzziness for field 'body'"):
+            parse({"match": {"body": {"query": "x", "fuzziness": "AUTO"}}})
+
     def test_span_near_slop_validation(self, idx):
         from ex_elasticlunr_spark.dsl.nodes import parse
 
