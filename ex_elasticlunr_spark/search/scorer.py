@@ -154,11 +154,25 @@ def _pairs_cond(pairs) -> Column:
     return F.expr(to_sql(_pairs_dnf(pairs)))
 
 
+def _binding_memo(index) -> tuple:
+    """``(term_stats, {(field, term): (df, idf) | None}, {field:
+    fuzzy vocabulary})``: the query path's memo of vocabulary reads for
+    the index's current binding, keyed by the ``term_stats`` object's
+    identity (every content change assigns a new one)."""
+    src = index.term_stats
+    memo = getattr(index, "_vocab_local_cache", None)
+    if memo is None or memo[0] is not src:
+        memo = (src, {}, {})
+        index._vocab_local_cache = memo
+    return memo
+
+
 def _vocab_lookup(index, pairs, partials: Optional[dict] = None) -> dict:
     """(field, term) -> (df, idf) for ``pairs``; ``None`` marks a term
     absent from the live vocabulary. Every query-path read of term
     statistics goes through here (exact terms, expansions, the phrase
-    gate, WAND clauses, ``search_many``), memoized per binding.
+    gate, WAND clauses, ``search_many``), memoized per binding
+    (:func:`_binding_memo`).
 
     The misses read, for those terms only, each generation's df
     partial and the tombstoned postings (``build/files.py scan`` of
@@ -171,16 +185,9 @@ def _vocab_lookup(index, pairs, partials: Optional[dict] = None) -> dict:
     expansion's vocabulary read) saves the partial read for those
     pairs.
 
-    The memo is keyed by the ``term_stats`` object's identity (every
-    content change assigns a new one). This call's results are kept in
-    a local dict, never re-read from the shared memo, so a concurrent
-    eviction cannot lose one."""
-    src = index.term_stats
-    cache = getattr(index, "_vocab_local_cache", None)
-    if cache is None or cache[0] is not src:
-        cache = (src, {})
-        index._vocab_local_cache = cache
-    vc = cache[1]
+    This call's results are kept in a local dict, never re-read from
+    the shared memo, so a concurrent eviction cannot lose one."""
+    vc = _binding_memo(index)[1]
     out, missing = {}, []
     for p in set(pairs):
         v = vc.get(p, vc)  # vc itself: the miss sentinel (None = absent)
@@ -279,52 +286,45 @@ def _query_terms_df(index, field: str, terms: List[str],
                     *cols))
 
 
-def _code_points(arr, length: int):
-    """The (len(arr), length) uint32 code points of a ``string``
-    (int32-offset) Array whose every value has ``length`` code points:
-    ASCII rows (one byte per code point) straight from the Arrow
-    offsets and data buffers, the others through one UTF-32 encode."""
-    import numpy as np
-
-    out = np.empty((len(arr), length), np.uint32)
-    if not length:
-        return out
-    _, obuf, dbuf = arr.buffers()
-    off = np.frombuffer(obuf, np.int32)[arr.offset:arr.offset + len(arr) + 1]
-    data = np.frombuffer(dbuf, np.uint8)
-    ascii_ = np.diff(off) == length
-    out[ascii_] = data[off[:-1][ascii_, None] + np.arange(length)]
-    rest = np.flatnonzero(~ascii_)
-    if rest.size:
-        r = arr.take(rest)
-        _, obuf, dbuf = r.buffers()
-        roff = np.frombuffer(obuf, np.int32)[r.offset:r.offset + len(r) + 1]
-        text = bytes(np.frombuffer(dbuf, np.uint8)[roff[0]:roff[-1]])
-        out[rest] = np.frombuffer(
-            text.decode("utf-8").encode("utf-32-le"),
-            np.uint32).reshape(-1, length)
-    return out
-
-
-def _edit_ball(col, q: str, k: int):
-    """Boolean mask over the string Array ``col``: Levenshtein(term, q)
-    <= k, counted in code points like Spark's ``levenshtein`` and
-    ``length`` (and tests/oracle ``levenshtein``). Terms outside the
-    length band ``|len(term) - len(q)| <= k`` are never compared; each
-    length L in the band is one code-point matrix, and the DP runs
-    row by row over ``q``'s code points with one (L + 1, n) row of
-    distances for all n terms at once."""
+def _length_groups(col) -> dict:
+    """``{L: (rows, cps)}`` over the ``string`` Array ``col``: the row
+    numbers of its terms of L code points and their (L, n) uint32
+    code-point matrix, gathered from one UTF-32 encode of the whole
+    column. Code points are what Spark's ``length`` and
+    ``levenshtein`` count."""
     import numpy as np
     import pyarrow.compute as pc
 
+    lens = pc.utf8_length(col).to_numpy().astype(np.int64)
+    _, obuf, dbuf = col.buffers()
+    off = np.frombuffer(obuf, np.int32)[col.offset:col.offset + len(col) + 1]
+    text = (bytes(np.frombuffer(dbuf, np.uint8)[off[0]:off[-1]])
+            if dbuf is not None else b"")
+    cps = np.frombuffer(text.decode("utf-8").encode("utf-32-le"), np.uint32)
+    starts = np.cumsum(lens) - lens
+    groups = {}
+    for length in np.unique(lens).tolist():
+        rows = np.flatnonzero(lens == length)
+        groups[length] = (rows, cps[starts[rows] + np.arange(length)[:, None]])
+    return groups
+
+
+def _edit_ball(groups: dict, q: str, k: int):
+    """Row numbers of the terms within ``k`` Levenshtein edits of ``q``,
+    over :func:`_length_groups`' matrices (code points, like Spark's
+    ``levenshtein`` and tests/oracle ``levenshtein``). Terms outside
+    the length band ``|len(term) - len(q)| <= k`` are never compared;
+    for each length L in the band the DP runs row by row over ``q``'s
+    code points with one (L + 1, n) row of distances for all n terms
+    at once."""
+    import numpy as np
+
     qc = np.frombuffer(q.encode("utf-32-le"), np.uint32)
-    lens = pc.utf8_length(col).to_numpy()
-    hit = np.zeros(len(col), bool)
+    hits = [np.zeros(0, np.int64)]
     for length in range(max(len(qc) - k, 0), len(qc) + k + 1):
-        idx = np.flatnonzero(lens == length)
-        if not idx.size:
+        if length not in groups:
             continue
-        cps = _code_points(col.take(idx), length).T
+        idx, cps = groups[length]
         row = np.repeat(np.arange(length + 1, dtype=np.int32)[:, None],
                         idx.size, axis=1)
         for i, c in enumerate(qc, 1):
@@ -339,8 +339,31 @@ def _edit_ball(col, q: str, k: int):
             near = row.min(axis=0) <= k
             if not near.all():
                 idx, cps, row = idx[near], cps[:, near], row[:, near]
-        hit[idx] = row[-1] <= k
-    return hit
+        hits.append(idx[row[-1] <= k])
+    return np.concatenate(hits)
+
+
+def _field_vocab(index, field: str) -> tuple:
+    """``(terms, df, groups)``: the field's vocabulary, each term once
+    with its df partials summed over generations, and its
+    :func:`_length_groups`. Read once per binding (one ``build/files.py
+    scan`` of ``term_stats``: pyarrow over the bound files, or one
+    ``toArrow`` job on an unsaved index) and kept in
+    :func:`_binding_memo`, so a fuzzy query reads no file. Per field
+    that has had a fuzzy query the memo holds the Arrow column plus
+    about 4 bytes per code point and 8 per term."""
+    import pyarrow as pa
+
+    fields = _binding_memo(index)[2]
+    got = fields.get(field)
+    if got is None:
+        t = (scan(index, "term_stats", ["term", "df"],
+                  [(("field", "==", field),)])
+             .group_by("term").aggregate([("df", "sum")]))
+        col = t.column("term").cast(pa.string()).combine_chunks()
+        got = fields[field] = (col, t.column("df_sum").combine_chunks(),
+                               _length_groups(col))
+    return got
 
 
 def _expansion_rows(index, field: str, terms: List[str], expand: bool,
@@ -351,10 +374,11 @@ def _expansion_rows(index, field: str, terms: List[str], expand: bool,
     read's df partials (summed over generations) saving the lookup's
     own read. A prefix reads ``term_stats`` through
     ``build/files.py scan`` as ``t <= term < succ(t)`` ranges (row
-    groups prune). A fuzzy match reads the field's whole vocabulary
-    the same way and matches it on the driver (:func:`_edit_ball`; a
-    float fuzziness acts as its floor, as ``<= 1.5`` does in Spark).
-    Neither runs a Spark job on a bound warehouse. Regex matches need
+    groups prune). A fuzzy match runs :func:`_edit_ball` on the
+    driver over the field's vocabulary, read once per binding
+    (:func:`_field_vocab`; a float fuzziness acts as its floor, as
+    ``<= 1.5`` does in Spark). Neither runs a Spark job on a bound
+    warehouse. Regex matches need
     the JVM's regex semantics and collect :func:`_query_terms_df` over
     every generation's vocabulary partials in one job. ``None`` past
     RESOLVE_INLINE_CAP (query term, vocabulary row) matches: callers
@@ -376,26 +400,18 @@ def _expansion_rows(index, field: str, terms: List[str], expand: bool,
                for qi, q in enumerate(terms) if term.startswith(q)}
     elif not regex:
         import numpy as np
-        import pyarrow as pa
 
-        t = scan(index, "term_stats", ["term", "df"],
-                 [(("field", "==", field),)])
+        vocab, dfs, groups = _field_vocab(index, field)
         k = math.floor(fuzziness)
-        col = t.column(0).cast(pa.string()).combine_chunks()
-        balls = {q: _edit_ball(col, q, k) for q in set(terms)}
-        n = sum(int(balls[q].sum()) for q in terms)
-        if n >= cap:
-            return None
-        matched = np.zeros(len(col), bool)
-        for ball in balls.values():
-            matched |= ball
-        rows = np.flatnonzero(matched)
-        names = col.take(rows).to_pylist()
-        partial = {}
-        for term, df in zip(names, t.column(1).take(rows).to_pylist()):
-            partial[(field, term)] = partial.get((field, term), 0) + df
+        balls = {q: _edit_ball(groups, q, k) for q in set(terms)}
+        n = sum(balls[q].size for q in terms)
+        rows = np.unique(np.concatenate([np.zeros(0, np.int64),
+                                         *balls.values()]))
+        names = dict(zip(rows.tolist(), vocab.take(rows).to_pylist()))
+        partial = {(field, names[j]): df for j, df in
+                   zip(rows.tolist(), dfs.take(rows).to_pylist())}
         got = {(qi, names[j]) for qi, q in enumerate(terms)
-               for j in np.flatnonzero(balls[q][rows])}
+               for j in balls[q].tolist()}
     else:
         vocab = (index._df_partials if index._df_partials is not None
                  else index.term_stats)

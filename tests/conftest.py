@@ -12,13 +12,6 @@ def spark():
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
         .config("spark.sql.adaptive.enabled", "true")
-        # the suite runs thousands of distinct small plans, each over a
-        # few hundred rows: compiling generated Java for every plan
-        # costs more than running it, so the session evaluates plans
-        # interpreted (results are the same either way; this cut a
-        # query-heavy sample of the suite by about a fifth)
-        .config("spark.sql.codegen.wholeStage", "false")
-        .config("spark.sql.codegen.factoryMode", "NO_CODEGEN")
         .getOrCreate()
     )
     yield spark

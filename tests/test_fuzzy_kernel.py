@@ -1,5 +1,5 @@
-"""The driver's edit-ball kernel (search/scorer.py ``_edit_ball``)
-against Spark's own fuzzy predicate.
+"""The driver's edit-ball kernel (search/scorer.py ``_edit_ball`` over
+``_length_groups``) against Spark's own fuzzy predicate.
 
 A fuzzy query matches the vocabulary terms within ``k`` edits: Spark
 expresses that as ``abs(length(term) - len(q)) <= k AND
@@ -19,7 +19,7 @@ import random
 import pyarrow as pa
 from pyspark.sql import functions as F
 
-from ex_elasticlunr_spark.search.scorer import _edit_ball
+from ex_elasticlunr_spark.search.scorer import _edit_ball, _length_groups
 from tests.oracle.core import levenshtein
 
 # the last two are combining marks (acute, diaeresis)
@@ -64,12 +64,11 @@ def test_edit_ball_equals_spark_levenshtein(spark):
                  & (F.levenshtein(term, F.lit(q)) <= k)).alias(f"c{i}")
                 for i, (q, k) in enumerate(cases)])
             .collect())
-    col = pa.array(vocab)
+    groups = _length_groups(pa.array(vocab))
     nonempty = 0
     for i, (q, k) in enumerate(cases):
         want = {r["term"] for r in rows if r[f"c{i}"]}
-        got = {vocab[j] for j, hit in
-               enumerate(_edit_ball(col, q, math.floor(k))) if hit}
+        got = {vocab[j] for j in _edit_ball(groups, q, math.floor(k))}
         assert got == want, (q, k, sorted(got ^ want))
         assert got == {t for t in vocab if levenshtein(t, q) <= k}, (q, k)
         nonempty += bool(got)

@@ -1,13 +1,15 @@
 """The exhaustive scorer's driver-side vocabulary resolve
 (scorer._vocab_resolve_inline): the inline literal relation must carry
 the identical (qt_idx, qt, term, df, idf) rows the vocabulary equi-join
-produces, absent terms must be marker-cached within a binding, and the
-identity-keyed memo must reset when term_stats is reassigned."""
+produces, absent terms must be marker-cached within a binding, the identity-keyed
+memo must reset when term_stats is reassigned, and a fuzzy expansion
+reads the field's vocabulary once per binding."""
 
 import pytest
 
 from ex_elasticlunr_spark import Index
 from ex_elasticlunr_spark.search.scorer import (
+    _expansion_rows,
     _fstats_local,
     _query_terms_df,
     _vocab_resolve_inline,
@@ -68,6 +70,32 @@ def test_identity_rebind_resets_cache(idx):
         assert ("text", "alpha") not in vc[1]  # old binding's entries gone
     finally:
         idx.term_stats = old
+        idx.__dict__.pop("_vocab_local_cache", None)
+
+
+def test_fuzzy_vocabulary_read_once_per_binding(idx):
+    # a fuzzy expansion reads the field's vocabulary once per binding:
+    # the second expansion runs no Spark job, and a rebind drops it
+    idx.__dict__.pop("_vocab_local_cache", None)
+    sc = idx.postings.sparkSession.sparkContext
+    st = sc._jsc.sc().statusTracker()
+    try:
+        rows = _expansion_rows(idx, "text", ["alpa"], False, 1, False)
+        assert [(r[0], r[2], r[3]) for r in rows] == [(0, "alpha", 3)]
+        assert "text" in idx._vocab_local_cache[2]
+        before = list(st.getJobIdsForGroup(None))
+        rows = _expansion_rows(idx, "text", ["delt", "bata"], False, 1,
+                               False)
+        assert [(r[0], r[2]) for r in rows] == [(0, "delta"), (1, "beta")]
+        assert list(st.getJobIdsForGroup(None)) == before
+        old = idx.term_stats
+        try:
+            idx.term_stats = old.where("term != 'alpha'")
+            assert _expansion_rows(idx, "text", ["alpa"], False, 1,
+                                   False) == []
+        finally:
+            idx.term_stats = old
+    finally:
         idx.__dict__.pop("_vocab_local_cache", None)
 
 
